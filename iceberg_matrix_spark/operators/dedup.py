@@ -444,22 +444,6 @@ def hashed_shingle_sets(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-) -> DataFrame:
-    """(doc_id, signature array<long>[_NUM_HASHES]).
-
-    Base hash = pmod(xxhash64(shingle), 2^31); permutation i is
-    (a_i·h + b_i) mod (2^61−1). Products stay < 2^62, so the arithmetic
-    can't overflow ANSI bigint. Signatures are pure array expressions —
-    K ``array_min(transform(...))`` passes per row inside whole-stage
-    codegen — so the whole signature stage is SHUFFLE-FREE (the earlier
-    formulation exploded shingles and re-grouped by doc, shuffling the
-    entire corpus shingle set just to take per-doc minimums).
-    """
-    return _minhash_from_hashed(hashed_shingle_sets(df, id_col, text_col, k))
-
-
 def _perm_lambda(a: int, b: int):
     # closure factory: PySpark infers transform's lambda arity from the
     # Python signature, so captured constants must NOT ride as defaults
@@ -467,6 +451,15 @@ def _perm_lambda(a: int, b: int):
 
 
 def _minhash_from_hashed(sets_h: DataFrame) -> DataFrame:
+    """(doc_id, signature array<long>[_NUM_HASHES]) from hashed shingle
+    sets.
+
+    Base hash = pmod(xxhash64(shingle), 2^31); permutation i is
+    (a_i·h + b_i) mod (2^61−1). Products stay < 2^62, so the arithmetic
+    can't overflow ANSI bigint. Signatures are pure array expressions —
+    K ``array_min(transform(...))`` passes per row inside whole-stage
+    codegen — so the whole signature stage is SHUFFLE-FREE.
+    """
     base = sets_h.withColumn(
         "__base", F.transform("sh_hashed", lambda h: F.pmod(h, F.lit(1 << 31)))
     )

@@ -34,6 +34,7 @@ from iceberg_matrix_spark.functions.lits import const_long_array
 from iceberg_matrix_spark.operators.spans import _SPANS_SQL
 from iceberg_matrix_spark.queries.registry import TOKS_SQL, register
 from iceberg_matrix_spark.sources.testdata import load_table
+from iceberg_matrix_spark.storage import cached
 
 # ---------------------------------------------------------------------------
 # Deterministic hash-stratified sampling
@@ -1121,28 +1122,17 @@ def corpus_report_from_state(state: DataFrame) -> DataFrame:
     )
 
 
-# persisted report states per corpus (parquet, like the IVF-PQ index:
-# persist-and-rescan is the production shape AND keeps the fold's plan
-# free of the corpus scan)
-_REPORT_STATE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def corpus_report_state_cached(corpus: DataFrame, corpus_key: str) -> DataFrame:
-    from iceberg_matrix_spark.operators.scale import df_content_key  # noqa: PLC0415
+    """The persisted report state of ``corpus`` (parquet, like the IVF-PQ
+    index: persist-and-rescan is the production shape AND keeps the
+    fold's plan free of the corpus scan)."""
 
-    # key carries a content signature of the corpus frame (ADVICE r9):
-    # a reused corpus_key with different data misses instead of serving
-    # state built from the old corpus
-    key = (corpus_key, df_content_key(corpus))
-    if key not in _REPORT_STATE_CACHE:
-        from iceberg_matrix_spark.storage import state_dir  # noqa: PLC0415
-
-        path = state_dir("report-state-") + "/state.parquet"
+    def build(d: str) -> DataFrame:
+        path = d + "/state.parquet"
         corpus_report_state(corpus).write.parquet(path)
-        _REPORT_STATE_CACHE[key] = (
-            corpus.sparkSession.read.parquet(path)
-        )
-    return _REPORT_STATE_CACHE[key]
+        return corpus.sparkSession.read.parquet(path)
+
+    return cached("report-state", (corpus_key,), [corpus], build)
 
 
 # the from-scratch report oracle over the FULL documents table — shared
@@ -1222,17 +1212,6 @@ def retract_report_state(state: DataFrame, deleted_state: DataFrame) -> DataFram
 # counter rows fit an executor (256-4096 at 100 TB) — per-fold cost is
 # ∝ batch + the state rows in TOUCHED buckets, never the full state.
 _STATE_BUCKETS = 16
-
-
-def with_state_bucket(state: DataFrame, n_buckets: int = _STATE_BUCKETS) -> DataFrame:
-    """Attach the fingerprint-hash bucket column the partitioned report
-    state layout is keyed by. Bucket derives from ``__fp`` ALONE (not
-    lang / source) so every counter row of one fingerprint — and
-    therefore the corpus-wide dup-share window — lives in exactly one
-    bucket."""
-    return state.withColumn(
-        "__bkt", F.pmod(F.xxhash64("__fp"), F.lit(n_buckets)).cast("int")
-    )
 
 
 class BucketedCounterState:
@@ -1607,14 +1586,11 @@ def q_decontaminate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Table-backed report state (round 11, VERDICT r10 #8 stretch): the fold
-# state moves from hand-numbered parquet generations into the IceLite
-# table layer the repo already certifies — folds and retractions become
-# MERGE commits, generations become snapshots, and the state becomes
-# time-travelable for free.
+# Table-backed report state: the fold state moves from hand-numbered
+# parquet generations into the IceLite table layer the repo already
+# certifies — folds and retractions become MERGE commits, generations
+# become snapshots, and the state becomes time-travelable for free.
 # ---------------------------------------------------------------------------
-
-_REPORT_TABLE_CACHE: dict[tuple, tuple] = {}
 
 _REPORT_MERGE_ON = (
     "t.__fp = s.__fp AND t.lang = s.lang AND t.source = s.source"
@@ -1635,16 +1611,15 @@ def report_state_table_lifecycle(spark: SparkSession, sf_dir: str):
     at-least-once dedup — is what the table layer's snapshots, atomic
     commits, and summaries already provide; retraction stops being a
     bespoke negative-fold file dance and becomes one MERGE statement
-    (the VERDICT r10 stretch's exact point)."""
-    key = ("report-table", sf_dir)
-    if key not in _REPORT_TABLE_CACHE:
-        from iceberg_matrix_spark.storage import state_dir  # noqa: PLC0415
-        from iceberg_matrix_spark.tables.catalog import (  # noqa: PLC0415
-            IceLiteCatalog,
-        )
+    (the point of moving the state into a table)."""
+    from iceberg_matrix_spark.tables.catalog import (  # noqa: PLC0415
+        IceLiteCatalog,
+    )
 
-        cat = IceLiteCatalog(spark, state_dir("report-wh-"))
-        docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents")
+
+    def build(d: str) -> tuple:
+        cat = IceLiteCatalog(spark, d)
         corpus = docs.filter(F.col("doc_id") % 10 != 0)
         batch = docs.filter(F.col("doc_id") % 10 == 0)
         t = cat.create_table(
@@ -1683,8 +1658,9 @@ def report_state_table_lifecycle(spark: SparkSession, sf_dir: str):
             ],
             insert_when_not_matched=False,
         )
-        _REPORT_TABLE_CACHE[key] = (t.refresh(), pre_retract)
-    return _REPORT_TABLE_CACHE[key]
+        return t.refresh(), pre_retract
+
+    return cached("report-table", (sf_dir,), [docs], build)
 
 
 _STATE_COLS = ["__fp", "lang", "source", "n", "nt", "nq"]

@@ -123,50 +123,6 @@ def gather_futures(*futures):
     return results
 
 
-def df_content_key(df: DataFrame) -> str:
-    """Cheap content signature of a DataFrame for persisted-index cache
-    keys (ADVICE r9): a caller-supplied corpus_key alone can be reused
-    with DIFFERENT data and silently serve stale state — the quantizer
-    caches fixed this with a codebook digest (_books_digest); file-backed
-    corpora get the same guarantee from (sorted input files) + the
-    analyzed plan with exprIds stripped (two loads of the same
-    files/filters normalize identically, so legitimate reuse still
-    hits). No Spark job for file-backed frames — inputFiles() is a
-    driver-side listing.
-
-    NON-file-backed frames (LocalRelation / createDataFrame — ADVICE
-    r10): inputFiles() is empty and the analyzed-plan string omits (and
-    can truncate) row data, so the plan alone gives NO content
-    guarantee — two different in-memory corpora would collide. For that
-    case fall back to a real content digest: one small Spark job
-    aggregating an order-insensitive sum of per-row xxhash64 plus a row
-    count. Costs one scan of the frame — in-memory frames are small by
-    construction, and a wrong cache hit serving stale persisted state
-    is the exact failure this key exists to prevent."""
-    import hashlib  # noqa: PLC0415
-
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:
-        files = []
-    plan = re.sub(r"#\d+", "", df._jdf.queryExecution().analyzed().toString())
-    h = hashlib.sha256()
-    for f in files:
-        h.update(f.encode())
-    h.update(plan.encode())
-    if not files:
-        row = df.select(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.xxhash64(F.struct(*[F.col(c) for c in df.columns])).cast(
-                    "decimal(38,0)"
-                )
-            ).alias("s"),
-        ).collect()[0]
-        h.update(f"rows={row['n']};sum={row['s']}".encode())
-    return h.hexdigest()[:16]
-
-
 def persisted_small_hint(
     df: DataFrame, prefix: str, cutoff_bytes: int = 64 * 1024 * 1024
 ) -> DataFrame:

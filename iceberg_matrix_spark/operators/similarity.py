@@ -31,6 +31,7 @@ from iceberg_matrix_spark.functions.lits import (
 from iceberg_matrix_spark.functions.vectors import cosine, dot, l2_norm
 from iceberg_matrix_spark.queries.registry import register
 from iceberg_matrix_spark.sources.testdata import load_table
+from iceberg_matrix_spark.storage import cached
 
 _DIM = 64
 _N_PLANES = 32
@@ -772,29 +773,17 @@ def ivf_build_centroids(
     return centroids
 
 
-# Centroid cache: the coarse quantizer IS the index — build it once per
-# (corpus, params), not per query call (k-means re-ran 2 Lloyd collects on
-# every q_ann_ivf_topk invocation in round 1). Keyed by a caller-supplied
-# corpus key (e.g. the sf_dir path); tests assert one build per key.
-_IVF_CENTROID_CACHE: dict[tuple, list[list[float]]] = {}
-IVF_BUILD_COUNT = {"n": 0}
-
-
 def ivf_centroids_cached(
-    corpus: DataFrame,
-    corpus_key: str,
-    k: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, corpus_key: str, k: int = 16
 ) -> list[list[float]]:
-    key = (corpus_key, k, iters, id_col, vec_col)
-    if key not in _IVF_CENTROID_CACHE:
-        IVF_BUILD_COUNT["n"] += 1
-        _IVF_CENTROID_CACHE[key] = ivf_build_centroids(
-            corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col
-        )
-    return _IVF_CENTROID_CACHE[key]
+    """The coarse quantizer IS the index: build it once per (corpus,
+    params), not per query call."""
+    return cached(
+        "ivf-kmeans",
+        (corpus_key, k),
+        [corpus],
+        lambda _: ivf_build_centroids(corpus, k=k),
+    )
 
 
 def ivf_seed_centroids(
@@ -817,19 +806,11 @@ def ivf_seed_centroids(
 
 
 def ivf_seed_centroids_cached(
-    corpus: DataFrame,
-    corpus_key: str,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, corpus_key: str
 ) -> list[list[float]]:
-    key = ("seed", corpus_key, k, id_col, vec_col)
-    if key not in _IVF_CENTROID_CACHE:
-        IVF_BUILD_COUNT["n"] += 1
-        _IVF_CENTROID_CACHE[key] = ivf_seed_centroids(
-            corpus, k=k, id_col=id_col, vec_col=vec_col
-        )
-    return _IVF_CENTROID_CACHE[key]
+    return cached(
+        "ivf-seed", (corpus_key,), [corpus], lambda _: ivf_seed_centroids(corpus)
+    )
 
 
 def ann_ivf_topk(
@@ -1353,13 +1334,11 @@ def q_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _semantic_scoped_setup(spark: SparkSession, sf_dir: str):
     """Bench split: the coarse-quantizer build is INDEX work a real
-    pipeline runs once per corpus — measure it as setup so the headline
-    reflects the amortized per-query cost (same honesty split as the
-    incremental family's signature index)."""
+    pipeline runs once per corpus — measure it as setup, fresh each run
+    (no cache), so the headline reflects the amortized per-query cost
+    (same honesty split as the incremental family's signature index)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    _IVF_CENTROID_CACHE.pop(("seed", sf_dir, 16, "vec_id", "embedding"), None)
-    cents = ivf_seed_centroids_cached(emb, sf_dir)
-    return (emb, cents)
+    return (emb, ivf_seed_centroids(emb))
 
 
 def _semantic_scoped_exec(handle) -> DataFrame:
@@ -1792,15 +1771,12 @@ def _pq_dist2_sql(arr_expr: str, w_expr: str, j_expr: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-_PQ_CODEBOOK_CACHE: dict[str, list[list[list[float]]]] = {}
-
-
 def pq_seed_codebooks_cached(
     corpus: DataFrame, corpus_key: str
 ) -> list[list[list[float]]]:
-    if corpus_key not in _PQ_CODEBOOK_CACHE:
-        _PQ_CODEBOOK_CACHE[corpus_key] = pq_seed_codebooks(corpus)
-    return _PQ_CODEBOOK_CACHE[corpus_key]
+    return cached(
+        "pq-seed", (corpus_key,), [corpus], lambda _: pq_seed_codebooks(corpus)
+    )
 
 
 @register(
@@ -2003,25 +1979,12 @@ def ann_ivfpq_rerank(
 
 _IVFPQ_NPROBE = 4
 
-# Persisted (vec_id, cid, codes) IVF-PQ indexes per (corpus, quantizer
-# generation) — written to parquet once and read back, exactly what a
-# production ingest does. Persist-and-rescan (NOT cache/localCheckpoint)
-# is load-bearing: LogicalRDD-style truncation preserves the encode
-# Project's alias constraints, whose defining expressions reference the
-# now-pruned embedding column — Catalyst's constraint propagation then
-# infers a join filter carrying that dangling attribute onto the probe
-# side (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at execution, observed
-# round 8, plan-state-dependent). A fresh file scan carries no
-# constraints, so nothing can dangle.
-_IVFPQ_INDEX_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _books_digest(*mats) -> str:
     """Content digest of centroid/codebook matrices for cache keys:
     a reused (corpus_key, tag) with DIFFERENT quantizers must miss the
-    cache, not silently serve an index built from the old generation
-    (ADVICE r8). repr() of Python floats round-trips exactly, so equal
-    digests ⇔ equal matrices."""
+    cache, not silently serve an index built from the old generation.
+    repr() of Python floats round-trips exactly, so equal digests ⇔
+    equal matrices."""
     import hashlib  # noqa: PLC0415
 
     h = hashlib.sha256()
@@ -2039,20 +2002,27 @@ def ivfpq_index_cached(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    key = ("ivfpq", corpus_key, tag, _books_digest(centroids, codebooks))
-    if key not in _IVFPQ_INDEX_CACHE:
-        from iceberg_matrix_spark.storage import state_dir  # noqa: PLC0415
+    """The persisted (vec_id, cid, codes) IVF-PQ index of ``corpus``
+    under one quantizer generation — written to parquet once and read
+    back, exactly what a production ingest does. Persist-and-rescan
+    (NOT cache/localCheckpoint) is load-bearing: LogicalRDD-style
+    truncation preserves the encode Project's alias constraints, whose
+    defining expressions reference the now-pruned embedding column —
+    Catalyst's constraint propagation then infers a join filter carrying
+    that dangling attribute onto the probe side
+    (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND at execution,
+    plan-state-dependent). A fresh file scan carries no constraints, so
+    nothing can dangle."""
+    from iceberg_matrix_spark.operators.scale import (  # noqa: PLC0415
+        ensure_compute_parallelism,
+    )
 
-        path = state_dir("ivfpq-index-") + "/index.parquet"
+    def build(d: str) -> DataFrame:
+        path = d + "/index.parquet"
         # parallelize the encode AND the index layout: a single-file
         # corpus otherwise encodes on ONE task and writes ONE parquet
-        # file, so every later ADC scan of the index is also single-task
-        # (round 11: q_ann_ivfpq_rerank measured 10 single-task stages);
+        # file, so every later ADC scan of the index is also single-task;
         # round-robin no-op at scale, per-row projection unaffected
-        from iceberg_matrix_spark.operators.scale import (  # noqa: PLC0415
-            ensure_compute_parallelism,
-        )
-
         ensure_compute_parallelism(
             corpus.select(F.col(id_col), F.col(vec_col))
         ).select(
@@ -2062,8 +2032,14 @@ def ivfpq_index_cached(
             ),
             _pq_codes_expr(vec_col, codebooks).alias("codes"),
         ).write.parquet(path)
-        _IVFPQ_INDEX_CACHE[key] = corpus.sparkSession.read.parquet(path)
-    return _IVFPQ_INDEX_CACHE[key]
+        return corpus.sparkSession.read.parquet(path)
+
+    return cached(
+        "ivfpq-index",
+        (corpus_key, tag, id_col, vec_col, _books_digest(centroids, codebooks)),
+        [corpus],
+        build,
+    )
 
 
 @register(
@@ -2426,20 +2402,15 @@ def _train_oracle_ctes(
     return ",\n    ".join(ctes), f"{P}b{iters}"
 
 
-_TRAINED_BOOK_CACHE: dict[tuple, list[list[list[float]]]] = {}
-
-
 def pq_trained_codebooks_cached(
     corpus: DataFrame, corpus_key: str
 ) -> list[list[list[float]]]:
-    # seeds are re-derived (one k-row collect) so the key carries their
-    # digest: a corpus_key reused for a different corpus misses instead
-    # of returning books trained from the OLD seeds (ADVICE r8)
-    seeds = pq_seed_codebooks(corpus)
-    key = ("pq", corpus_key, _TRAIN_ITERS, _books_digest(seeds))
-    if key not in _TRAINED_BOOK_CACHE:
-        _TRAINED_BOOK_CACHE[key] = train_codebooks_fp(corpus, seeds)
-    return _TRAINED_BOOK_CACHE[key]
+    return cached(
+        "pq-trained",
+        (corpus_key, _TRAIN_ITERS),
+        [corpus],
+        lambda _: train_codebooks_fp(corpus, pq_seed_codebooks(corpus)),
+    )
 
 
 def ivf_trained_centroids_cached(
@@ -2447,13 +2418,13 @@ def ivf_trained_centroids_cached(
 ) -> list[list[float]]:
     """Trained coarse centroids: the m=1 instance of the PQ trainer —
     one 'subquantizer' spanning all dims, seeded like
-    :func:`ivf_seed_centroids`. Cache key carries the seed digest, same
-    rationale as :func:`pq_trained_codebooks_cached`."""
-    seeds = [ivf_seed_centroids(corpus, k=k)]
-    key = ("ivf", corpus_key, k, _TRAIN_ITERS, _books_digest(seeds))
-    if key not in _TRAINED_BOOK_CACHE:
-        _TRAINED_BOOK_CACHE[key] = train_codebooks_fp(corpus, seeds)
-    return _TRAINED_BOOK_CACHE[key][0]
+    :func:`ivf_seed_centroids`."""
+    return cached(
+        "ivf-trained",
+        (corpus_key, k, _TRAIN_ITERS),
+        [corpus],
+        lambda _: train_codebooks_fp(corpus, [ivf_seed_centroids(corpus, k=k)])[0],
+    )
 
 
 def _pq_adc_tail_sql(bfin: str) -> str:
@@ -2515,25 +2486,6 @@ def _sampled_pq_oracle() -> str:
     """
 
 
-def pq_sampled_codebooks_cached(
-    corpus: DataFrame, corpus_key: str
-) -> list[list[list[float]]]:
-    # seeds from the FULL corpus, refinement on the sample — must stay
-    # in lockstep with train_codebooks_sampled (the digest keys on the
-    # same full-corpus seeds)
-    seeds = pq_seed_codebooks(corpus)
-    key = (
-        "pq-sampled",
-        corpus_key,
-        _TRAIN_ITERS,
-        _TRAIN_SAMPLE_MOD,
-        _books_digest(seeds),
-    )
-    if key not in _TRAINED_BOOK_CACHE:
-        _TRAINED_BOOK_CACHE[key] = train_codebooks_sampled(corpus)
-    return _TRAINED_BOOK_CACHE[key]
-
-
 def _pq_sampled_setup(spark: SparkSession, sf_dir: str):
     """Bench split: SAMPLED codebook training — the deployment build
     path, iters scans of ~corpus/3 instead of the full corpus. Fresh
@@ -2560,7 +2512,12 @@ def q_ann_pq_trained_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same BIGINT hash predicate and loop-unrolls the same Lloyd
     CTEs over it."""
     emb = load_table(spark, sf_dir, "embeddings")
-    books = pq_sampled_codebooks_cached(emb, sf_dir)
+    books = cached(
+        "pq-sampled",
+        (sf_dir, _TRAIN_ITERS, _TRAIN_SAMPLE_MOD),
+        [emb],
+        lambda _: train_codebooks_sampled(emb),
+    )
     return ann_pq_topk(emb, _query_vectors(spark, sf_dir), books, k=10)
 
 
@@ -3663,10 +3620,8 @@ def q_decontaminate_semantic_scoped(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 # ---------------------------------------------------------------------------
-# Incremental IVF-PQ index maintenance (round 10, VERDICT r9 #7)
+# Incremental IVF-PQ index maintenance
 # ---------------------------------------------------------------------------
-
-_INC_INDEX_CACHE: dict[tuple, str] = {}  # cache key -> index parquet path
 
 
 def ivfpq_encode(
@@ -3696,7 +3651,7 @@ def ivfpq_index_with_ingest(
     n_ingests: int = 1,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Incremental index maintenance (VERDICT r9 #7): the corpus index
+    """Incremental index maintenance: the corpus index
     is encoded and persisted ONCE; an arriving batch is encoded under
     the FROZEN quantizer generation and APPENDED to the same index
     parquet — the ingest never re-encodes the corpus (the
@@ -3705,13 +3660,13 @@ def ivfpq_index_with_ingest(
     fixed quantizer: encode(corpus ∪ batch) ≡ encode(corpus) ∪
     encode(batch), which q_ann_index_incremental's oracle certifies by
     rebuilding from scratch. Cache key carries the quantizer digest —
-    a new generation misses and re-ingests (the _books_digest rule).
-    ``n_ingests`` splits the batch into that many sequential appends
-    (disjoint id slices) — the multi-ingest file history the compaction
-    maintenance pass (ivfpq_index_compact) exists to clean up. The
-    cache key carries content signatures of BOTH frames (ADVICE r10): a
-    changed batch under a reused corpus_key with unchanged quantizers
-    must miss, not serve the stale appended index."""
+    a new generation misses and re-ingests (the _books_digest rule) —
+    and the content keys of BOTH frames: a changed batch under a reused
+    corpus_key with unchanged quantizers must miss, not serve the stale
+    appended index. ``n_ingests`` splits the batch into that many
+    sequential appends (disjoint id slices) — the multi-ingest file
+    history the compaction maintenance pass (ivfpq_index_compact)
+    exists to clean up."""
     return corpus.sparkSession.read.parquet(
         ivfpq_index_ingest_path(
             corpus, batch, corpus_key, centroids, codebooks, n_ingests, id_col
@@ -3730,23 +3685,12 @@ def ivfpq_index_ingest_path(
 ) -> str:
     """Path-returning core of :func:`ivfpq_index_with_ingest` — the
     retraction and rotation lifecycle passes need the index's physical
-    location, not just a frame over it."""
-    from iceberg_matrix_spark.operators.scale import (  # noqa: PLC0415
-        df_content_key,
-    )
+    location, not just a frame over it. The path lies inside the cache
+    entry's directory, so siblings a lifecycle pass writes next to it
+    (``<path>.deletes``) are deleted with the entry."""
 
-    key = (
-        "ivfpq-ingest",
-        corpus_key,
-        df_content_key(corpus),
-        df_content_key(batch),
-        n_ingests,
-        _books_digest(centroids, codebooks),
-    )
-    if key not in _INC_INDEX_CACHE:
-        from iceberg_matrix_spark.storage import state_dir  # noqa: PLC0415
-
-        path = state_dir("ivfpq-inc-index-") + "/index.parquet"
+    def build(d: str) -> str:
+        path = d + "/index.parquet"
         ivfpq_encode(corpus, centroids, codebooks).write.parquet(path)
         # the per-ingest step: batch-only encode, parquet append — one
         # append per arriving slice. Hash-mod slicing (not id % k) so
@@ -3764,8 +3708,14 @@ def ivfpq_index_ingest_path(
             ivfpq_encode(slice_i, centroids, codebooks).write.mode(
                 "append"
             ).parquet(path)
-        _INC_INDEX_CACHE[key] = path
-    return _INC_INDEX_CACHE[key]
+        return path
+
+    return cached(
+        "ivfpq-ingest",
+        (corpus_key, n_ingests, id_col, _books_digest(centroids, codebooks)),
+        [corpus, batch],
+        build,
+    )
 
 
 def _index_incremental_oracle() -> str:
@@ -3843,7 +3793,7 @@ def q_ann_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ivfpq_index_compact(
-    index: DataFrame, n_files: int = 4
+    index: DataFrame, n_files: int = 4, path: str | None = None
 ) -> tuple[DataFrame, str]:
     """Index MAINTENANCE for the append-based ingest path: after many
     batch appends the index parquet accumulates one small file per
@@ -3859,11 +3809,12 @@ def ivfpq_index_compact(
     tables/maintenance.py's z-order rewrite, specialized to the ANN
     index's one-dimensional cluster key.
 
-    Returns (compacted index DataFrame reading the new generation, its
-    path)."""
+    Writes to ``path`` when given (a cache entry that outlives scratch
+    generations), else to a fresh scratch generation. Returns
+    (compacted index DataFrame reading the new generation, its path)."""
     from iceberg_matrix_spark.storage import scratch_dir  # noqa: PLC0415
 
-    path = scratch_dir("ivfpq-compact-") + "/index.parquet"
+    path = path or scratch_dir("ivfpq-compact-") + "/index.parquet"
     (
         index.repartitionByRange(n_files, F.col("cid"))
         .sortWithinPartitions("cid", "vec_id")
@@ -3871,9 +3822,6 @@ def ivfpq_index_compact(
     )
     spark = index.sparkSession
     return spark.read.parquet(path), path
-
-
-_COMPACT_CACHE: dict[tuple, DataFrame] = {}
 
 
 @register("q_ann_index_compact", oracle=_index_incremental_oracle())
@@ -3898,10 +3846,13 @@ def q_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     appended = ivfpq_index_with_ingest(
         corpus, batch, key, cents, books, n_ingests=3
     )
-    ckey = ("compact", key, _books_digest(cents, books))
-    if ckey not in _COMPACT_CACHE:
-        _COMPACT_CACHE[ckey] = ivfpq_index_compact(appended, n_files=2)[0]
-    return _COMPACT_CACHE[ckey].select(
+    compacted = cached(
+        "ivfpq-compact",
+        (key,),
+        [appended],
+        lambda d: ivfpq_index_compact(appended, 2, d + "/index.parquet")[0],
+    )
+    return compacted.select(
         "vec_id",
         "cid",
         F.expr("aggregate(reverse(codes), 0L, (acc, c) -> acc * 16 + c)")
@@ -4011,9 +3962,6 @@ def q_ann_index_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROTATE_CACHE: dict[tuple, tuple[str, list[list[str]]]] = {}
-
-
 def ivfpq_index_rotation(
     corpus: DataFrame,
     corpus_key: str,
@@ -4024,7 +3972,7 @@ def ivfpq_index_rotation(
     n_slices: int = 3,
     id_col: str = "vec_id",
 ) -> tuple[str, list[list[str]]]:
-    """STAGED quantizer-generation rotation (VERDICT r10 #4): the
+    """STAGED quantizer-generation rotation: the
     frozen-quantizer contract the append path relies on eventually
     meets drift, and the retrain must not stop ingest or re-encode the
     corpus in one shot. Layout: the index root holds ``gen=0`` (the
@@ -4045,22 +3993,8 @@ def ivfpq_index_rotation(
     pin per-batch row counts."""
     import os  # noqa: PLC0415
 
-    from iceberg_matrix_spark.operators.scale import (  # noqa: PLC0415
-        df_content_key,
-    )
-
-    key = (
-        "ivfpq-rotate",
-        corpus_key,
-        df_content_key(corpus),
-        n_slices,
-        _books_digest(old_centroids, old_codebooks),
-        _books_digest(new_centroids, new_codebooks),
-    )
-    if key not in _ROTATE_CACHE:
-        from iceberg_matrix_spark.storage import state_dir  # noqa: PLC0415
-
-        root = state_dir("ivfpq-rotate-") + "/index"
+    def build(d: str) -> tuple[str, list[list[str]]]:
+        root = d + "/index"
         gen0 = os.path.join(root, "gen=0")
         ivfpq_encode(corpus, old_centroids, old_codebooks, id_col).write.parquet(
             gen0
@@ -4084,8 +4018,20 @@ def ivfpq_index_rotation(
                     if f.endswith(".parquet")
                 )
             )
-        _ROTATE_CACHE[key] = (root, slices)
-    return _ROTATE_CACHE[key]
+        return root, slices
+
+    return cached(
+        "ivfpq-rotate",
+        (
+            corpus_key,
+            n_slices,
+            id_col,
+            _books_digest(old_centroids, old_codebooks),
+            _books_digest(new_centroids, new_codebooks),
+        ),
+        [corpus],
+        build,
+    )
 
 
 def ivfpq_rotation_view(

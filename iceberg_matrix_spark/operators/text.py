@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from iceberg_matrix_spark.functions.text import md5_fingerprint, token_count, tokens
 from iceberg_matrix_spark.queries.registry import TOKS_SQL, register
 from iceberg_matrix_spark.sources.testdata import load_table
+from iceberg_matrix_spark.storage import cached
 
 # Language marker words (tiny n-gram-style heuristic; deliberately simple —
 # the operator shape matters, not lexicon quality).
@@ -1036,34 +1037,24 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return chunk_dedup_summary(docs)
 
 
-# persisted chunk-fingerprint indexes per corpus (parquet — the
-# 16-byte-row table an ingest pipeline maintains across batches)
-_CHUNK_INDEX_CACHE: dict[tuple, DataFrame] = {}
-
-
 def chunk_fingerprint_index_cached(
     corpus_docs: DataFrame, corpus_key: str
 ) -> DataFrame:
-    from iceberg_matrix_spark.operators.scale import df_content_key  # noqa: PLC0415
+    """The persisted chunk-fingerprint index of ``corpus_docs`` (parquet
+    — the 16-byte-row table an ingest pipeline maintains across
+    batches)."""
 
-    # key carries a content signature of the corpus frame (ADVICE r9):
-    # a reused corpus_key with different data misses instead of serving
-    # the old corpus's fingerprint index
-    key = (corpus_key, df_content_key(corpus_docs))
-    if key not in _CHUNK_INDEX_CACHE:
-        from iceberg_matrix_spark.storage import state_dir  # noqa: PLC0415
-
-        path = state_dir("chunk-fp-index-") + "/index.parquet"
+    def build(d: str) -> DataFrame:
+        path = d + "/index.parquet"
         (
             chunks_with_ckey(corpus_docs)
             .select(md5_fingerprint("chunk_text").alias("fingerprint"))
             .distinct()
             .write.parquet(path)
         )
-        _CHUNK_INDEX_CACHE[key] = (
-            corpus_docs.sparkSession.read.parquet(path)
-        )
-    return _CHUNK_INDEX_CACHE[key]
+        return corpus_docs.sparkSession.read.parquet(path)
+
+    return cached("chunk-fp-index", (corpus_key,), [corpus_docs], build)
 
 
 @register(
@@ -1151,9 +1142,6 @@ def chunk_fingerprint_counts(docs: DataFrame) -> DataFrame:
     )
 
 
-_CHUNK_STORE_CACHE: dict[tuple, object] = {}
-
-
 def chunk_fingerprint_store_cached(
     corpus_docs: DataFrame, corpus_key: str
 ):
@@ -1161,29 +1149,27 @@ def chunk_fingerprint_store_cached(
     held in a :class:`~iceberg_matrix_spark.operators.pipeline.
     BucketedCounterState` (fingerprint-hash bucketed parquet) so later
     ingest folds and retractions touch only their buckets — the same
-    O(batch) lifecycle the report state got this round. The corpus
-    summary is folded once as batch 0."""
+    O(batch) lifecycle the report state has. The corpus summary is
+    folded once as batch 0. Every caller of one ``corpus_key`` gets the
+    same mutable state, so a caller that folds or retracts uses a key of
+    its own."""
     from iceberg_matrix_spark.operators.pipeline import (  # noqa: PLC0415
         BucketedCounterState,
     )
-    from iceberg_matrix_spark.operators.scale import (  # noqa: PLC0415
-        df_content_key,
-    )
-    from iceberg_matrix_spark.storage import state_dir  # noqa: PLC0415
 
-    key = (corpus_key, df_content_key(corpus_docs))
-    if key not in _CHUNK_STORE_CACHE:
+    def build(d: str) -> BucketedCounterState:
         counts = chunk_fingerprint_counts(corpus_docs)
         store = BucketedCounterState(
             corpus_docs.sparkSession,
-            state_dir("chunk-fp-store-"),
+            d,
             template=counts.limit(0),
             key_cols=["fingerprint"],
             counter_cols=["n"],
         )
         store.fold(counts, batch_id=0)
-        _CHUNK_STORE_CACHE[key] = store
-    return _CHUNK_STORE_CACHE[key]
+        return store
+
+    return cached("chunk-fp-store", (corpus_key,), [corpus_docs], build)
 
 
 @register(

@@ -30,13 +30,6 @@ TABLES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.1"
-
-
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, normalizing types.
 

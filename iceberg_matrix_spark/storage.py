@@ -1,24 +1,23 @@
-"""Injectable storage root for persisted intermediates (VERDICT r11 #2).
+"""Session storage: the injectable root for persisted intermediates and
+the session cache for everything operators build once and reuse.
 
 Operators that materialize intermediate datasets — shingle-set
 projections, join-strategy frames, ANN/chunk index generations, report
-state, IceLite scratch warehouses — allocate their directories here
-instead of calling ``tempfile.mkdtemp`` directly. That fixes two things
-the per-call mkdtemp pattern got wrong:
+state, IceLite scratch warehouses — get their directories here instead
+of calling ``tempfile.mkdtemp`` directly. That fixes two things the
+per-call mkdtemp pattern got wrong:
 
 1. **Cluster readability.** A dataset written to a driver-local temp
-   path is unreadable by executors on any other node. The root is now
+   path is unreadable by executors on any other node. The root is
    injectable (``IMX_STORAGE_ROOT`` env var or :func:`set_storage_root`)
    so a multi-node deployment points it at shared storage (NFS mount,
-   fuse-mounted object store); the single-machine default stays the
-   local temp directory, which keeps local mode and the bench byte-for-
-   byte identical to the old behavior.
-2. **Reaping.** Per-call dirs were never deleted within a session, so a
-   long-lived ingest grew scratch space without bound. Scratch dirs are
-   now generation-managed per prefix, and the whole session directory is
-   removed at interpreter exit.
+   fuse-mounted object store); the single-machine default is the local
+   temp directory.
+2. **Reaping.** Every directory has an owner that deletes it: the
+   scratch generation counter, a cache entry, or the interpreter-exit
+   sweep of the whole session directory.
 
-Two allocation flavors:
+Two lifetimes:
 
 - :func:`scratch_dir` — GENERATION-MANAGED. Keeps the most recent
   ``IMX_SCRATCH_KEEP`` (default 2) directories per prefix and deletes
@@ -26,13 +25,19 @@ Two allocation flavors:
   readable until the same prefix has been allocated ``keep`` more times
   — callers hold at most the current and the previous generation (the
   bench's min-of-N loop and incremental operators' old/new comparisons
-  both fit; anything longer-lived belongs in ``state_dir``).
-- :func:`state_dir` — caller-owned lifetime, no generation reaping.
-  For incremental-operator STATE whose lifetime is tied to a
-  content-keyed cache entry; reclaimed only by the session-exit sweep.
+  both fit; anything longer-lived belongs in the cache).
+- :func:`cached` — ONE ENTRY PER KEY PER SPARK SESSION. Indexes,
+  quantizer codebooks and incremental-operator state are built at most
+  once per (kind, Spark ``applicationId``, caller key, content key of
+  every input frame) and served to every later caller. A build that
+  persists data writes under the directory the store hands it, and the
+  store deletes that directory when it drops the entry. Entries are
+  dropped when the store first sees a new ``applicationId``: a stopped
+  session's DataFrames cannot run, so its entries are invalid, and no
+  stop hook is needed to notice.
 
 Everything lives under one session directory
-``<root>/imx-session-<pid>-<rand>/`` (parallel sessions sharing an
+``<root>/imx-session-<pid>-<rand>/`` (parallel processes sharing an
 injected root never collide), registered with ``atexit`` for removal.
 An injected root itself is never deleted — the caller owns it.
 """
@@ -40,12 +45,22 @@ An injected root itself is never deleted — the caller owns it.
 from __future__ import annotations
 
 import atexit
+import hashlib
 import itertools
 import os
+import re
 import shutil
 import tempfile
 import threading
+import time
 import uuid
+from collections import Counter, defaultdict
+from collections.abc import Callable, Sequence
+from dataclasses import dataclass, field
+from typing import Any
+
+import pyspark.sql.functions as F
+from pyspark.sql import DataFrame
 
 _LOCK = threading.Lock()
 _SESSION_DIR: str | None = None
@@ -64,12 +79,6 @@ def set_storage_root(path: str | None) -> None:
         _INJECTED_ROOT = path
         _SESSION_DIR = None
         _GENERATIONS.clear()
-
-
-def storage_root() -> str:
-    """The session storage directory (created on first use)."""
-    with _LOCK:
-        return _session_dir_locked()
 
 
 def _session_dir_locked() -> str:
@@ -111,10 +120,117 @@ def scratch_dir(prefix: str, keep: int | None = None) -> str:
     return d
 
 
-def state_dir(prefix: str) -> str:
-    """A fresh caller-owned directory ``<session>/<prefix><seq>`` with no
-    generation reaping (lifetime = the owning cache entry / session)."""
+# ---------------------------------------------------------------------------
+# The session cache
+# ---------------------------------------------------------------------------
+
+
+def df_content_key(df: DataFrame) -> str:
+    """Cheap content signature of a DataFrame, the store's frame key: a
+    caller key alone can be reused with DIFFERENT data and silently
+    serve stale state. File-backed frames are keyed by (sorted input
+    files) + the analyzed plan with exprIds stripped (two loads of the
+    same files/filters normalize identically, so legitimate reuse still
+    hits). No Spark job for file-backed frames — inputFiles() is a
+    driver-side listing.
+
+    NON-file-backed frames (LocalRelation / createDataFrame):
+    inputFiles() is empty and the analyzed-plan string omits (and can
+    truncate) row data, so the plan alone gives NO content guarantee —
+    two different in-memory corpora would collide. For that case fall
+    back to a real content digest: one small Spark job aggregating an
+    order-insensitive sum of per-row xxhash64 plus a row count. Costs
+    one scan of the frame — in-memory frames are small by construction,
+    and a wrong cache hit serving stale persisted state is the exact
+    failure this key exists to prevent."""
+    try:
+        files = sorted(df.inputFiles())
+    except Exception:
+        files = []
+    plan = re.sub(r"#\d+", "", df._jdf.queryExecution().analyzed().toString())
+    h = hashlib.sha256()
+    for f in files:
+        h.update(f.encode())
+    h.update(plan.encode())
+    if not files:
+        row = df.select(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                F.xxhash64(F.struct(*[F.col(c) for c in df.columns])).cast(
+                    "decimal(38,0)"
+                )
+            ).alias("s"),
+        ).collect()[0]
+        h.update(f"rows={row['n']};sum={row['s']}".encode())
+    return h.hexdigest()[:16]
+
+
+_UNBUILT = object()
+
+
+@dataclass
+class _Entry:
+    path: str
+    lock: threading.Lock = field(default_factory=threading.Lock)
+    value: Any = _UNBUILT
+
+
+_ENTRIES: dict[tuple, _Entry] = {}
+_APP_ID: str | None = None
+_STATS: defaultdict[str, Counter] = defaultdict(Counter)
+
+
+def cached(
+    kind: str,
+    key: tuple,
+    frames: Sequence[DataFrame],
+    build: Callable[[str], Any],
+) -> Any:
+    """``build(path)``, computed at most once per Spark session for this
+    (kind, key, frames) and returned to every later caller.
+
+    ``key`` is the caller's key plus every parameter the result depends
+    on; ``frames`` are the input DataFrames (at least one), keyed by
+    :func:`df_content_key`, so a reused caller key over different data
+    misses. ``path`` is a not-yet-created directory reserved for this
+    entry: a build that persists data writes there, and the store
+    deletes it with the entry (or at once if the build raises).
+    Concurrent callers of one key wait for a single build."""
+    global _APP_ID
+    app = frames[0].sparkSession.sparkContext.applicationId
+    full = (kind, app, key, *map(df_content_key, frames))
+    doomed: list[_Entry] = []
     with _LOCK:
-        d = os.path.join(_session_dir_locked(), f"{prefix}{next(_SEQ):06d}")
-        os.makedirs(d)
-    return d
+        if app != _APP_ID:
+            doomed = list(_ENTRIES.values())
+            _ENTRIES.clear()
+            _APP_ID = app
+        if full not in _ENTRIES:
+            path = os.path.join(_session_dir_locked(), f"{kind}-{next(_SEQ):06d}")
+            _ENTRIES[full] = _Entry(path)
+        entry = _ENTRIES[full]
+    for old in doomed:
+        shutil.rmtree(old.path, ignore_errors=True)
+    with entry.lock:
+        hit = entry.value is not _UNBUILT
+        with _LOCK:
+            _STATS[kind]["hits" if hit else "misses"] += 1
+        if not hit:
+            t0 = time.perf_counter()
+            try:
+                entry.value = build(entry.path)
+            except BaseException:
+                shutil.rmtree(entry.path, ignore_errors=True)
+                raise
+            with _LOCK:
+                _STATS[kind]["builds"] += 1
+                _STATS[kind]["build_s"] += time.perf_counter() - t0
+        return entry.value
+
+
+def cache_stats(kind: str) -> dict[str, float]:
+    """Counters of one cache kind since process start: ``hits``,
+    ``misses``, ``builds`` and ``build_s`` (seconds spent building)."""
+    with _LOCK:
+        stats = _STATS[kind]
+        return {c: stats[c] for c in ("hits", "misses", "builds", "build_s")}
