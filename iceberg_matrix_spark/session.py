@@ -78,19 +78,43 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def local_df(spark: SparkSession, rows, schema: str):
-    """Driver-built rows → ONE-slice DataFrame.
+def local_df(spark: SparkSession, rows, schema: str | list[str]):
+    """Driver-built rows → a one-slice DataFrame over a JVM ``LocalRelation``.
 
-    ``spark.createDataFrame(list, ...)`` parallelizes into
-    defaultParallelism (32 here) Python-backed partitions, so every
-    downstream touch of a 4-row lookup frame spins 32 Python workers —
-    seconds of fixed overhead. Metadata/lookup frames (file→sequence
-    maps, CALL results, dimension literals) are driver-scale by
-    definition; one slice is the right layout and keeps broadcast
-    hash/nested-loop joins against them cheap."""
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    Metadata and lookup frames (file→sequence maps, CALL results,
+    dimension literals, appended batches) are driver-scale by definition.
+    The rows go to the JVM once, as an Arrow table, and Catalyst plans
+    them as a ``LocalTableScan``: reading the frame, broadcasting it or
+    writing it runs no Python worker. A frame over a pickled Python RDD
+    (``parallelize``) or over a plain row list would make every
+    downstream touch a Python-worker job.
+
+    Values are converted with the schema's own ``toInternal``, so a naive
+    ``datetime`` in a ``timestamp`` column means local time exactly as in
+    ``spark.createDataFrame(rows, schema)``. A list of column names
+    instead of a DDL string infers the types from the rows.
+
+    ``coalesce(1)`` keeps the one-slice layout: a ``LocalTableScan``
+    spreads its rows over up to ``defaultParallelism`` slices, and a
+    partitioned write emits one file per partition value per slice (a
+    200-row ``bucket(8)`` append would write 32 files, not 8). One slice
+    also keeps broadcast hash and nested-loop joins against these frames
+    cheap."""
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+    from pyspark.sql.types import _parse_datatype_string  # noqa: PLC0415
+
+    if isinstance(schema, str):
+        struct = _parse_datatype_string(schema)
+    else:
+        struct = spark._inferSchemaFromList(rows, names=list(schema))
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*(struct.toInternal(r) for r in rows))) or [()] * len(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct).coalesce(1)
 
 
 # Data-source registration: once per LIVE session, under a lock.

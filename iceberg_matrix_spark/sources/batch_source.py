@@ -48,8 +48,8 @@ from iceberg_matrix_spark.tables.table import (
     _file_uri,
     _physical_type,
     prune_files,
+    pruning_spec,
 )
-from iceberg_matrix_spark.tables.transforms import parse_transform
 
 SOURCE_NAME = "icelite"
 
@@ -186,8 +186,7 @@ class IceLiteBatchReader(DataSourceReader):
         snap = _resolve_snapshot(meta, self.options)
         if snap is None:
             return []
-        transforms = [parse_transform(s) for s in meta.partition_spec]
-        files = prune_files(snap.data_files, self.filters, transforms)
+        files = prune_files(snap.data_files, self.filters, *pruning_spec(meta))
         pos_dirs = [d.path for d in snap.delete_files if d.content == 1]
         # equality keys resolved by FIELD ID to the projection target's
         # names (table.py:_read_snapshot's mechanism): the delete parquet

@@ -442,7 +442,7 @@ def rewrite_position_deletes(table: IceLiteTable) -> dict:
     """
     import pyspark.sql.functions as F
 
-    from iceberg_matrix_spark.tables.table import _file_uri
+    from iceberg_matrix_spark.tables.table import _POS_DELETE_SCHEMA, _file_uri
 
     for _attempt in range(5):
         table.refresh()
@@ -454,8 +454,8 @@ def rewrite_position_deletes(table: IceLiteTable) -> dict:
             return {"rewritten_delete_files_count": 0, "added_delete_files_count": 0}
         live = sorted(_file_uri(f.path) for f in head.data_files)
         dels = (
-            table.spark.read.parquet(*[d.path for d in pos])
-            .select("file_path", "pos")
+            table.spark.read.schema(_POS_DELETE_SCHEMA)
+            .parquet(*[d.path for d in pos])
             .distinct()
             .filter(F.col("file_path").isin(live))
         )

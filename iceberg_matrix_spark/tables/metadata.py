@@ -162,6 +162,12 @@ class TableMetadata:
     # row-identity key upsert paths default to. Stored as FIELD IDS so
     # renames track automatically.
     identifier_field_ids: list[int] = field(default_factory=list)
+    # Every partition spec string the table has had, kept by
+    # commit_metadata. Data files record partition values, not the spec
+    # that made them, and bucket(4, id) and bucket(8, id) both write an
+    # ``id_bucket`` value: pruning trusts such a field only when it never
+    # changed. None on metadata written before the history was kept.
+    partition_history: list[str] | None = None
 
     # ---- accessors --------------------------------------------------------
 
@@ -231,6 +237,7 @@ def new_table_metadata(
         current_schema_id=schema.schema_id,
         schemas=[schema],
         partition_spec=list(partition_spec),
+        partition_history=list(partition_spec),
         properties=dict(properties),
         refs={},
         snapshots=[],
@@ -284,6 +291,10 @@ def commit_metadata(
     """
     os.makedirs(metadata_dir(table_location), exist_ok=True)
     new_version = expected_version + 1
+    if meta.partition_history is not None:
+        meta.partition_history += [
+            s for s in meta.partition_spec if s not in meta.partition_history
+        ]
     meta.metadata_log.append(
         {"version": new_version, "timestamp_ms": int(time.time() * 1000)}
     )

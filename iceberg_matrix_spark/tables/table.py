@@ -56,6 +56,9 @@ from iceberg_matrix_spark.tables.transforms import (
 _META_FILE = "__file"
 _META_POS = "__pos"
 _META_SEQ = "__seq"
+# Every position-delete file IceLite writes has exactly these columns;
+# reading with the schema pinned skips Spark's schema-inference job.
+_POS_DELETE_SCHEMA = "file_path string, pos bigint"
 
 # int→bigint / float→double widening per the reference's type-promotion
 # probes (/root/reference/tests/iceberg_feature_tests.py:738-750)
@@ -1068,7 +1071,7 @@ class IceLiteTable:
             return self._read_snapshot(snap, filters=filters, project_to=project_to)
         if self.format_version < 3:
             raise ValueError("row lineage requires format-version 3")
-        out = self._read_snapshot(snap, filters=filters, with_meta=True)
+        out = self._read_snapshot(snap, filters=filters, with_meta=True, with_seq=True)
         fr_map = local_df(
             self.spark,
             [
@@ -1140,17 +1143,20 @@ class IceLiteTable:
     def _prune_files(
         self, files: list[DataFileEntry], filters: list[tuple]
     ) -> list[DataFileEntry]:
-        return prune_files(files, filters, self._transforms())
+        return prune_files(files, filters, *pruning_spec(self.meta))
 
     def _read_files(
         self,
         files: list[DataFileEntry],
         with_meta: bool,
         project_to: "TableSchema | None" = None,
+        with_seq: bool = False,
     ) -> DataFrame:
         """Read a data-file list, resolving schema evolution by field ID.
         ``project_to`` overrides the projection target (time-travel reads
-        use the SNAPSHOT's schema, like Iceberg's VERSION AS OF)."""
+        use the SNAPSHOT's schema, like Iceberg's VERSION AS OF).
+        ``with_meta`` adds each row's file and position; ``with_seq``
+        (which needs ``with_meta``) adds its file's sequence number."""
         current = project_to if project_to is not None else self.meta.current_schema
         if not files:
             base = self.spark.createDataFrame([], self._spark_schema(current))
@@ -1159,9 +1165,10 @@ class IceLiteTable:
                     {
                         _META_FILE: F.lit(None).cast("string"),
                         _META_POS: F.lit(None).cast("long"),
-                        _META_SEQ: F.lit(None).cast("long"),
                     }
                 )
+            if with_seq:
+                base = base.withColumn(_META_SEQ, F.lit(None).cast("long"))
             return base
 
         by_schema: dict[int, list[DataFileEntry]] = {}
@@ -1195,7 +1202,7 @@ class IceLiteTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        if with_meta:
+        if with_seq:
             seq_map = local_df(
                 self.spark,
                 [(_file_uri(f.path), f.sequence_number) for f in files],
@@ -1210,22 +1217,46 @@ class IceLiteTable:
         with_meta: bool = False,
         filters: list[tuple] | None = None,
         project_to: "TableSchema | None" = None,
+        with_seq: bool = False,
     ) -> DataFrame:
+        """The snapshot's live rows: data files minus position and
+        equality deletes.
+
+        A plain read scans the data files and nothing else. The file and
+        position columns (``__file``, ``__pos``) come from the parquet
+        ``_metadata`` column and are attached only when a position delete
+        or an equality delete must be resolved, or when the caller asks
+        for them with ``with_meta`` (DML finds the rows it rewrites or
+        deletes by them). The sequence-number join (``__seq``) is attached
+        only when an equality delete applies to some scanned file, i.e. a
+        file older than the delete, or when the caller asks for it with
+        ``with_seq`` (row lineage). Columns the caller did not ask for are
+        dropped before returning."""
         if snap is None:
-            return self._read_files([], with_meta, project_to=project_to)
+            return self._read_files([], with_meta, project_to, with_seq)
         files = snap.data_files
         if filters:
             files = self._prune_files(files, filters)
-        df = self._read_files(files, with_meta=True, project_to=project_to)
-
         pos_deletes = [d for d in snap.delete_files if d.content == 1]
+        eq_deletes = [
+            d
+            for d in snap.delete_files
+            if d.content == 2
+            and any(f.sequence_number < d.sequence_number for f in files)
+        ]
+        need_seq = with_seq or bool(eq_deletes)
+        need_meta = with_meta or need_seq or bool(pos_deletes)
+        df = self._read_files(files, need_meta, project_to, need_seq)
+
         if pos_deletes:
-            dels = self.spark.read.parquet(*[d.path for d in pos_deletes]).select(
-                F.col("file_path").alias(_META_FILE), F.col("pos").alias(_META_POS)
+            dels = (
+                self.spark.read.schema(_POS_DELETE_SCHEMA)
+                .parquet(*[d.path for d in pos_deletes])
+                .select(F.col("file_path").alias(_META_FILE), F.col("pos").alias(_META_POS))
             )
             df = df.join(F.broadcast(dels), [_META_FILE, _META_POS], "left_anti")
 
-        for d in (d for d in snap.delete_files if d.content == 2):
+        for d in eq_deletes:
             # resolve the delete key by FIELD ID so renames after the
             # delete was written still target the right column; the
             # parquet delete file itself carries the write-time names
@@ -1265,8 +1296,10 @@ class IceLiteTable:
             )
             df = df.join(doomed, [_META_FILE, _META_POS], "left_anti")
 
-        if not with_meta:
-            df = df.drop(_META_FILE, _META_POS, _META_SEQ)
+        if need_seq and not with_seq:
+            df = df.drop(_META_SEQ)
+        if need_meta and not with_meta:
+            df = df.drop(_META_FILE, _META_POS)
         if filters:
             for col, op, val in filters:
                 df = df.filter(F.expr(f"{col} {'==' if op == '=' else op} {_sql_lit(val)}"))
@@ -1358,7 +1391,7 @@ class IceLiteTable:
             # rows the predicate didn't match. SQL DELETE removes TRUE only.
             survivors = live.filter(
                 F.col(_META_FILE).isin(list(affected)) & ~(cond.eqNullSafe(F.lit(True)))
-            ).drop(_META_FILE, _META_POS, _META_SEQ)
+            ).drop(_META_FILE, _META_POS)
             new_entries = self._write_data_files(survivors, meta.current_schema_id, seq, meta=meta)
             return self._snapshot(
                 meta,
@@ -1398,7 +1431,7 @@ class IceLiteTable:
                     F.col(_META_FILE).alias("file_path"), F.col(_META_POS).alias("pos")
                 )
                 dentry = self._write_delete_file(dels, content=1, sequence_number=seq)
-                updated = apply_set(matched.drop(_META_FILE, _META_POS, _META_SEQ))
+                updated = apply_set(matched.drop(_META_FILE, _META_POS))
                 added = self._write_data_files(updated, meta.current_schema_id, seq, meta=meta)
                 return self._snapshot(
                     meta,
@@ -2112,15 +2145,25 @@ def _physical_type(logical: str) -> str:
 
 
 def prune_files(
-    files: list[DataFileEntry], filters: list[tuple], transforms: list[Transform]
+    files: list[DataFileEntry],
+    filters: list[tuple],
+    transforms: list[Transform],
+    types: dict[str, str] | None = None,
 ) -> list[DataFileEntry]:
     """Manifest-level file skipping: partition-transform projection +
     column min/max bounds (SURVEY §4). ``filters`` are simple
     conjunctive predicates (col, op, literal); anything not prunable
     is left to the parquet scan's pushdown. Standalone so the batch
     Python DataSource (sources/batch_source.py) can prune without a
-    SparkSession."""
+    SparkSession.
+
+    ``types`` maps a column to its physical type. A ``bucket`` field
+    prunes only an equality predicate, and only when ``types`` gives
+    the column's type (the hash input depends on it); without
+    ``types`` bucket fields never prune. :func:`pruning_spec` gives the
+    transforms and types that are safe for a table's files."""
     by_source = {t.source: t for t in transforms}
+    types = types or {}
     kept = []
     for f in files:
         alive = True
@@ -2129,7 +2172,12 @@ def prune_files(
             t = by_source.get(col)
             if t is not None and t.field_name in f.partition:
                 pv = f.partition[t.field_name]
-                proj = t.project_value(val)
+                # a hash is not order-preserving: bucket projects only "="
+                proj = (
+                    t.project_value(val, types.get(col))
+                    if op == "=" or t.kind != "bucket"
+                    else None
+                )
                 if proj is not None and pv is not None:
                     # identity: partition value IS the column value, so
                     # strict ops prune strictly; other transforms map a
@@ -2159,6 +2207,43 @@ def prune_files(
         if alive:
             kept.append(f)
     return kept
+
+
+def pruning_spec(meta: TableMetadata) -> tuple[list[Transform], dict[str, str]]:
+    """The transforms and column types that :func:`prune_files` may trust
+    for every data file of the table. A file records its partition
+    values, not the spec or schema that produced them, so two cases are
+    left out rather than pruned wrongly:
+
+    - a bucket or truncate field whose argument ever changed:
+      ``bucket(4, id)`` and ``bucket(8, id)`` both write ``id_bucket``.
+      Without a ``partition_history`` (older metadata) no such field is
+      trusted;
+    - the type of a column whose physical type differs between schemas:
+      an int widened to bigint was hashed as 4 bytes in older files and
+      as 8 in newer ones."""
+    history = meta.partition_history
+    specs: dict[str, set[str]] = {}
+    for spec in (history or []) + meta.partition_spec:
+        t = parse_transform(spec)
+        specs.setdefault(t.field_name, set()).add(t.spec_string())
+    transforms = [
+        t
+        for t in map(parse_transform, meta.partition_spec)
+        if t.kind not in ("bucket", "truncate")
+        or (history is not None and len(specs[t.field_name]) == 1)
+    ]
+    types = {}
+    for cf in meta.current_schema.fields:
+        seen = {
+            _physical_type(f.type)
+            for s in meta.schemas
+            for f in s.fields
+            if f.id == cf.id or f.name == cf.name
+        }
+        if len(seen) == 1:
+            types[cf.name] = seen.pop()
+    return transforms, types
 
 
 def _file_uri(path: str) -> str:
@@ -2243,11 +2328,8 @@ def _partition_from_path(rel_path: str) -> dict[str, object]:
 # footer read is ~1 ms/file — measured round 11 on the bench DML quartet
 # (merge/wap/zorder/branch), whose commits write 1-2 files each. At
 # production commit sizes (thousands of files per commit) the distributed
-# path engages unchanged. Env-tunable for cluster profiles where driver
-# I/O is remote (object store): set to 0 to always distribute.
-_STATS_DRIVER_FILE_CUTOFF = int(
-    os.environ.get("IMX_STATS_DRIVER_FILE_CUTOFF", "32")
-)
+# path engages unchanged.
+_STATS_DRIVER_FILE_CUTOFF = 32
 
 
 def _collect_file_stats(spark: SparkSession, paths: list[str]) -> dict[str, dict]:

@@ -89,10 +89,14 @@ class Transform:
 
     # ---- predicate translation (manifest pruning) -------------------------
 
-    def project_value(self, value) -> object | None:
+    def project_value(self, value, dtype: str | None = None) -> object | None:
         """Transform a literal from source space into partition space.
-        Returns None when the transform can't project the literal (bucket
-        can only project equality)."""
+        Returns None when the transform can't project the literal.
+
+        ``bucket`` projects only through ``dtype``, the source column's
+        physical type: the hash input is the column's binary form, so the
+        same literal lands in different buckets as an int and as a bigint
+        (see :func:`bucket_hash_input`)."""
         if self.kind == "identity":
             return value
         if self.kind in ("year", "month", "day", "hour"):
@@ -112,7 +116,97 @@ class Transform:
                 return value[: self.arg]
             if isinstance(value, int):
                 return value - (value % self.arg)
-        return None  # bucket: handled only for equality via hash elsewhere
+        if self.kind == "bucket" and dtype is not None:
+            data = bucket_hash_input(value, dtype)
+            if data is not None:
+                # Python's % with a positive modulus is Spark's pmod
+                return xxhash64(data) % self.arg
+        return None
+
+
+# ---- Spark's xxhash64, for bucket projection ----------------------------
+#
+# The writer computes bucket(N, c) as pmod(xxhash64(c), N) (Transform.apply).
+# Pruning an equality predicate on c needs the same value on the driver, so
+# this is XXH64 (the published algorithm, which Spark's XXH64.java
+# implements) with Spark's seed and Spark's choice of input bytes per type.
+
+_SEED = 42
+_U64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+
+# Spark hashes tinyint and smallint as a 4-byte int, like int itself.
+_HASH_INT_BYTES = {"tinyint": 4, "smallint": 4, "int": 4, "bigint": 8}
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _U64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _U64, 31) * _P1 & _U64
+
+
+def xxhash64(data: bytes) -> int:
+    """Spark SQL's ``xxhash64`` of ``data`` as a signed 64-bit int."""
+    n = len(data)
+    i = 0
+    if n >= 32:
+        v = [(_SEED + _P1 + _P2) & _U64, (_SEED + _P2) & _U64, _SEED, (_SEED - _P1) & _U64]
+        while i + 32 <= n:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
+                v[j] = _round(v[j], lane)
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _U64
+        for acc in v:
+            h = ((h ^ _round(0, acc)) * _P1 + _P4) & _U64
+    else:
+        h = (_SEED + _P5) & _U64
+    h = (h + n) & _U64
+    while i + 8 <= n:
+        h ^= _round(0, int.from_bytes(data[i : i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _U64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i : i + 4], "little") * _P1 & _U64
+        h = (_rotl(h, 23) * _P2 + _P3) & _U64
+        i += 4
+    while i < n:
+        h ^= data[i] * _P5 & _U64
+        h = _rotl(h, 11) * _P1 & _U64
+        i += 1
+    h ^= h >> 33
+    h = h * _P2 & _U64
+    h ^= h >> 29
+    h = h * _P3 & _U64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def bucket_hash_input(value, dtype: str) -> bytes | None:
+    """The bytes Spark's ``xxhash64`` reads for ``value`` in a column of
+    physical type ``dtype``: a 4-byte little-endian int for tinyint,
+    smallint and int, 8 bytes for bigint, UTF-8 for string. None for any
+    other type, for a literal whose Python type does not match the column
+    (a float or bool on an integer column, a number on a string column),
+    and for an integer outside the column's range: those are not
+    projected, so the file is kept."""
+    width = _HASH_INT_BYTES.get(dtype)
+    if width is not None:
+        if type(value) is not int:
+            return None
+        try:
+            return value.to_bytes(width, "little", signed=True)
+        except OverflowError:
+            return None
+    if dtype == "string" and isinstance(value, str):
+        return value.encode("utf-8")
+    return None
 
 
 # ---- PyIceberg-shaped transform objects --------------------------------

@@ -295,6 +295,16 @@ def test_hidden_partitioning_and_pruning(spark, catalog):
     # scan returns the same rows a full read + filter would
     got = t.df(filters=[("ts", ">=", "2024-01-01 00:00:00")])
     assert sorted(r.id for r in got.collect()) == [11, 21]
+    # an equality predicate on a bucket source prunes to its one bucket
+    # ('a', 'b' and 'c' hash to three different buckets of 4)
+    by_cat = t._prune_files(snap.data_files, [("category", "=", "b")])
+    assert len(by_cat) == 1 < len(snap.data_files)
+    assert by_cat[0].partition["category_bucket"] == (
+        spark.range(1).select(F.pmod(F.xxhash64(F.lit("b")), F.lit(4))).first()[0]
+    )
+    got = t.df(filters=[("category", "=", "b")]).collect()
+    assert sorted(got) == sorted(t.df().filter(F.col("category") == "b").collect())
+    assert [r.id for r in got] == [11]
 
 
 def test_partition_evolution(spark, catalog):

@@ -1,0 +1,82 @@
+"""Spark jobs per IceLite read: a point read pays only for what its
+snapshot needs (counted through statusTracker, as in test_store.py)."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import functions as F
+
+from iceberg_matrix_spark.session import local_df
+from iceberg_matrix_spark.tables.catalog import IceLiteCatalog
+
+_SCHEMA = "id bigint, v string"
+_ROWS = {i: f"v{i}" for i in range(200)}
+
+
+def _jobs(spark, group: str, fn):
+    """(result of fn(), ids of the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land in the tracker
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def table(spark, tmp_path):
+    cat = IceLiteCatalog(spark, str(tmp_path))
+    cat.create_namespace("n")
+    t = cat.create_table(
+        "n.mor", _SCHEMA, partition_by=["bucket(8, id)"],
+        properties={
+            "format-version": "3",
+            "write.delete.mode": "merge-on-read",
+            "write.update.mode": "merge-on-read",
+        },
+    )
+    t.append(local_df(spark, sorted(_ROWS.items()), _SCHEMA))
+    return t
+
+
+def _point(t, k):
+    return lambda: [tuple(r) for r in t.df(filters=[("id", "=", k)]).collect()]
+
+
+def test_point_read_without_deletes_runs_one_job(spark, table):
+    rows, jobs = _jobs(spark, "read-jobs-plain", _point(table, 17))
+    assert rows == [(17, "v17")]
+    assert len(jobs) == 1
+
+
+def test_point_read_with_position_deletes_runs_two_jobs(spark, table):
+    table.delete("id IN (17, 99)")
+    assert [d.content for d in table.current_snapshot().delete_files] == [1]
+    rows, _ = _jobs(spark, "read-jobs-pos", _point(table, 17))
+    assert rows == []
+    rows, jobs = _jobs(spark, "read-jobs-pos-live", _point(table, 18))
+    assert rows == [(18, "v18")]
+    assert len(jobs) <= 2
+
+
+def test_equality_delete_and_lineage_reads_match_the_model(spark, table):
+    """The reads that still need __seq: an equality delete older than some
+    files, and row lineage."""
+    table.upsert(local_df(spark, [(5, "new5"), (300, "v300")], _SCHEMA), ["id"])
+    assert 2 in {d.content for d in table.current_snapshot().delete_files}
+    model = {**_ROWS, 5: "new5", 300: "v300"}
+    got = {r.id: r.v for r in table.df().collect()}
+    assert got == model
+    assert [tuple(r) for r in table.df(filters=[("id", "=", 5)]).collect()] == [(5, "new5")]
+
+    lineage = table.df(with_lineage=True)
+    assert {r.id: r.v for r in lineage.collect()} == model
+    seqs = {
+        r.id: r._last_updated_sequence_number
+        for r in lineage.filter(F.col("id").isin(4, 5)).collect()
+    }
+    assert seqs[5] > seqs[4]
+    assert lineage.select("_row_id").distinct().count() == len(model)
