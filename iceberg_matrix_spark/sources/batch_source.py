@@ -8,19 +8,20 @@ the :class:`IceLiteTable` wrapper:
     spark.read.format("icelite").option("snapshot_id", ...).load(path)
     spark.read.format("icelite").option("ref", "audit-branch").load(path)
 
-Semantics (current or time-traveled snapshot, MoR-merged):
-- one input partition per data file, decoded to Arrow on executors;
-- position deletes (incl. V3 PUFFIN-tagged DVs) and equality deletes are
-  applied per partition — each task reads only the delete entries scoped
-  to the snapshot and filters its own file's rows;
-- filter pushdown: ``pushFilters`` translates Spark's EqualTo/Greater/
-  Less filters into manifest pruning (partition-transform projection +
-  column bounds via :func:`prune_files`) — pruned files never become
-  partitions. All filters are also returned as residuals, so Spark
-  re-applies them post-scan: pruning is an optimization, never a
-  correctness dependency;
-- schema evolution by field ID: old files are projected/renamed/
-  back-filled (incl. V3 initial-defaults) to the current schema in Arrow.
+The driver plans the read with :func:`tables.scan.plan_scan`, the same
+plan ``IceLiteTable.df`` and the DuckDB rebuild execute: snapshot and
+read schema, pruned data files, the delete files that apply, and one
+field-id projection per write schema. This module executes the plan in
+Arrow:
+
+- one input partition per planned data file, carrying its projection
+  and the plan's delete files, decoded on executors;
+- each task applies position deletes to its own file's rows, projects
+  them, then applies the equality deletes newer than its file;
+- filter pushdown: ``pushFilters`` turns Spark's EqualTo/Greater/Less
+  filters into plan filters, which prune files. All filters are also
+  returned as residuals, so Spark re-applies them after the scan:
+  pruning is an optimization, never a correctness dependency.
 
 Scale: the driver touches one metadata JSON (partition planning reads no
 data); row decoding, delete merging, and schema projection all run in
@@ -43,13 +44,14 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
-from iceberg_matrix_spark.tables.metadata import TableMetadata, load_metadata
-from iceberg_matrix_spark.tables.table import (
-    _file_uri,
+from iceberg_matrix_spark.tables.metadata import load_metadata
+from iceberg_matrix_spark.tables.scan import (
+    Column,
+    ScanPlan,
     _physical_type,
-    prune_files,
-    pruning_spec,
+    plan_scan,
 )
+from iceberg_matrix_spark.tables.table import _file_uri
 
 SOURCE_NAME = "icelite"
 
@@ -103,41 +105,24 @@ def _arrow_type(ddl: str):
     raise NotImplementedError(f"icelite batch source: unsupported type {ddl!r}")
 
 
-def _project_schema(meta: TableMetadata, options: dict):
-    """Projection target: the SNAPSHOT's schema for a pinned read (the
-    same time-travel semantics IceLiteTable.df implements), else the
-    current schema."""
-    sid = options.get("snapshot_id")
-    if sid is not None:
-        snap = meta.snapshot_by_id(int(sid))
-        if snap is not None and snap.schema_id is not None:
-            return meta.schema_by_id(snap.schema_id)
-    return meta.current_schema
-
-
-def project_arrow_table(table, file_schema, target_schema):
-    """Field-ID projection of a raw parquet arrow table to a target
-    schema: rename (by id), cast (widening), back-fill added columns
-    (V3 initial-default, else NULL). Shared by the batch and streaming
-    sources so evolution semantics can't drift between them."""
+def project_arrow_table(table, columns: list[Column]):
+    """Apply a :func:`tables.scan.project` projection to a raw parquet
+    Arrow table: rename, cast (widening) and fill defaults. A column the
+    file lacks physically (an adopted file) also takes its default."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    by_id = {f.id: f for f in file_schema.fields}
-    cols, names = [], []
-    for cf in target_schema.fields:
-        typ = _arrow_type(_physical_type(cf.type))
-        old = by_id.get(cf.id)
-        if old is not None and old.name in table.column_names:
-            col = table[old.name]
+    out = {}
+    for c in columns:
+        typ = _arrow_type(c.type)
+        if c.source is not None and c.source in table.column_names:
+            col = table[c.source]
             if col.type != typ:
                 col = pc.cast(col, typ)
         else:
-            fill = cf.initial_default
-            col = pa.array([fill] * table.num_rows, type=typ)
-        cols.append(col)
-        names.append(cf.name)
-    return pa.table(dict(zip(names, cols)))
+            col = pa.array([c.default] * table.num_rows, type=typ)
+        out[c.name] = col
+    return pa.table(out)
 
 
 _NAN = object()  # sentinel: lets float NaN keys compare equal (eqNullSafe)
@@ -150,27 +135,27 @@ def _norm(v):
 
 
 class _ScanPartition(InputPartition):
-    def __init__(self, path, seq, schema_id, pos_delete_dirs, eq_deletes):
+    def __init__(self, path, seq, columns, pos_deletes, eq_deletes):
         self.path = path
         self.seq = seq
-        self.schema_id = schema_id
-        self.pos_delete_dirs = pos_delete_dirs  # [dir, ...]
-        self.eq_deletes = eq_deletes  # [(dir, file_cols, proj_cols, seq), ...]
+        self.columns = columns  # the file's projection to the read schema
+        self.pos_deletes = pos_deletes  # [delete file path, ...]
+        self.eq_deletes = eq_deletes  # [EqualityDelete, ...]
 
 
-def _resolve_snapshot(meta: TableMetadata, options: dict):
+def _plan(options: dict, filters: list[tuple] | None = None) -> ScanPlan:
+    meta, _ = load_metadata(options.get("path") or options["location"])
     sid = options.get("snapshot_id")
-    if sid is not None:
-        return meta.snapshot_by_id(int(sid))
-    ref = meta.refs.get(options.get("ref", "main"))
-    if ref is None:
-        return None
-    return meta.snapshot_by_id(ref.snapshot_id)
+    return plan_scan(
+        meta,
+        snapshot_id=int(sid) if sid is not None else None,
+        ref=options.get("ref", "main"),
+        filters=filters,
+    )
 
 
 class IceLiteBatchReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.location = options.get("path") or options["location"]
         self.options = dict(options)
         self.filters: list[tuple] = []
 
@@ -182,56 +167,36 @@ class IceLiteBatchReader(DataSourceReader):
             yield f  # everything stays a residual: pruning only optimizes
 
     def partitions(self) -> list[_ScanPartition]:
-        meta, _ = load_metadata(self.location)
-        snap = _resolve_snapshot(meta, self.options)
-        if snap is None:
-            return []
-        files = prune_files(snap.data_files, self.filters, *pruning_spec(meta))
-        pos_dirs = [d.path for d in snap.delete_files if d.content == 1]
-        # equality keys resolved by FIELD ID to the projection target's
-        # names (table.py:_read_snapshot's mechanism): the delete parquet
-        # carries WRITE-TIME names; matching by that name after a RENAME
-        # would miss (KeyError) or hit an unrelated re-added column
-        target = _project_schema(meta, self.options)
-        by_fid = {f.id: f.name for f in target.fields}
-        eq = []
-        for d in snap.delete_files:
-            if d.content != 2:
-                continue
-            if d.equality_ids:
-                missing = [i for i in d.equality_ids if i not in by_fid]
-                if missing:
-                    raise ValueError(
-                        f"equality delete {d.path} references dropped field "
-                        f"id(s) {missing}; cannot apply it correctly"
-                    )
-                proj_cols = [by_fid[i] for i in d.equality_ids]
-            else:  # legacy name-addressed entries
-                proj_cols = list(d.equality_columns)
-            eq.append(
-                (d.path, list(d.equality_columns), proj_cols, d.sequence_number)
-            )
+        plan = _plan(self.options, self.filters)
+        pos = [d.path for d in plan.position_deletes]
         return [
-            _ScanPartition(f.path, f.sequence_number, f.schema_id, pos_dirs, eq)
-            for f in files
+            _ScanPartition(
+                f.path,
+                f.sequence_number,
+                plan.projections[f.schema_id],
+                pos,
+                plan.equality_deletes,
+            )
+            for f in plan.files
         ]
 
-    def read(self, partition: _ScanPartition) -> Iterator:
+    def read(self, partition: _ScanPartition | None) -> Iterator:
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        meta, _ = load_metadata(self.location)
-        file_schema = meta.schema_by_id(partition.schema_id)
-        current = _project_schema(meta, self.options)
+        if partition is None:
+            # PySpark plans one partition of None for an empty plan
+            # (an empty table, or every file pruned)
+            return
         table = pq.read_table(partition.path)
 
         # position deletes scoped to this file (file_path matches the
         # Spark _metadata.file_path form)
         uri = _file_uri(partition.path)
         drop = None
-        for ddir in partition.pos_delete_dirs:
-            dels = pq.read_table(ddir, columns=["file_path", "pos"])
+        for dpath in partition.pos_deletes:
+            dels = pq.read_table(dpath, columns=["file_path", "pos"])
             mine = dels.filter(pc.equal(dels["file_path"], uri))["pos"]
             if len(mine):
                 s = mine.to_pylist()
@@ -240,28 +205,24 @@ class IceLiteBatchReader(DataSourceReader):
             mask = [i not in drop for i in range(table.num_rows)]
             table = table.filter(pa.array(mask))
 
-        # field-ID projection to the target schema (+ V3 initial-defaults)
-        out = project_arrow_table(table, file_schema, current)
+        out = project_arrow_table(table, partition.columns)
 
         # equality deletes apply to rows written BEFORE the delete commit;
-        # the delete parquet is read by its WRITE-TIME column names, the
-        # projected table matched by the field-id-resolved target names
-        for ddir, file_cols, proj_cols, dseq in partition.eq_deletes:
+        # the delete parquet is read by its write-time column names and
+        # matched against the projected table's read-schema names
+        for d in partition.eq_deletes:
             if not out.num_rows:
                 break  # nothing left to delete; empty masks are ill-typed
-            if partition.seq >= dseq or not file_cols:
+            if partition.seq >= d.sequence_number or not d.file_cols:
                 continue
-            keys = pq.read_table(ddir, columns=file_cols)
+            keys = pq.read_table(d.path, columns=d.file_cols)
             if not keys.num_rows:
                 continue
-            if len(file_cols) == 1:
+            if len(d.file_cols) == 1:
                 # single-key fast path: vectorized set membership; Arrow
                 # is_in already treats NaN==NaN, nulls handled explicitly
-                # (spec semantics: a delete row carrying NULL matches data
-                # rows with NULL — same contract as eqNullSafe / IS NOT
-                # DISTINCT FROM in the other two read paths)
-                vals = keys[file_cols[0]].combine_chunks()
-                hit = pc.is_in(out[proj_cols[0]], value_set=vals)
+                vals = keys[d.file_cols[0]].combine_chunks()
+                hit = pc.is_in(out[d.key_cols[0]], value_set=vals)
                 out = out.filter(pc.invert(hit))
                 continue
             # composite keys: row-wise TUPLE matching, null-safe and
@@ -271,9 +232,9 @@ class IceLiteBatchReader(DataSourceReader):
             # not delete (1,'b'); Arrow has no struct is_in kernel here.
             key_set = {
                 tuple(_norm(v) for v in row)
-                for row in zip(*[keys[fc].to_pylist() for fc in file_cols])
+                for row in zip(*[keys[fc].to_pylist() for fc in d.file_cols])
             }
-            rows = zip(*[out[kc].to_pylist() for kc in proj_cols])
+            rows = zip(*[out[kc].to_pylist() for kc in d.key_cols])
             mask = [
                 tuple(_norm(v) for v in row) not in key_set for row in rows
             ]
@@ -290,11 +251,9 @@ class IceLiteBatchDataSource(DataSource):
         return SOURCE_NAME
 
     def schema(self) -> str:
-        location = self.options.get("path") or self.options["location"]
-        meta, _ = load_metadata(location)
-        target = _project_schema(meta, dict(self.options))
+        plan = _plan(dict(self.options))
         return ", ".join(
-            f"{f.name} {_physical_type(f.type)}" for f in target.fields
+            f"{f.name} {_physical_type(f.type)}" for f in plan.schema.fields
         )
 
     def reader(self, schema) -> IceLiteBatchReader:

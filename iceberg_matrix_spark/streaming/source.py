@@ -98,16 +98,19 @@ class IceLiteStreamReader(DataSourceStreamReader):
         from iceberg_matrix_spark.sources.batch_source import (  # noqa: PLC0415
             project_arrow_table,
         )
+        from iceberg_matrix_spark.tables.scan import project  # noqa: PLC0415
 
         meta = self._meta()
         # identity-transform partition values live in the data file too
-        # (table.py _write_data_files aliases them); field-ID projection
-        # renames/casts/back-fills older files to the stream's pinned
-        # schema — the batch source's exact mechanism, shared.
+        # (table.py _write_data_files aliases them); the field-ID
+        # projection every IceLite reader uses renames/casts/back-fills
+        # older files to the stream's pinned schema
         table = project_arrow_table(
             pq.read_table(partition.path),
-            meta.schema_by_id(partition.schema_id),
-            meta.schema_by_id(self.target_schema_id),
+            project(
+                meta.schema_by_id(partition.schema_id),
+                meta.schema_by_id(self.target_schema_id),
+            ),
         )
         yield from table.to_batches()
 

@@ -7,21 +7,17 @@ PyIceberg-written position deletes; the ClickHouse suite is built
 entirely on this; the DuckDB suite explicitly includes foreign engines
 reading equality deletes, duckdb_feature_tests.py:358-368). DuckDB is the
 in-container second engine (it is already the correctness oracle), so the
-helpers here export a table's live-file manifest — data files WITH their
-sequence numbers, position-delete files, and equality-delete files from
-the current snapshot — and have DuckDB reconstruct the table state from
-the raw parquet alone:
+helpers here export a ref's scan plan (:func:`tables.scan.plan_scan`, the
+plan ``IceLiteTable.df`` and the batch source execute) as a live-file
+manifest — data files WITH their sequence numbers and per-schema
+projections, position-delete files, and the equality-delete files that
+apply — and have DuckDB reconstruct the table state from the raw parquet
+alone:
 
     read_parquet(data, filename, file_row_number, union_by_name)
       ANTI JOIN read_parquet(pos_deletes) ON (file, position)
       minus, per equality-delete file d with sequence S_d:
         rows whose data-file sequence < S_d matching d's key columns
-
-``union_by_name`` handles add-column schema evolution (older files lack
-the column → NULL back-fill, the same read-side semantics IceLite's own
-scan applies). Equality-delete key columns are resolved by FIELD ID to
-the current schema names (renames after the delete was written still
-target the right column), exactly like tables/table.py's own MoR read.
 """
 
 from __future__ import annotations
@@ -29,6 +25,7 @@ from __future__ import annotations
 import glob as _glob
 import os
 
+from iceberg_matrix_spark.tables.scan import plan_scan
 from iceberg_matrix_spark.tables.table import IceLiteTable
 
 
@@ -88,99 +85,49 @@ def _duck_path(path: str) -> str:
 
 
 def live_file_manifest(table: IceLiteTable, ref: str = "main") -> dict:
-    """Current-snapshot file lists, resolved to concrete parquet paths.
+    """The ref's scan plan, resolved to concrete parquet paths.
 
     Returns::
 
         {"data": [paths],                      # flat, all data files
-         "data_entries": [{"paths": [...], "seq": n}],
+         "data_entries": [{"paths": [...], "seq": n, "schema_id": s}],
+         "scan_groups": [{"paths": [...], "select": [scan.Column]}],
          "position_deletes": [paths],
          "equality_deletes": [{"paths": [...], "seq": n,
                                "file_cols": [...], "key_cols": [...]}]}
 
-    ``file_cols`` are the write-time column names stored IN the delete
-    parquet; ``key_cols`` are the same keys under the CURRENT schema
-    names (field-id resolved) — a foreign engine selects file_cols and
-    compares against key_cols.
+    ``scan_groups`` has one entry per write schema, with its projection
+    to the current schema. ``file_cols`` are the write-time column names
+    stored IN the delete parquet; ``key_cols`` are the same keys under
+    the current schema names (field-id resolved) — a foreign engine
+    selects file_cols and compares against key_cols.
     """
-    snap = table._resolve_snapshot(ref=ref)
-    if snap is None:
-        return {
-            "data": [],
-            "data_entries": [],
-            "position_deletes": [],
-            "equality_deletes": [],
+    plan = plan_scan(table.meta, ref=ref)
+    data_entries = [
+        {"paths": _expand(f.path), "seq": f.sequence_number, "schema_id": f.schema_id}
+        for f in plan.files
+    ]
+    scan_groups = [
+        {
+            "paths": [p for e in data_entries if e["schema_id"] == sid for p in e["paths"]],
+            "select": plan.projections[sid],
         }
-
-    data: list[str] = []
-    data_entries: list[dict] = []
-    current = table.meta.current_schema
-    for f in snap.data_files:
-        paths = _expand(f.path)
-        data.extend(paths)
-        data_entries.append(
-            {"paths": paths, "seq": f.sequence_number, "schema_id": f.schema_id}
-        )
-
-    # per write-schema projection to the CURRENT schema, field-id resolved
-    # — the same rename/backfill semantics tables/table.py:_read_files
-    # applies (rename after write → old name in the file; column added
-    # after write → NULL / V3 initial_default)
-    scan_groups: list[dict] = []
-    for schema_id in sorted({e["schema_id"] for e in data_entries}):
-        file_schema = table.meta.schema_by_id(schema_id)
-        by_fid = {fld.id: fld.name for fld in file_schema.fields}
-        select = [
-            {
-                "src": by_fid.get(cf.id),
-                "dst": cf.name,
-                "default": getattr(cf, "initial_default", None),
-            }
-            for cf in current.fields
-        ]
-        entries = [e for e in data_entries if e["schema_id"] == schema_id]
-        scan_groups.append(
-            {
-                "paths": [p for e in entries for p in e["paths"]],
-                "select": select,
-            }
-        )
-
-    pos_deletes: list[str] = []
-    eq_deletes: list[dict] = []
-    by_id = {fld.id: fld.name for fld in table.meta.current_schema.fields}
-    for d in snap.delete_files:
-        if d.content == 1:
-            pos_deletes.extend(_expand(d.path))
-        elif d.content == 2:
-            if d.equality_ids:
-                missing = [i for i in d.equality_ids if i not in by_id]
-                if missing:
-                    raise ValueError(
-                        f"equality delete {d.path} references dropped field "
-                        f"id(s) {missing}; cannot export a correct manifest"
-                    )
-                key_cols = [by_id[i] for i in d.equality_ids]
-            else:  # legacy entries: name-addressed
-                key_cols = list(d.equality_columns)
-            eq_deletes.append(
-                {
-                    "paths": _expand(d.path),
-                    "seq": d.sequence_number,
-                    "file_cols": list(d.equality_columns),
-                    "key_cols": key_cols,
-                }
-            )
-        else:
-            raise NotImplementedError(
-                f"unknown delete content={d.content} in {d.path}"
-            )
+        for sid in sorted({e["schema_id"] for e in data_entries})
+    ]
     return {
-        "data": data,
+        "data": [p for e in data_entries for p in e["paths"]],
         "data_entries": data_entries,
         "scan_groups": scan_groups,
-        "position_deletes": pos_deletes,
-        "equality_deletes": eq_deletes,
+        "position_deletes": [p for d in plan.position_deletes for p in _expand(d.path)],
+        "equality_deletes": [
+            {
+                "paths": _expand(d.path),
+                "seq": d.sequence_number,
+                "file_cols": d.file_cols,
+                "key_cols": d.key_cols,
+            }
+            for d in plan.equality_deletes
+        ],
     }
 
 
@@ -207,11 +154,11 @@ def duckdb_scan_sql(table: IceLiteTable, ref: str = "main") -> str:
         paths = ", ".join(_duck_path(p) for p in g["paths"])
         sel = ", ".join(
             (
-                f'"{s["src"]}" AS "{s["dst"]}"'
-                if s["src"] is not None
-                else f'{_duck_lit(s["default"])} AS "{s["dst"]}"'
+                f'"{c.source}" AS "{c.name}"'
+                if c.source is not None
+                else f'{_duck_lit(c.default)} AS "{c.name}"'
             )
-            for s in g["select"]
+            for c in g["select"]
         )
         # union_by_name even within one schema group: V3 variant shredding
         # appends a per-commit __typed_value sibling column whose struct
@@ -242,8 +189,8 @@ def duckdb_scan_sql(table: IceLiteTable, ref: str = "main") -> str:
     eq_conds: list[str] = []
     if manifest["equality_deletes"]:
         # per-concrete-file sequence numbers: equality deletes apply only
-        # to rows written BEFORE the delete (data_seq < delete_seq) — the
-        # same scoping tables/table.py applies on its own MoR read
+        # to rows written BEFORE the delete (data_seq < delete_seq), as in
+        # every IceLite reader (tables/scan.py)
         seq_rows = ", ".join(
             f"({_duck_path(_norm(p))}, {e['seq']})"
             for e in manifest["data_entries"]

@@ -460,7 +460,9 @@ def rewrite_position_deletes(table: IceLiteTable) -> dict:
             .filter(F.col("file_path").isin(live))
         )
         max_seq = max(d.sequence_number for d in pos)
+        # None when every delete points at a file no longer live
         entry = table._write_delete_file(dels, content=1, sequence_number=max_seq)
+        added = [entry] if entry is not None else []
         known = {d.path for d in pos}
 
         def mutate(meta: TableMetadata) -> TableMetadata:
@@ -473,12 +475,12 @@ def rewrite_position_deletes(table: IceLiteTable) -> dict:
                 meta,
                 "replace",
                 h.data_files,
-                keep + [entry],
+                keep + added,
                 h,
                 "main",
                 {
                     "rewritten-delete-files": len(known),
-                    "added-delete-files": 1,
+                    "added-delete-files": len(added),
                 },
             )
 
@@ -486,13 +488,14 @@ def rewrite_position_deletes(table: IceLiteTable) -> dict:
             table._commit(mutate)
             return {
                 "rewritten_delete_files_count": len(known),
-                "added_delete_files_count": 1,
+                "added_delete_files_count": len(added),
             }
         except _RewriteRestart:
             # the consolidated delete file written this attempt was never
             # committed — reclaim it now instead of leaving an orphan for
             # remove_orphan_files
-            shutil.rmtree(entry.path, ignore_errors=True)
+            for d in added:
+                shutil.rmtree(d.path, ignore_errors=True)
             continue
     raise CommitConflictError(
         "rewrite_position_deletes gave up after 5 restarts: concurrent "

@@ -16,6 +16,7 @@ import json
 from pyspark.sql import DataFrame
 
 from iceberg_matrix_spark.session import local_df
+from iceberg_matrix_spark.tables.scan import resolve_snapshot
 from iceberg_matrix_spark.tables.table import IceLiteTable
 
 
@@ -47,7 +48,7 @@ def snapshots(table: IceLiteTable) -> DataFrame:
 
 
 def files(table: IceLiteTable, snapshot_id: int | None = None) -> DataFrame:
-    snap = table._resolve_snapshot(snapshot_id=snapshot_id)
+    snap = resolve_snapshot(table.meta, snapshot_id)
     entries = snap.data_files if snap else []
     rows = [
         (
@@ -117,7 +118,7 @@ def all_files(table: IceLiteTable) -> DataFrame:
 
 
 def all_delete_files(table: IceLiteTable, snapshot_id: int | None = None) -> DataFrame:
-    snap = table._resolve_snapshot(snapshot_id=snapshot_id)
+    snap = resolve_snapshot(table.meta, snapshot_id)
     entries = snap.delete_files if snap else []
     rows = [
         (d.path, d.content, d.record_count, d.sequence_number, d.file_format,
@@ -141,7 +142,7 @@ def delete_files(table: IceLiteTable, snapshot_id: int | None = None) -> DataFra
 
 
 def partitions(table: IceLiteTable, snapshot_id: int | None = None) -> DataFrame:
-    snap = table._resolve_snapshot(snapshot_id=snapshot_id)
+    snap = resolve_snapshot(table.meta, snapshot_id)
     agg: dict[str, dict] = {}
     for f in snap.data_files if snap else []:
         key = json.dumps(f.partition, sort_keys=True, default=str)

@@ -26,6 +26,7 @@ Scale design notes
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 from dataclasses import replace
 
@@ -46,6 +47,14 @@ from iceberg_matrix_spark.tables.metadata import (
     TableSchema,
     commit_metadata,
     load_metadata,
+)
+from iceberg_matrix_spark.tables.scan import (
+    ScanPlan,
+    _physical_type,
+    plan_scan,
+    plan_snapshot,
+    prune_files,
+    pruning_spec,
 )
 from iceberg_matrix_spark.tables.transforms import (
     Transform,
@@ -212,6 +221,63 @@ def _type_str(t) -> str:
     return {"long": "bigint", "integer": "int"}.get(name, name)
 
 
+# Schema build steps: ``build(meta, fields) -> fields``, run by
+# IceLiteTable._evolve_schema alone or batched by _UpdateSchema.
+
+
+def _rename_field(old: str, new: str):
+    def build(meta, fields):
+        for f in fields:
+            if f.name == old:
+                f.name = new
+                return fields
+        raise KeyError(old)
+
+    return build
+
+
+def _drop_field(name: str):
+    def build(meta, fields):
+        out = [f for f in fields if f.name != name]
+        if len(out) == len(fields):
+            raise KeyError(name)
+        return out
+
+    return build
+
+
+def _widen_field(name: str, new_type: str):
+    def build(meta, fields):
+        for f in fields:
+            if f.name == name:
+                if (f.type, new_type) not in _WIDENINGS:
+                    raise ValueError(f"narrowing/unsupported: {f.type} → {new_type}")
+                f.type = new_type
+                return fields
+        raise KeyError(name)
+
+    return build
+
+
+def _spec_change(adds=(), removes=()):
+    """Commit mutation that drops the ``removes`` partition fields (spec
+    strings, matched after normalization) and then appends ``adds``."""
+
+    def mutate(meta: TableMetadata) -> TableMetadata:
+        for spec in removes:
+            normalized = parse_transform(spec).spec_string()
+            for i, existing in enumerate(meta.partition_spec):
+                if parse_transform(existing).spec_string() == normalized:
+                    meta.partition_spec.pop(i)
+                    break
+            else:
+                raise KeyError(spec)
+        meta.partition_spec.extend(adds)
+        return meta
+
+    return mutate
+
+
 class _UpdateSchema:
     """PyIceberg's schema-evolution idiom, literally
     (pyiceberg_feature_tests.py:343-350, update_column :371-372)::
@@ -230,73 +296,22 @@ class _UpdateSchema:
         self._committed = False
 
     def add_column(self, name, field_type, doc=None, required=False, default=None):
-        dtype = _type_str(field_type)
-        if default is not None and self._table.format_version < 3:
-            raise ValueError("column DEFAULT values require format-version 3")
-        if dtype in ("timestamp_ns", "variant", "geometry") and (
-            self._table.format_version < 3
-        ):
-            # same V3 gate as CREATE (catalog.py): adding a V3-only type
-            # to a v2 table would commit spec-invalid metadata
-            raise ValueError(
-                f"type {dtype!r} requires format-version 3 (column {name!r})"
-            )
-
-        def op(meta, fields):
-            if any(f.name == name for f in fields):
-                raise ValueError(f"column already exists: {name}")
-            meta.last_field_id += 1
-            fields.append(
-                SchemaField(
-                    id=meta.last_field_id,
-                    name=name,
-                    type=dtype,
-                    nullable=not required,
-                    initial_default=default,
-                    write_default=default,
-                )
-            )
-            return fields
-
-        self._ops.append(op)
+        defaults = {name: default} if default is not None else None
+        self._ops.append(
+            self._table._add_columns_op({name: _type_str(field_type)}, defaults, required)
+        )
         return self
 
     def rename_column(self, old: str, new: str):
-        def op(meta, fields):
-            for f in fields:
-                if f.name == old:
-                    f.name = new
-                    return fields
-            raise KeyError(old)
-
-        self._ops.append(op)
+        self._ops.append(_rename_field(old, new))
         return self
 
     def delete_column(self, name: str):
-        def op(meta, fields):
-            out = [f for f in fields if f.name != name]
-            if len(out) == len(fields):
-                raise KeyError(name)
-            return out
-
-        self._ops.append(op)
+        self._ops.append(_drop_field(name))
         return self
 
     def update_column(self, name: str, field_type):
-        new_type = _type_str(field_type)
-
-        def op(meta, fields):
-            for f in fields:
-                if f.name == name:
-                    if (f.type, new_type) not in _WIDENINGS:
-                        raise ValueError(
-                            f"narrowing/unsupported: {f.type} → {new_type}"
-                        )
-                    f.type = new_type
-                    return fields
-            raise KeyError(name)
-
-        self._ops.append(op)
+        self._ops.append(_widen_field(name, _type_str(field_type)))
         return self
 
     def commit(self) -> None:
@@ -349,6 +364,7 @@ class _UpdateSpec:
                 "custom partition field names are unsupported; the derived "
                 f"name for {spec!r} is {t.field_name!r}"
             )
+        self._table._validate_partition_source(spec)
         self._adds.append(spec)
         return self
 
@@ -364,29 +380,9 @@ class _UpdateSpec:
         self._committed = True
         if not (self._adds or self._removes):
             return
-        adds = list(self._adds)
-        for spec in adds:
-            parse_transform(spec)  # validate before committing anything
         by_name = {t.field_name: t.spec_string() for t in self._table._transforms()}
-        remove_specs = []
-        for name in self._removes:
-            if name in by_name:
-                remove_specs.append(by_name[name])
-            else:
-                remove_specs.append(parse_transform(name).spec_string())
-
-        def mutate(meta: TableMetadata) -> TableMetadata:
-            for norm in remove_specs:
-                for i, existing in enumerate(meta.partition_spec):
-                    if parse_transform(existing).spec_string() == norm:
-                        meta.partition_spec.pop(i)
-                        break
-                else:
-                    raise KeyError(norm)
-            meta.partition_spec.extend(adds)
-            return meta
-
-        self._table._commit(mutate)
+        removes = [by_name.get(name, name) for name in self._removes]
+        self._table._commit(_spec_change(self._adds, removes))
 
     def __enter__(self):
         return self
@@ -725,7 +721,11 @@ class IceLiteTable:
 
     def _write_delete_file(
         self, df: DataFrame, content: int, sequence_number: int, equality_columns=()
-    ) -> DeleteFileEntry:
+    ) -> DeleteFileEntry | None:
+        """Write ``df`` as one delete file. Returns None, and leaves no
+        file, when ``df`` has no rows: Iceberg never commits an empty
+        delete file, and each one would add a no-op join to every later
+        read."""
         by_name = {f.name: f.id for f in self.meta.current_schema.fields}
         unknown = [c for c in equality_columns if c not in by_name]
         if unknown:
@@ -744,6 +744,9 @@ class IceLiteTable:
         ]
         stats = _collect_file_stats(self.spark, files)
         rows = sum(s["rows"] for s in stats.values())
+        if rows == 0:
+            shutil.rmtree(path, ignore_errors=True)
+            return None
         # V3 MoR position deletes are deletion vectors in Puffin files in
         # real Iceberg (iceberg_feature_tests.py:1533-1537); IceLite emits
         # one consolidated parquet per commit and tags it PUFFIN to model
@@ -1019,28 +1022,6 @@ class IceLiteTable:
 
     # ----------------------------------------------------------------- reads
 
-    def _resolve_snapshot(
-        self,
-        snapshot_id: int | None = None,
-        as_of_timestamp_ms: int | None = None,
-        ref: str = "main",
-    ) -> Snapshot | None:
-        if snapshot_id is not None:
-            return self.meta.snapshot_by_id(snapshot_id)
-        if as_of_timestamp_ms is not None:
-            eligible = [
-                s for s in self.meta.snapshots if s.timestamp_ms <= as_of_timestamp_ms
-            ]
-            if not eligible:
-                raise ValueError(f"no snapshot at or before {as_of_timestamp_ms}")
-            return max(eligible, key=lambda s: (s.timestamp_ms, s.snapshot_id))
-        r = self.meta.refs.get(ref)
-        if r is None:
-            if ref == "main":
-                return None
-            raise KeyError(f"unknown ref {ref}")
-        return self.meta.snapshot_by_id(r.snapshot_id)
-
     def df(
         self,
         snapshot_id: int | None = None,
@@ -1055,29 +1036,15 @@ class IceLiteTable:
         ``with_lineage=True`` (V3 only) appends the hidden row-lineage
         columns ``_row_id`` and ``_last_updated_sequence_number``
         (iceberg_feature_tests.py:1483-1487)."""
-        snap = self._resolve_snapshot(snapshot_id, as_of_timestamp_ms, ref)
-        # Iceberg time-travel semantics: a snapshot/timestamp-pinned read
-        # returns the SNAPSHOT's schema (a later drop_column must not
-        # erase history; later adds must not appear). Branch/ref reads
-        # keep the current schema, also like Iceberg.
-        project_to = None
-        if (
-            (snapshot_id is not None or as_of_timestamp_ms is not None)
-            and snap is not None
-            and snap.schema_id is not None
-        ):
-            project_to = self.meta.schema_by_id(snap.schema_id)
+        plan = plan_scan(self.meta, snapshot_id, as_of_timestamp_ms, ref, filters)
         if not with_lineage:
-            return self._read_snapshot(snap, filters=filters, project_to=project_to)
+            return self._read_plan(plan)
         if self.format_version < 3:
             raise ValueError("row lineage requires format-version 3")
-        out = self._read_snapshot(snap, filters=filters, with_meta=True, with_seq=True)
+        out = self._read_plan(plan, with_meta=True, with_seq=True)
         fr_map = local_df(
             self.spark,
-            [
-                (_file_uri(f.path), f.first_row_id)
-                for f in (snap.data_files if snap else [])
-            ]
+            [(_file_uri(f.path), f.first_row_id) for f in plan.files]
             or [("", None)],
             f"{_META_FILE} string, __first_row_id long",
         )
@@ -1112,8 +1079,9 @@ class IceLiteTable:
                 f"{sorted(set(non_append))}; rewritten files would surface "
                 f"old rows as new — use snapshot_changes for CDC"
             )
-        files = [f for f in end.data_files if lo < f.sequence_number <= hi]
-        return self._read_files(files, with_meta=False)
+        plan = plan_snapshot(self.meta, end)
+        files = [f for f in plan.files if lo < f.sequence_number <= hi]
+        return self._read_files(replace(plan, files=files), with_meta=False)
 
     def snapshot_changes(
         self, start_snapshot_id: int, end_snapshot_id: int
@@ -1146,20 +1114,14 @@ class IceLiteTable:
         return prune_files(files, filters, *pruning_spec(self.meta))
 
     def _read_files(
-        self,
-        files: list[DataFileEntry],
-        with_meta: bool,
-        project_to: "TableSchema | None" = None,
-        with_seq: bool = False,
+        self, plan: ScanPlan, with_meta: bool, with_seq: bool = False
     ) -> DataFrame:
-        """Read a data-file list, resolving schema evolution by field ID.
-        ``project_to`` overrides the projection target (time-travel reads
-        use the SNAPSHOT's schema, like Iceberg's VERSION AS OF).
-        ``with_meta`` adds each row's file and position; ``with_seq``
-        (which needs ``with_meta``) adds its file's sequence number."""
-        current = project_to if project_to is not None else self.meta.current_schema
-        if not files:
-            base = self.spark.createDataFrame([], self._spark_schema(current))
+        """Read the plan's data files through their projections, without
+        deletes. ``with_meta`` adds each row's file and position;
+        ``with_seq`` (which needs ``with_meta``) adds its file's sequence
+        number."""
+        if not plan.files:
+            base = self.spark.createDataFrame([], self._spark_schema(plan.schema))
             if with_meta:
                 base = base.withColumns(
                     {
@@ -1172,7 +1134,7 @@ class IceLiteTable:
             return base
 
         by_schema: dict[int, list[DataFileEntry]] = {}
-        for f in files:
+        for f in plan.files:
             by_schema.setdefault(f.schema_id, []).append(f)
 
         parts = []
@@ -1180,19 +1142,12 @@ class IceLiteTable:
             file_schema = self.meta.schema_by_id(schema_id)
             reader = self.spark.read.schema(self._spark_schema(file_schema))
             raw = reader.parquet(*[f.path for f in group])
-            # field-ID projection: rename/cast/backfill to current schema
-            by_id = {f.id: f for f in file_schema.fields}
-            cols = []
-            for cf in current.fields:
-                old = by_id.get(cf.id)
-                if old is not None:
-                    cols.append(F.col(old.name).cast(_physical_type(cf.type)).alias(cf.name))
-                else:
-                    # field added after this file was written: V3 columns
-                    # with an initial-default read that value, others NULL
-                    cols.append(
-                        F.lit(cf.initial_default).cast(_physical_type(cf.type)).alias(cf.name)
-                    )
+            cols = [
+                (F.col(c.source) if c.source is not None else F.lit(c.default))
+                .cast(c.type)
+                .alias(c.name)
+                for c in plan.projections[schema_id]
+            ]
             if with_meta:
                 cols += [
                     F.col("_metadata.file_path").alias(_META_FILE),
@@ -1205,87 +1160,48 @@ class IceLiteTable:
         if with_seq:
             seq_map = local_df(
                 self.spark,
-                [(_file_uri(f.path), f.sequence_number) for f in files],
+                [(_file_uri(f.path), f.sequence_number) for f in plan.files],
                 f"{_META_FILE} string, {_META_SEQ} long",
             )
             out = out.join(F.broadcast(seq_map), _META_FILE, "left")
         return out
 
-    def _read_snapshot(
-        self,
-        snap: Snapshot | None,
-        with_meta: bool = False,
-        filters: list[tuple] | None = None,
-        project_to: "TableSchema | None" = None,
-        with_seq: bool = False,
+    def _read_snapshot(self, snap: Snapshot | None, with_meta: bool = False) -> DataFrame:
+        """The live rows of ``snap`` in the current schema."""
+        return self._read_plan(plan_snapshot(self.meta, snap), with_meta)
+
+    def _read_plan(
+        self, plan: ScanPlan, with_meta: bool = False, with_seq: bool = False
     ) -> DataFrame:
-        """The snapshot's live rows: data files minus position and
-        equality deletes.
+        """The plan's live rows: data files minus position and equality
+        deletes, filtered by the plan's filters.
 
         A plain read scans the data files and nothing else. The file and
         position columns (``__file``, ``__pos``) come from the parquet
-        ``_metadata`` column and are attached only when a position delete
-        or an equality delete must be resolved, or when the caller asks
-        for them with ``with_meta`` (DML finds the rows it rewrites or
-        deletes by them). The sequence-number join (``__seq``) is attached
-        only when an equality delete applies to some scanned file, i.e. a
-        file older than the delete, or when the caller asks for it with
-        ``with_seq`` (row lineage). Columns the caller did not ask for are
-        dropped before returning."""
-        if snap is None:
-            return self._read_files([], with_meta, project_to, with_seq)
-        files = snap.data_files
-        if filters:
-            files = self._prune_files(files, filters)
-        pos_deletes = [d for d in snap.delete_files if d.content == 1]
-        eq_deletes = [
-            d
-            for d in snap.delete_files
-            if d.content == 2
-            and any(f.sequence_number < d.sequence_number for f in files)
-        ]
-        need_seq = with_seq or bool(eq_deletes)
-        need_meta = with_meta or need_seq or bool(pos_deletes)
-        df = self._read_files(files, need_meta, project_to, need_seq)
+        ``_metadata`` column and are attached only when the plan has a
+        position or equality delete, or when the caller asks for them
+        with ``with_meta`` (DML finds the rows it rewrites or deletes by
+        them). The sequence-number join (``__seq``) is attached only when
+        the plan has an equality delete, or when the caller asks for it
+        with ``with_seq`` (row lineage). Columns the caller did not ask
+        for are dropped before returning."""
+        need_seq = with_seq or bool(plan.equality_deletes)
+        need_meta = with_meta or need_seq or bool(plan.position_deletes)
+        df = self._read_files(plan, need_meta, need_seq)
 
-        if pos_deletes:
+        if plan.position_deletes:
             dels = (
                 self.spark.read.schema(_POS_DELETE_SCHEMA)
-                .parquet(*[d.path for d in pos_deletes])
+                .parquet(*[d.path for d in plan.position_deletes])
                 .select(F.col("file_path").alias(_META_FILE), F.col("pos").alias(_META_POS))
             )
             df = df.join(F.broadcast(dels), [_META_FILE, _META_POS], "left_anti")
 
-        for d in eq_deletes:
-            # resolve the delete key by FIELD ID so renames after the
-            # delete was written still target the right column; the
-            # parquet delete file itself carries the write-time names
-            if d.equality_ids:
-                proj = project_to if project_to is not None else self.meta.current_schema
-                by_id = {f.id: f.name for f in proj.fields}
-                missing = [i for i in d.equality_ids if i not in by_id]
-                if missing:
-                    raise ValueError(
-                        f"equality delete {d.path} references field id(s) "
-                        f"{missing} that no longer exist in the current "
-                        f"schema — an equality-key column was dropped after "
-                        f"the delete was written; the delete cannot be "
-                        f"applied correctly"
-                    )
-                cur_cols = [by_id[i] for i in d.equality_ids]
-            else:  # legacy entries: name-addressed
-                cur_cols = list(d.equality_columns)
-            keys = self.spark.read.parquet(d.path).select(
-                *d.equality_columns
-            ).toDF(*cur_cols)
-            # equality deletes apply only to rows written BEFORE the
-            # delete, and match NULL-SAFELY: the Iceberg reader treats a
-            # delete row carrying NULL as matching data rows with NULL in
-            # that column (spec §Equality Delete Files; the reference's
-            # writers key on PK fields, flink_feature_tests.py:769-776,
-            # but the spec semantics are <=> not =)
+        for d in plan.equality_deletes:
+            # rows older than the delete whose keys match null-safely
+            keys = self.spark.read.parquet(d.path).select(*d.file_cols).toDF(*d.key_cols)
             cond = None
-            for c in cur_cols:
+            for c in d.key_cols:
                 piece = F.col(f"__eqdata.{c}").eqNullSafe(F.col(f"__eqdel.{c}"))
                 cond = piece if cond is None else (cond & piece)
             doomed = (
@@ -1300,9 +1216,8 @@ class IceLiteTable:
             df = df.drop(_META_SEQ)
         if need_meta and not with_meta:
             df = df.drop(_META_FILE, _META_POS)
-        if filters:
-            for col, op, val in filters:
-                df = df.filter(F.expr(f"{col} {'==' if op == '=' else op} {_sql_lit(val)}"))
+        for col, op, val in plan.filters:
+            df = df.filter(F.expr(f"{col} {'==' if op == '=' else op} {_sql_lit(val)}"))
         return df
 
     # ------------------------------------------------------------------- DML
@@ -1354,13 +1269,7 @@ class IceLiteTable:
                     F.col(_META_FILE).alias("file_path"), F.col(_META_POS).alias("pos")
                 )
                 entry = self._write_delete_file(hits, content=1, sequence_number=seq)
-                if entry.record_count == 0:
-                    # Iceberg never commits empty delete files — each one
-                    # would tax EVERY future read with a no-op anti-join
-                    # (an idempotent cleanup job could accrete hundreds)
-                    import shutil as _shutil  # noqa: PLC0415
-
-                    _shutil.rmtree(entry.path, ignore_errors=True)
+                if entry is None:
                     return self._snapshot(
                         meta, "delete", parent.data_files, parent.delete_files,
                         parent, branch,
@@ -1431,6 +1340,11 @@ class IceLiteTable:
                     F.col(_META_FILE).alias("file_path"), F.col(_META_POS).alias("pos")
                 )
                 dentry = self._write_delete_file(dels, content=1, sequence_number=seq)
+                if dentry is None:
+                    return self._snapshot(
+                        meta, "overwrite", parent.data_files, parent.delete_files,
+                        parent, branch,
+                    )
                 updated = apply_set(matched.drop(_META_FILE, _META_POS))
                 added = self._write_data_files(updated, meta.current_schema_id, seq, meta=meta)
                 return self._snapshot(
@@ -1488,7 +1402,7 @@ class IceLiteTable:
         ``on`` references aliases ``t`` (target) and ``s`` (source);
         ``matched_update`` maps target column → expression over t/s.
 
-        Full clause grammar (round 8): ``matched_clauses`` /
+        Full clause grammar: ``matched_clauses`` /
         ``not_matched_by_source_clauses`` are ORDERED lists of
         ``(condition | None, action)`` with action ``("update", {col:
         expr})`` or ``("delete",)`` — per row, the first clause whose
@@ -1722,14 +1636,18 @@ class IceLiteTable:
                 keys, content=2, sequence_number=seq, equality_columns=key_columns
             )
             added = self._write_data_files(dedup, meta.current_schema_id, seq, meta=meta)
+            deletes = [dentry] if dentry is not None else []
             return self._snapshot(
                 meta,
                 "overwrite",
                 (parent.data_files if parent else []) + added,
-                (parent.delete_files if parent else []) + [dentry],
+                (parent.delete_files if parent else []) + deletes,
                 parent,
                 branch,
-                {"added-equality-deletes": dentry.record_count, **(extra_summary or {})},
+                {
+                    "added-equality-deletes": sum(d.record_count for d in deletes),
+                    **(extra_summary or {}),
+                },
             )
 
         self._commit(mutate)
@@ -1765,6 +1683,16 @@ class IceLiteTable:
         """ALTER TABLE ADD COLUMNS — old rows read NULL, or the V3
         initial-default when one is given (iceberg_feature_tests.py:708-711
         and :771-776 `val STRING DEFAULT 'hello'`)."""
+        self._evolve_schema(self._add_columns_op(columns, defaults))
+
+    def _add_columns_op(
+        self,
+        columns: dict[str, str],
+        defaults: dict[str, object] | None = None,
+        required: bool = False,
+    ):
+        """Check ``columns`` against the format version, then return the
+        schema build step that adds them."""
         if defaults and self.format_version < 3:
             raise ValueError("column DEFAULT values require format-version 3")
         for name, dtype in columns.items():
@@ -1786,46 +1714,24 @@ class IceLiteTable:
                         id=meta.last_field_id,
                         name=name,
                         type=dtype,
+                        nullable=not required,
                         initial_default=dflt,
                         write_default=dflt,
                     )
                 )
             return fields
 
-        self._evolve_schema(build)
+        return build
 
     def rename_column(self, old: str, new: str) -> None:
-        def build(meta, fields):
-            for f in fields:
-                if f.name == old:
-                    f.name = new
-                    return fields
-            raise KeyError(old)
-
-        self._evolve_schema(build)
+        self._evolve_schema(_rename_field(old, new))
 
     def drop_column(self, name: str) -> None:
-        def build(meta, fields):
-            out = [f for f in fields if f.name != name]
-            if len(out) == len(fields):
-                raise KeyError(name)
-            return out
-
-        self._evolve_schema(build)
+        self._evolve_schema(_drop_field(name))
 
     def alter_column_type(self, name: str, new_type: str) -> None:
         """Type widening only (int→bigint, float→double, int→double)."""
-
-        def build(meta, fields):
-            for f in fields:
-                if f.name == name:
-                    if (f.type, new_type) not in _WIDENINGS:
-                        raise ValueError(f"narrowing/unsupported: {f.type} → {new_type}")
-                    f.type = new_type
-                    return fields
-            raise KeyError(name)
-
-        self._evolve_schema(build)
+        self._evolve_schema(_widen_field(name, new_type))
 
     # --------------------------------------------------- partition evolution
 
@@ -1844,23 +1750,10 @@ class IceLiteTable:
         """ALTER TABLE ADD PARTITION FIELD (iceberg_feature_tests.py:968) —
         metadata-only; existing files keep their old layout."""
         self._validate_partition_source(spec)
-
-        def mutate(meta: TableMetadata) -> TableMetadata:
-            meta.partition_spec.append(spec)
-            return meta
-
-        self._commit(mutate)
+        self._commit(_spec_change(adds=[spec]))
 
     def drop_partition_field(self, spec: str) -> None:
-        def mutate(meta: TableMetadata) -> TableMetadata:
-            normalized = parse_transform(spec).spec_string()
-            for i, existing in enumerate(meta.partition_spec):
-                if parse_transform(existing).spec_string() == normalized:
-                    meta.partition_spec.pop(i)
-                    return meta
-            raise KeyError(spec)
-
-        self._commit(mutate)
+        self._commit(_spec_change(removes=[spec]))
 
     def replace_partition_field(self, old: str, new: str) -> None:
         """REPLACE PARTITION FIELD (redshift suite :1308-1328). The new
@@ -2130,122 +2023,6 @@ def _head(meta: TableMetadata, ref: str = "main") -> Snapshot | None:
     return meta.snapshot_by_id(r.snapshot_id) if r else None
 
 
-# V3 logical types → physical storage type (Spark simpleString).
-_PHYSICAL_TYPES = {
-    "timestamp_ns": "bigint",
-    "variant": "string",
-    # V3 geometry: WKB bytes physically (functions/geo.py is the codec);
-    # the typed column is the Flink-DDL surface, flink_feature_tests.py:1459
-    "geometry": "binary",
-}
-
-
-def _physical_type(logical: str) -> str:
-    return _PHYSICAL_TYPES.get(logical, logical)
-
-
-def prune_files(
-    files: list[DataFileEntry],
-    filters: list[tuple],
-    transforms: list[Transform],
-    types: dict[str, str] | None = None,
-) -> list[DataFileEntry]:
-    """Manifest-level file skipping: partition-transform projection +
-    column min/max bounds (SURVEY §4). ``filters`` are simple
-    conjunctive predicates (col, op, literal); anything not prunable
-    is left to the parquet scan's pushdown. Standalone so the batch
-    Python DataSource (sources/batch_source.py) can prune without a
-    SparkSession.
-
-    ``types`` maps a column to its physical type. A ``bucket`` field
-    prunes only an equality predicate, and only when ``types`` gives
-    the column's type (the hash input depends on it); without
-    ``types`` bucket fields never prune. :func:`pruning_spec` gives the
-    transforms and types that are safe for a table's files."""
-    by_source = {t.source: t for t in transforms}
-    types = types or {}
-    kept = []
-    for f in files:
-        alive = True
-        for col, op, val in filters:
-            # partition projection
-            t = by_source.get(col)
-            if t is not None and t.field_name in f.partition:
-                pv = f.partition[t.field_name]
-                # a hash is not order-preserving: bucket projects only "="
-                proj = (
-                    t.project_value(val, types.get(col))
-                    if op == "=" or t.kind != "bucket"
-                    else None
-                )
-                if proj is not None and pv is not None:
-                    # identity: partition value IS the column value, so
-                    # strict ops prune strictly; other transforms map a
-                    # range of column values onto one partition value, so
-                    # a file at the boundary must be kept
-                    ident = t.kind == "identity"
-                    if op == "=" and not _cmp_ok(pv, "=", proj):
-                        alive = False
-                    elif op in (">", ">=") and not _cmp_ok(
-                        pv, op if ident else ">=", proj
-                    ):
-                        alive = False
-                    elif op in ("<", "<=") and not _cmp_ok(
-                        pv, op if ident else "<=", proj
-                    ):
-                        alive = False
-            # column bounds
-            lo = f.lower_bounds.get(col)
-            hi = f.upper_bounds.get(col)
-            if lo is not None and hi is not None:
-                if op == "=" and not (_cmp_ok(hi, ">=", val) and _cmp_ok(lo, "<=", val)):
-                    alive = False
-                elif op in (">", ">=") and not _cmp_ok(hi, ">=", val):
-                    alive = False
-                elif op in ("<", "<=") and not _cmp_ok(lo, "<=", val):
-                    alive = False
-        if alive:
-            kept.append(f)
-    return kept
-
-
-def pruning_spec(meta: TableMetadata) -> tuple[list[Transform], dict[str, str]]:
-    """The transforms and column types that :func:`prune_files` may trust
-    for every data file of the table. A file records its partition
-    values, not the spec or schema that produced them, so two cases are
-    left out rather than pruned wrongly:
-
-    - a bucket or truncate field whose argument ever changed:
-      ``bucket(4, id)`` and ``bucket(8, id)`` both write ``id_bucket``.
-      Without a ``partition_history`` (older metadata) no such field is
-      trusted;
-    - the type of a column whose physical type differs between schemas:
-      an int widened to bigint was hashed as 4 bytes in older files and
-      as 8 in newer ones."""
-    history = meta.partition_history
-    specs: dict[str, set[str]] = {}
-    for spec in (history or []) + meta.partition_spec:
-        t = parse_transform(spec)
-        specs.setdefault(t.field_name, set()).add(t.spec_string())
-    transforms = [
-        t
-        for t in map(parse_transform, meta.partition_spec)
-        if t.kind not in ("bucket", "truncate")
-        or (history is not None and len(specs[t.field_name]) == 1)
-    ]
-    types = {}
-    for cf in meta.current_schema.fields:
-        seen = {
-            _physical_type(f.type)
-            for s in meta.schemas
-            for f in s.fields
-            if f.id == cf.id or f.name == cf.name
-        }
-        if len(seen) == 1:
-            types[cf.name] = seen.pop()
-    return transforms, types
-
-
 def _file_uri(path: str) -> str:
     """Spark's _metadata.file_path form for a local path (Hadoop-style
     single-slash scheme: ``file:/tmp/...``)."""
@@ -2257,38 +2034,6 @@ def _sql_lit(val) -> str:
         escaped = val.replace("'", "''")
         return f"'{escaped}'"
     return str(val)
-
-
-def _cmp_ok(a, op: str, b) -> bool:
-    try:
-        a2, b2 = _coerce(a, b)
-        if op == "=":
-            return a2 == b2
-        if op == ">=":
-            return a2 >= b2
-        if op == "<=":
-            return a2 <= b2
-        if op == ">":
-            return a2 > b2
-        if op == "<":
-            return a2 < b2
-    except TypeError:
-        return True  # incomparable → keep the file (pruning must be safe)
-    return True
-
-
-def _coerce(a, b):
-    # Only compare like with like: coercing a numeric to str made range
-    # pruning lexicographic ('10.5' < '9.0') and wrongly dropped files.
-    # Cross-type pairs are incomparable → TypeError → caller keeps the file.
-    num = (int, float)
-    if isinstance(a, str) and isinstance(b, str):
-        return a, b
-    if isinstance(a, num) and isinstance(b, num) and not isinstance(a, bool) and not isinstance(b, bool):
-        return a, b
-    if type(a) is type(b):
-        return a, b
-    raise TypeError(f"incomparable partition/bound types: {type(a)} vs {type(b)}")
 
 
 def _partition_from_path(rel_path: str) -> dict[str, object]:
@@ -2325,7 +2070,7 @@ def _partition_from_path(rel_path: str) -> dict[str, object]:
 # it the read fans out to executors. Footers are a few KB each, so the
 # crossover is dominated by fixed job cost, not bytes: an RDD job with
 # Python workers costs ~0.2-0.4 s regardless of size, while a driver
-# footer read is ~1 ms/file — measured round 11 on the bench DML quartet
+# footer read is ~1 ms/file — measured on the bench DML quartet
 # (merge/wap/zorder/branch), whose commits write 1-2 files each. At
 # production commit sizes (thousands of files per commit) the distributed
 # path engages unchanged.

@@ -247,3 +247,35 @@ def test_null_keyed_equality_delete_through_batch_source(spark, cat):
         for r in spark.read.format("icelite").load(t.location).collect()
     }
     assert got == {None: 9, 7: 2}
+
+
+def test_empty_table_reads_no_rows(spark, cat):
+    """An empty plan: PySpark hands ``read`` one partition of None."""
+    t = cat.create_table("bs.empty", "id bigint, v string")
+    got = _read(spark, t.location)
+    assert got.columns == ["id", "v"]
+    assert got.collect() == []
+
+
+def test_filter_pruning_every_file_reads_no_rows(spark, cat):
+    from pyspark.sql.datasource import GreaterThan
+
+    t = cat.create_table("bs.allpruned", "id bigint, v string")
+    t.append(local_df(spark, [(1, "a"), (2, "b")], "id bigint, v string"))
+    reader = IceLiteBatchReader({"path": t.location})
+    list(reader.pushFilters([GreaterThan(("id",), 100)]))
+    assert reader.partitions() == []
+    assert _read(spark, t.location).filter("id > 100").collect() == []
+
+
+def test_unknown_ref_raises_key_error(spark, cat):
+    """The batch source resolves refs like ``tb.df(ref=...)``: an unknown
+    ref fails planning instead of reading as an empty table."""
+    t = cat.create_table("bs.badref", "id bigint")
+    t.append(spark.range(2))
+    with pytest.raises(KeyError, match="unknown ref nope"):
+        t.df(ref="nope")
+    with pytest.raises(KeyError, match="unknown ref nope"):
+        IceLiteBatchReader({"path": t.location, "ref": "nope"}).partitions()
+    with pytest.raises(Exception, match="KeyError: 'unknown ref nope'"):
+        _read(spark, t.location, ref="nope").collect()

@@ -397,7 +397,7 @@ def test_properties_roundtrip(spark, catalog):
     assert t.properties["write.parquet.bloom-filter-enabled.column.id"] == "true"
 
 
-# ------------------------------------------------- round-2 regression fixes
+# ------------------------------------------------------- regression fixes
 
 
 def test_delete_cow_keeps_rows_where_predicate_is_null(spark, catalog):
@@ -752,6 +752,21 @@ def test_pyiceberg_update_schema_idiom(spark, catalog):
     assert _type_str(StringType()) == "string"
     assert _type_str(LongType()) == "bigint"
     assert versions_before < t.version
+
+
+def test_update_spec_rejects_ghost_source_column(spark, catalog):
+    """update_spec() validates a new field's source column the way
+    add_partition_field does: nothing is committed and the table stays
+    writable."""
+    t = catalog.create_table("ns.ghost", "id bigint")
+    v = t.version
+    with pytest.raises(ValueError, match="not in schema: 'ghost'"):
+        with t.update_spec() as update:
+            update.add_field("ghost", "bucket(4)")
+    assert t.version == v
+    assert t.refresh().meta.partition_spec == []
+    t.append(spark.range(3))
+    assert t.df().count() == 3
 
 
 def test_pyiceberg_update_spec_and_manage_snapshots(spark, catalog):

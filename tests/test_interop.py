@@ -71,6 +71,16 @@ def test_equality_deletes_exported_with_sequence_scope(spark, catalog):
     assert got == expected == {(1, 2), (2, 9)}
 
 
+def test_manifest_lists_only_equality_deletes_that_apply(spark, catalog):
+    """The manifest is the scan plan: an equality delete no older file
+    precedes (the first upsert into an empty table) is left out."""
+    t = catalog.create_table("ns.eqfirst", "id bigint, v bigint")
+    t.upsert(local_df(spark, [(1, 1)], "id bigint, v bigint"), ["id"])
+    assert [d.content for d in t.current_snapshot().delete_files] == [2]
+    assert live_file_manifest(t)["equality_deletes"] == []
+    assert [(r["id"], r["v"]) for r in read_with_duckdb(t).to_pylist()] == [(1, 1)]
+
+
 def test_time_travel_ref_manifest(spark, catalog):
     """Manifest of an older branch state excludes later files."""
     t = catalog.create_table("ns.tt", "id bigint")

@@ -62,6 +62,17 @@ def test_point_read_with_position_deletes_runs_two_jobs(spark, table):
     assert len(jobs) <= 2
 
 
+def test_update_matching_nothing_commits_no_delete_file(spark, table):
+    """A merge-on-read update with no match adds no (empty) delete file,
+    so later point reads stay at one job."""
+    before = table.current_snapshot().delete_files
+    table.update({"v": "'x'"}, where="id < 0")
+    assert table.current_snapshot().delete_files == before
+    rows, jobs = _jobs(spark, "read-jobs-noop-update", _point(table, 17))
+    assert rows == [(17, "v17")]
+    assert len(jobs) == 1
+
+
 def test_equality_delete_and_lineage_reads_match_the_model(spark, table):
     """The reads that still need __seq: an equality delete older than some
     files, and row lineage."""
