@@ -13,18 +13,13 @@ import re
 import shutil
 
 from iceberg_matrix_spark.tables.metadata import TableMetadata
-from iceberg_matrix_spark.tables.table import IceLiteTable, _head
-
-
-class CommitConflictError(RuntimeError):
-    """A rewrite exhausted its retries against concurrent commits — the
-    PUBLIC failure signal callers catch (the private ``_RewriteRestart``
-    sentinel is control flow and never escapes)."""
-
-
-class _RewriteRestart(Exception):
-    """Concurrent row-level deletes landed mid-rewrite; restart from the
-    new head (Iceberg's rewrite aborts on conflicting deletes too)."""
+from iceberg_matrix_spark.tables.table import (
+    _POS_DELETE_SCHEMA,
+    IceLiteTable,
+    _file_uri,
+    _head,
+    _Staged,
+)
 
 
 def _zorder_expr(live, columns: list[str], bits: int | None = None):
@@ -133,22 +128,20 @@ def rewrite_data_files(
       min/max bounds tighten on EVERY z-dimension at once — multi-column
       predicates prune files that a single-column sort cannot.
 
-    Concurrency contract (what lets this run inside a live streaming job,
-    flink_feature_tests.py:1100-1172): the expensive rewrite happens ONCE,
-    before the commit loop; the commit then replaces only the captured
-    victim files in whatever head exists at commit time, so concurrent
-    APPENDS merge cleanly instead of forcing a re-write. Concurrent
-    row-level DELETES against the victim set abort and restart the whole
-    rewrite — same as Iceberg's conflicting-delete validation."""
+    Concurrency (what lets this run inside a live streaming job,
+    flink_feature_tests.py:1100-1172) follows the commit contract in
+    tables/metadata.py: the rewrite replaces only the captured victim
+    files, so concurrent appends re-base it. It restarts when a victim
+    left the head or a newer delete file landed, the same as Iceberg's
+    conflicting-delete validation."""
 
     from pyspark.sql import functions as F
 
     if strategy not in ("binpack", "sort", "zorder"):
         raise ValueError(f"unknown rewrite strategy: {strategy!r}")
 
-    for _attempt in range(5):
-        table.refresh()
-        parent = table._current_snapshot()
+    def write(meta: TableMetadata) -> _Staged:
+        parent = _head(meta)
         if parent is None:
             raise ValueError("nothing to compact")
         live = table._read_snapshot(parent, with_meta=False)
@@ -197,94 +190,46 @@ def rewrite_data_files(
             # write.target-file-size-bytes so compaction emits ~target-
             # sized files instead of one file per input split
             target_bytes = int(
-                table.meta.properties.get(
+                meta.properties.get(
                     "write.target-file-size-bytes", str(512 * 1024 * 1024)
                 )
             )
             total = sum(f.file_size_bytes for f in parent.data_files)
             n = max(1, -(-total // max(target_bytes, 1)))
             live = live.coalesce(n)
-        # heavy distributed write, outside the optimistic-commit loop.
-        # (No meta= here: the commit's meta object doesn't exist yet, so a
-        # shred-enabled table whose schema was never cached by an append
-        # re-infers per compaction — one bounded 256-row-sample job, noise
-        # next to the rewrite itself. When an append HAS cached the
-        # schema, this read uses it, keeping files consistent.)
-        entries = table._write_data_files(
-            live, table.meta.current_schema_id, parent.sequence_number + 1
+        # every delete file is applied by the read above, so the snapshot
+        # drops them all along with the victims
+        staged = _Staged(
+            "replace",
+            replaces={
+                _file_uri(f.path) for f in parent.data_files + parent.delete_files
+            },
         )
-        victims = {f.path for f in parent.data_files}
-        base_seq = parent.sequence_number
+        table._write_data_files(live, staged)
+        staged.summary = {
+            "rewritten-data-files": len(parent.data_files),
+            "added-data-files-compact": len(staged.data_files),
+        }
+        return staged
 
-        def mutate(meta: TableMetadata) -> TableMetadata:
-            head = _head(meta)
-            if any(d.sequence_number > base_seq for d in head.delete_files):
-                raise _RewriteRestart()
-            # a concurrent COPY-ON-WRITE delete/update (or another rewrite)
-            # REPLACES victim files without adding delete files — if any
-            # victim vanished from the head, committing our rewritten copy
-            # of it would resurrect its deleted rows and duplicate its
-            # survivors. Restart against the new head.
-            if victims - {f.path for f in head.data_files}:
-                raise _RewriteRestart()
-            meta.last_sequence_number += 1
-            for e in entries:
-                e.sequence_number = meta.last_sequence_number
-                # a failed attempt's _snapshot may have assigned V3 row-id
-                # ranges that a concurrent winner also consumed; reset so
-                # the retry draws fresh ids from the refreshed metadata
-                e.first_row_id = None
-            keep = [f for f in head.data_files if f.path not in victims]
-            # the delete-conflict guard above means every surviving delete
-            # file targeted only victim files — all dead after the rewrite
-            return table._snapshot(
-                meta,
-                "replace",
-                keep + entries,
-                [],
-                head,
-                "main",
-                {
-                    "rewritten-data-files": len(victims),
-                    "added-data-files-compact": len(entries),
-                },
-            )
+    def moved(before, now) -> bool:
+        # A concurrent copy-on-write delete/update (or another rewrite)
+        # replaces victim files without adding delete files: committing
+        # our copy of a vanished victim would resurrect its deleted rows
+        # and duplicate its survivors. A newer delete file would be
+        # dropped unapplied.
+        return bool(
+            {f.path for f in before.data_files} - {f.path for f in now.data_files}
+        ) or any(d.sequence_number > before.sequence_number for d in now.delete_files)
 
-        try:
-            table._commit(mutate)
-            break
-        except _RewriteRestart:
-            # this attempt's rewritten files were never committed —
-            # reclaim them now instead of leaving a full table copy per
-            # restart for remove_orphan_files
-            for d in {_commit_dir_of(e.path, table.location) for e in entries}:
-                shutil.rmtree(d, ignore_errors=True)
-            continue
-    else:
-        raise CommitConflictError(
-            "rewrite_data_files gave up after 5 restarts: concurrent "
-            "row-level changes kept landing mid-rewrite (the final "
-            "attempt's uncommitted output is reclaimed by "
-            "remove_orphan_files)"
-        )
-
-    snap = table._current_snapshot()
+    table.refresh()
+    snap = _head(table._commit_write(write, moved=moved))
     return {
         "rewritten_data_files_count": int(snap.summary["rewritten-data-files"]),
         # NOT len(snap.data_files): concurrent appends merged past this
         # commit also live in the snapshot
         "added_data_files_count": int(snap.summary["added-data-files-compact"]),
     }
-
-
-def _commit_dir_of(path: str, location: str) -> str:
-    """The data/c-<uuid> commit dir containing ``path`` (entry paths are
-    part files, possibly under partition subdirectories)."""
-    droot = os.path.join(location, "data")
-    p = os.path.dirname(path)
-    while os.path.dirname(p) != droot and os.path.dirname(p) != p:
-        p = os.path.dirname(p)
-    return p
 
 
 def expire_snapshots(
@@ -353,9 +298,9 @@ def remove_orphan_files(
     - the handle is refreshed first, so files committed since the handle
       was loaded are seen as referenced, not orphaned;
     - only files last modified before ``older_than_ms`` are removed —
-      default 3 days ago, Iceberg's default — because DML and rewrites
-      deliberately write parquet BEFORE their optimistic-commit loop;
-      an in-flight writer's pre-commit output is young, not orphaned.
+      default 3 days ago, Iceberg's default — because every write stages
+      its files before it commits (the contract in tables/metadata.py);
+      an in-flight writer's staged output is young, not orphaned.
     """
     import time as _time
 
@@ -435,72 +380,51 @@ def rewrite_position_deletes(table: IceLiteTable) -> dict:
     inputs per scan — consolidation restores O(1). Dangling entries
     pointing at data files no longer in the head snapshot are dropped.
 
-    Concurrency contract mirrors rewrite_data_files: the distributed
-    dedup+write happens once, before the commit loop; the commit restarts
-    if the head's position-delete set changed (a concurrent MoR DELETE
-    landed), and merges cleanly past concurrent appends.
+    Concurrency follows the commit contract in tables/metadata.py:
+    concurrent appends re-base the consolidation, and a change to the
+    head's position-delete set (a concurrent MoR DELETE) restarts it.
     """
     import pyspark.sql.functions as F
 
-    from iceberg_matrix_spark.tables.table import _POS_DELETE_SCHEMA, _file_uri
+    def positions(snap) -> list[str]:
+        return [d.path for d in snap.delete_files if d.content == 1]
 
-    for _attempt in range(5):
-        table.refresh()
-        head = table._current_snapshot()
-        if head is None:
-            raise ValueError("nothing to rewrite: empty table")
-        pos = [d for d in head.delete_files if d.content == 1]
-        if len(pos) <= 1:
-            return {"rewritten_delete_files_count": 0, "added_delete_files_count": 0}
-        live = sorted(_file_uri(f.path) for f in head.data_files)
-        dels = (
-            table.spark.read.schema(_POS_DELETE_SCHEMA)
-            .parquet(*[d.path for d in pos])
-            .distinct()
-            .filter(F.col("file_path").isin(live))
-        )
-        max_seq = max(d.sequence_number for d in pos)
-        # None when every delete points at a file no longer live
-        entry = table._write_delete_file(dels, content=1, sequence_number=max_seq)
-        added = [entry] if entry is not None else []
-        known = {d.path for d in pos}
+    table.refresh()
+    head = table._current_snapshot()
+    if head is None:
+        raise ValueError("nothing to rewrite: empty table")
+    if len(positions(head)) <= 1:
+        return {"rewritten_delete_files_count": 0, "added_delete_files_count": 0}
 
-        def mutate(meta: TableMetadata) -> TableMetadata:
-            h = _head(meta)
-            if {d.path for d in h.delete_files if d.content == 1} != known:
-                raise _RewriteRestart()  # concurrent MoR delete: recompute
-            keep = [d for d in h.delete_files if d.content != 1]
-            meta.last_sequence_number += 1
-            return table._snapshot(
-                meta,
-                "replace",
-                h.data_files,
-                keep + added,
-                h,
-                "main",
-                {
-                    "rewritten-delete-files": len(known),
-                    "added-delete-files": len(added),
-                },
+    def write(meta: TableMetadata) -> _Staged:
+        h = _head(meta)
+        pos = positions(h)
+        staged = _Staged("replace", replaces={_file_uri(p) for p in pos})
+        if pos:
+            live = sorted(_file_uri(f.path) for f in h.data_files)
+            dels = (
+                table.spark.read.schema(_POS_DELETE_SCHEMA)
+                .parquet(*pos)
+                .distinct()
+                .filter(F.col("file_path").isin(live))
             )
+            # adds nothing when every delete points at a file no longer live
+            table._write_delete_file(dels, 1, staged)
+        staged.summary = {
+            "rewritten-delete-files": len(pos),
+            "added-delete-files": len(staged.delete_files),
+        }
+        return staged
 
-        try:
-            table._commit(mutate)
-            return {
-                "rewritten_delete_files_count": len(known),
-                "added_delete_files_count": len(added),
-            }
-        except _RewriteRestart:
-            # the consolidated delete file written this attempt was never
-            # committed — reclaim it now instead of leaving an orphan for
-            # remove_orphan_files
-            for d in added:
-                shutil.rmtree(d.path, ignore_errors=True)
-            continue
-    raise CommitConflictError(
-        "rewrite_position_deletes gave up after 5 restarts: concurrent "
-        "MoR deletes kept landing mid-consolidation"
+    snap = _head(
+        table._commit_write(
+            write, moved=lambda before, now: set(positions(before)) != set(positions(now))
+        )
     )
+    return {
+        "rewritten_delete_files_count": int(snap.summary["rewritten-delete-files"]),
+        "added_delete_files_count": int(snap.summary["added-delete-files"]),
+    }
 
 
 def compute_table_statistics(table: IceLiteTable, columns: list[str] | None = None) -> dict:

@@ -11,6 +11,30 @@ Commit protocol: each commit writes ``metadata/v{N}.metadata.json`` with
 ``open(..., 'x')`` (create-exclusive). A concurrent writer racing to the
 same N loses and must re-read + retry — optimistic concurrency like
 Iceberg's catalog swap, with the filesystem as the arbiter.
+
+Every snapshot-producing op (append, add_files, overwrite, delete,
+update, merge, upsert, cherrypick and the two maintenance rewrites)
+commits through ``IceLiteTable._commit_write`` under one contract, the
+one Iceberg states as "write the files once, retry only the metadata
+swap" (https://iceberg.apache.org/spec/#optimistic-concurrency):
+
+1. **Stage once.** The op's write step runs its Spark work once, before
+   the commit loop. It returns the staged data and delete entries, the
+   head files they replace, the directories it wrote and any table
+   property updates (the inferred variant-shred schemas).
+2. **Apply.** ``IceLiteTable._snapshot`` applies the staged entries to
+   whatever head exists at commit time. It is the only place that
+   assigns sequence numbers and V3 ``first_row_id`` ranges.
+3. **Re-base or restart.** On :class:`CommitConflict` the loop refreshes
+   and re-applies, which re-bases the op onto the new head. When the
+   metadata the write read has moved, the staged directories are deleted
+   and the write runs again. "Moved" means the current schema or
+   partition spec for every op, the branch head for ops that read the
+   table (delete, update, merge, overwrite), and the victim and
+   delete-set checks for ``rewrite_data_files`` and
+   ``rewrite_position_deletes``. Blind ops (append, add_files, upsert,
+   cherrypick) re-base without rewriting. A write whose commit fails
+   deletes what it staged, so an uncommitted op leaves no files behind.
 """
 
 from __future__ import annotations
@@ -51,7 +75,7 @@ class DeleteFileEntry:
     path: str
     content: int  # 1 = position deletes, 2 = equality deletes
     record_count: int
-    sequence_number: int
+    sequence_number: int = 0
     file_format: str = "PARQUET"  # "PUFFIN" marks V3 deletion vectors
     equality_columns: list[str] = field(default_factory=list)
     # FIELD IDS of the equality columns (Iceberg's equality_ids): the

@@ -28,7 +28,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from dataclasses import replace
+from dataclasses import dataclass, field, replace
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -161,6 +161,27 @@ def _merge_json_type(a: "T.DataType", b: "T.DataType") -> "T.DataType":
     if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
         return T.ArrayType(_merge_json_type(a.elementType, b.elementType))
     return T.StringType()
+
+
+@dataclass
+class _Staged:
+    """What one write step produced, for ``IceLiteTable._snapshot`` to
+    apply to whatever head exists at commit time."""
+
+    operation: str
+    data_files: list[DataFileEntry] = field(default_factory=list)
+    delete_files: list[DeleteFileEntry] = field(default_factory=list)
+    # head data and delete files (as file: URIs) the snapshot drops
+    replaces: set[str] = field(default_factory=set)
+    # directories the write created; deleted when they are not committed
+    reclaim: list[str] = field(default_factory=list)
+    # table properties that ride the commit (inferred variant-shred DDL)
+    properties: dict[str, str] = field(default_factory=dict)
+    summary: dict = field(default_factory=dict)
+
+    def discard(self) -> None:
+        for d in self.reclaim:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def _now_ms() -> int:
@@ -513,10 +534,11 @@ class IceLiteTable:
     # racing writers from re-colliding in lockstep.
     _COMMIT_RETRIES = 20
 
-    def _commit(self, mutate) -> None:
-        """Optimistic commit loop: re-read + re-apply on conflict. The
-        mutation runs on a deep copy so a mid-mutate failure can't leave
-        the in-memory metadata half-updated."""
+    def _commit(self, mutate) -> TableMetadata:
+        """Optimistic commit loop: re-read + re-apply on conflict, and
+        return the metadata that committed. The mutation runs on a deep
+        copy of ``self.meta`` so a mid-mutate failure can't leave the
+        in-memory metadata half-updated."""
         import copy
         import random
         import time
@@ -526,13 +548,44 @@ class IceLiteTable:
                 meta = mutate(copy.deepcopy(self.meta))
                 self.version = commit_metadata(self.location, meta, self.version)
                 self.meta = meta
-                return
+                return meta
             except CommitConflict:
                 self.refresh()
                 time.sleep(random.uniform(0, 0.02 * min(attempt + 1, 5)))
         raise CommitConflict(
             f"gave up after {self._COMMIT_RETRIES} retries: {self.location}"
         )
+
+    def _commit_write(self, write, branch: str = "main", moved=None) -> TableMetadata:
+        """Commit one snapshot-producing op under the stage / re-base /
+        restart contract in tables/metadata.py.
+
+        ``write(meta)`` runs the op's Spark work against ``meta`` and
+        returns a :class:`_Staged`. ``moved(before, now)`` gets the
+        branch head the write read and the head at commit time, and says
+        whether the write must run again; a new current schema or
+        partition spec always restarts it."""
+        base = self.meta
+        staged = write(base)
+
+        def mutate(meta: TableMetadata) -> TableMetadata:
+            nonlocal base, staged
+            if _layout(meta) != _layout(base) or (
+                moved is not None and moved(_head(base, branch), _head(meta, branch))
+            ):
+                staged.discard()
+                staged = None
+                # _commit hands mutate a copy of self.meta, unchanged
+                base = self.meta
+                staged = write(base)
+            return self._snapshot(meta, staged, branch)
+
+        try:
+            return self._commit(mutate)
+        except Exception:
+            if staged is not None:
+                staged.discard()
+            raise
 
     # ------------------------------------------------------------------ util
 
@@ -603,17 +656,12 @@ class IceLiteTable:
                 result[c] = _strip_null_leaves(merged).simpleString()
         return result
 
-    def _write_data_files(
-        self,
-        df: DataFrame,
-        schema_id: int,
-        sequence_number: int,
-        meta: "TableMetadata | None" = None,
-    ) -> list[DataFileEntry]:
-        """Write df as parquet data files; return manifest entries with
-        executor-collected footer stats. ``meta`` is the metadata object
-        the enclosing commit is mutating; inferred variant-shred schemas
-        are cached into its properties so they ride the same commit."""
+    def _write_data_files(self, df: DataFrame, staged: _Staged) -> None:
+        """Write df as parquet data files in the current schema and add
+        their entries, with footer stats, to ``staged``. Inferred
+        variant-shred schemas go to ``staged.properties`` so they ride
+        the same commit."""
+        schema_id = self.meta.current_schema_id
         ts = self.meta.schema_by_id(schema_id)
         out = self._align(df, ts)
         # V3 shredded VARIANT (write.parquet.variant-shredding.enabled,
@@ -632,7 +680,7 @@ class IceLiteTable:
             ).lower()
             == "true"
         ):
-            props = (meta or self.meta).properties
+            props = self.meta.properties
             # cache keyed by FIELD ID, not name: a dropped-then-recreated
             # (or renamed-onto) variant column must never inherit the old
             # column's shred schema — the same id-resolution rule the
@@ -648,9 +696,8 @@ class IceLiteTable:
             if missing:
                 inferred = self._infer_variant_shred_schemas(out, missing)
                 shred.update(inferred)
-                if meta is not None:
-                    for c, ddl in inferred.items():
-                        meta.properties[_VARIANT_SCHEMA_PROP + str(fid[c])] = ddl
+                for c, ddl in inferred.items():
+                    staged.properties[_VARIANT_SCHEMA_PROP + str(fid[c])] = ddl
             for c, ddl in shred.items():
                 out = out.withColumn(
                     f"{c}__typed_value", F.from_json(F.col(c), ddl)
@@ -709,7 +756,6 @@ class IceLiteTable:
                     record_count=st["rows"],
                     partition=partition,
                     schema_id=schema_id,
-                    sequence_number=sequence_number,
                     file_size_bytes=st["size"],
                     lower_bounds=st["lower"],
                     upper_bounds=st["upper"],
@@ -717,15 +763,19 @@ class IceLiteTable:
                     value_counts=st["values"],
                 )
             )
-        return entries
+        if entries:
+            staged.data_files += entries
+            staged.reclaim.append(commit_dir)
+        else:
+            shutil.rmtree(commit_dir, ignore_errors=True)
 
     def _write_delete_file(
-        self, df: DataFrame, content: int, sequence_number: int, equality_columns=()
+        self, df: DataFrame, content: int, staged: _Staged, equality_columns=()
     ) -> DeleteFileEntry | None:
-        """Write ``df`` as one delete file. Returns None, and leaves no
-        file, when ``df`` has no rows: Iceberg never commits an empty
-        delete file, and each one would add a no-op join to every later
-        read."""
+        """Write ``df`` as one delete file, add it to ``staged`` and
+        return it. Returns None, and leaves no file, when ``df`` has no
+        rows: Iceberg never commits an empty delete file, and each one
+        would add a no-op join to every later read."""
         by_name = {f.name: f.id for f in self.meta.current_schema.fields}
         unknown = [c for c in equality_columns if c not in by_name]
         if unknown:
@@ -752,26 +802,46 @@ class IceLiteTable:
         # one consolidated parquet per commit and tags it PUFFIN to model
         # the same observable.
         fmt = "PUFFIN" if (content == 1 and self.format_version >= 3) else "PARQUET"
-        return DeleteFileEntry(
+        entry = DeleteFileEntry(
             path=path,
             content=content,
             record_count=rows,
-            sequence_number=sequence_number,
             file_format=fmt,
             equality_columns=list(equality_columns),
             equality_ids=equality_ids,
         )
+        staged.delete_files.append(entry)
+        staged.reclaim.append(path)
+        return entry
 
     def _snapshot(
-        self,
-        meta: TableMetadata,
-        operation: str,
-        data_files: list[DataFileEntry],
-        delete_files: list[DeleteFileEntry],
-        parent: Snapshot | None,
-        branch: str = "main",
-        extra_summary: dict | None = None,
+        self, meta: TableMetadata, staged: _Staged, branch: str = "main"
     ) -> TableMetadata:
+        """Apply ``staged`` to ``branch``'s head in ``meta`` as one new
+        snapshot: drop the files it replaces, add its entries stamped
+        with the new sequence number, and merge its property updates.
+        The only place that assigns sequence numbers and V3 row ids."""
+        existing = meta.refs.get(branch)
+        if existing is not None and existing.type == "tag":
+            raise ValueError(f"cannot write to tag {branch!r}")
+        parent = _head(meta, branch)
+        prev_data = parent.data_files if parent else []
+        live = {_file_uri(f.path) for f in prev_data}
+        dup = [f.path for f in staged.data_files if _file_uri(f.path) in live]
+        if dup:
+            raise ValueError(f"{branch!r} already references files: {dup[:3]}")
+        meta.last_sequence_number += 1
+        seq = meta.last_sequence_number
+        kept = [f for f in prev_data if _file_uri(f.path) not in staged.replaces]
+        added = [replace(f, sequence_number=seq) for f in staged.data_files]
+        data_files = kept + added
+        delete_files = [
+            d
+            for d in (parent.delete_files if parent else [])
+            if _file_uri(d.path) not in staged.replaces
+        ] + [replace(d, sequence_number=seq) for d in staged.delete_files]
+        for k, v in staged.properties.items():
+            meta.properties.setdefault(k, v)
         sid = meta.new_snapshot_id()
         meta.last_snapshot_id = sid
         if meta.format_version >= 3:
@@ -782,16 +852,12 @@ class IceLiteTable:
                 if f.first_row_id is None:
                     f.first_row_id = meta.next_row_id
                     meta.next_row_id += f.record_count
-        total = sum(f.record_count for f in data_files)
-        prev_files = {f.path for f in parent.data_files} if parent else set()
-        added = [f for f in data_files if f.path not in prev_files]
-        removed = prev_files - {f.path for f in data_files}
         summary = {
-            "operation": operation,
+            "operation": staged.operation,
             "added-data-files": len(added),
-            "deleted-data-files": len(removed),
+            "deleted-data-files": len(prev_data) - len(kept),
             "added-records": sum(f.record_count for f in added),
-            "total-records": total,
+            "total-records": sum(f.record_count for f in data_files),
             "total-data-files": len(data_files),
             "total-delete-files": len(delete_files),
             "total-position-deletes": sum(
@@ -801,21 +867,18 @@ class IceLiteTable:
                 d.record_count for d in delete_files if d.content == 2
             ),
         }
-        summary.update(extra_summary or {})
+        summary.update(staged.summary)
         snap = Snapshot(
             snapshot_id=sid,
             parent_id=parent.snapshot_id if parent else None,
-            sequence_number=meta.last_sequence_number,
+            sequence_number=seq,
             timestamp_ms=_now_ms(),
-            operation=operation,
+            operation=staged.operation,
             data_files=data_files,
             delete_files=delete_files,
             summary=summary,
             schema_id=meta.current_schema_id,
         )
-        existing = meta.refs.get(branch)
-        if existing is not None and existing.type == "tag":
-            raise ValueError(f"cannot write to tag {branch!r}")
         meta.snapshots.append(snap)
         meta.refs[branch] = Ref(snapshot_id=sid, type="branch")
         return meta
@@ -865,22 +928,13 @@ class IceLiteTable:
         ``extra_summary`` rides along in the same atomic commit — the
         streaming sink stores its epoch bookkeeping there so a crash
         between "write" and "record batch id" is impossible."""
-        df = self._distribute_for_write(df)
 
-        def mutate(meta: TableMetadata) -> TableMetadata:
-            meta.last_sequence_number += 1
-            entries = self._write_data_files(
-                df, meta.current_schema_id, meta.last_sequence_number, meta=meta
-            )
-            parent = _head(meta, branch)
-            data = (parent.data_files if parent else []) + entries
-            deletes = parent.delete_files if parent else []
-            return self._snapshot(
-                meta, "append", data, deletes, parent, branch,
-                extra_summary=extra_summary,
-            )
+        def write(meta: TableMetadata) -> _Staged:
+            staged = _Staged("append", summary=dict(extra_summary or {}))
+            self._write_data_files(self._distribute_for_write(df), staged)
+            return staged
 
-        self._commit(mutate)
+        self._commit_write(write, branch)
 
     def add_files(self, paths: list[str], branch: str = "main") -> int:
         """Iceberg's ``add_files`` procedure shape: adopt EXISTING parquet
@@ -938,20 +992,13 @@ class IceLiteTable:
         stats = _collect_file_stats(self.spark, resolved)
         adopted = [p for p in resolved if stats[p]["rows"] > 0]
 
-        def mutate(meta: TableMetadata) -> TableMetadata:
-            parent = _head(meta, branch)
-            existing = {_file_uri(f.path) for f in (parent.data_files if parent else [])}
-            dupes = [p for p in adopted if _file_uri(p) in existing]
-            if dupes:
-                raise ValueError(f"add_files: already referenced: {dupes}")
-            meta.last_sequence_number += 1
-            seq = meta.last_sequence_number
+        def write(meta: TableMetadata) -> _Staged:
+            # no reclaim: the adopted files are not ours to delete
             entries = [
                 DataFileEntry(
                     path=p,
                     record_count=stats[p]["rows"],
                     schema_id=meta.current_schema_id,
-                    sequence_number=seq,
                     file_size_bytes=stats[p]["size"],
                     lower_bounds=stats[p]["lower"],
                     upper_bounds=stats[p]["upper"],
@@ -960,19 +1007,13 @@ class IceLiteTable:
                 )
                 for p in adopted
             ]
-            data = (parent.data_files if parent else []) + entries
-            deletes = parent.delete_files if parent else []
-            return self._snapshot(
-                meta,
+            return _Staged(
                 "append",
-                data,
-                deletes,
-                parent,
-                branch,
-                {"added-files-via-add-files": len(entries)},
+                data_files=entries,
+                summary={"added-files-via-add-files": len(entries)},
             )
 
-        self._commit(mutate)
+        self._commit_write(write, branch)
         return len(adopted)
 
     def append_arrow(self, arrow_table, branch: str = "main") -> None:
@@ -1008,17 +1049,20 @@ class IceLiteTable:
 
     def overwrite(self, df: DataFrame, branch: str = "main") -> None:
         """Full-table INSERT OVERWRITE (flink suite :640,892)."""
-        df = self._distribute_for_write(df)
 
-        def mutate(meta: TableMetadata) -> TableMetadata:
-            meta.last_sequence_number += 1
-            entries = self._write_data_files(
-                df, meta.current_schema_id, meta.last_sequence_number, meta=meta
-            )
+        def write(meta: TableMetadata) -> _Staged:
             parent = _head(meta, branch)
-            return self._snapshot(meta, "overwrite", entries, [], parent, branch)
+            staged = _Staged(
+                "overwrite",
+                replaces={
+                    _file_uri(f.path)
+                    for f in (parent.data_files + parent.delete_files if parent else [])
+                },
+            )
+            self._write_data_files(self._distribute_for_write(df), staged)
+            return staged
 
-        self._commit(mutate)
+        self._commit_write(write, branch, _new_head)
 
     # ----------------------------------------------------------------- reads
 
@@ -1257,61 +1301,38 @@ class IceLiteTable:
             # DELETE right after CREATE in its MoR probes).
             return
 
-        def mutate(meta: TableMetadata) -> TableMetadata:
+        def write(meta: TableMetadata) -> _Staged:
             parent = _head(meta, branch)
             if parent is None:
                 raise ValueError("delete on empty table")
             live = self._read_snapshot(parent, with_meta=True)
-            meta.last_sequence_number += 1
-            seq = meta.last_sequence_number
+            staged = _Staged("delete")
             if mode == "merge-on-read":
                 hits = live.filter(cond).select(
                     F.col(_META_FILE).alias("file_path"), F.col(_META_POS).alias("pos")
                 )
-                entry = self._write_delete_file(hits, content=1, sequence_number=seq)
-                if entry is None:
-                    return self._snapshot(
-                        meta, "delete", parent.data_files, parent.delete_files,
-                        parent, branch,
-                    )
-                return self._snapshot(
-                    meta,
-                    "delete",
-                    parent.data_files,
-                    parent.delete_files + [entry],
-                    parent,
-                    branch,
-                    {"added-position-deletes": entry.record_count},
-                )
+                entry = self._write_delete_file(hits, 1, staged)
+                if entry is not None:
+                    staged.summary["added-position-deletes"] = entry.record_count
+                return staged
             # copy-on-write: rewrite only affected files
-            affected = {
+            staged.replaces = {
                 r[0]
                 for r in live.filter(cond).select(_META_FILE).distinct().collect()
             }
-            if not affected:
-                return self._snapshot(
-                    meta, "delete", parent.data_files, parent.delete_files, parent, branch
-                )
-            keep_files = [
-                f for f in parent.data_files if _file_uri(f.path) not in affected
-            ]
-            # keep rows where the predicate is NOT TRUE (null-safe): a plain
-            # `~cond` maps NULL→NULL and filter drops it — silently deleting
-            # rows the predicate didn't match. SQL DELETE removes TRUE only.
-            survivors = live.filter(
-                F.col(_META_FILE).isin(list(affected)) & ~(cond.eqNullSafe(F.lit(True)))
-            ).drop(_META_FILE, _META_POS)
-            new_entries = self._write_data_files(survivors, meta.current_schema_id, seq, meta=meta)
-            return self._snapshot(
-                meta,
-                "delete",
-                keep_files + new_entries,
-                parent.delete_files,
-                parent,
-                branch,
-            )
+            if staged.replaces:
+                # keep rows where the predicate is NOT TRUE (null-safe): a
+                # plain `~cond` maps NULL→NULL and filter drops it —
+                # silently deleting rows the predicate didn't match. SQL
+                # DELETE removes TRUE only.
+                survivors = live.filter(
+                    F.col(_META_FILE).isin(list(staged.replaces))
+                    & ~(cond.eqNullSafe(F.lit(True)))
+                ).drop(_META_FILE, _META_POS)
+                self._write_data_files(survivors, staged)
+            return staged
 
-        self._commit(mutate)
+        self._commit_write(write, branch, _new_head)
 
     def update(self, set_exprs: dict[str, str], where: str = "true", branch: str = "main") -> None:
         """UPDATE ... SET ... WHERE (iceberg_feature_tests.py:512)."""
@@ -1322,67 +1343,41 @@ class IceLiteTable:
                 raise ValueError(f"unknown branch {branch!r}")
             return  # no snapshots → nothing to update, nothing committed
 
-        def mutate(meta: TableMetadata) -> TableMetadata:
+        def write(meta: TableMetadata) -> _Staged:
             parent = _head(meta, branch)
             if parent is None:
                 raise ValueError("update on empty table")
             live = self._read_snapshot(parent, with_meta=True)
-            meta.last_sequence_number += 1
-            seq = meta.last_sequence_number
-            schema_cols = self.meta.current_schema.names()
-
-            def apply_set(df: DataFrame) -> DataFrame:
-                return df.withColumns({c: F.expr(e) for c, e in set_exprs.items()})
-
+            staged = _Staged("overwrite")
             if mode == "merge-on-read":
                 matched = live.filter(cond)
                 dels = matched.select(
                     F.col(_META_FILE).alias("file_path"), F.col(_META_POS).alias("pos")
                 )
-                dentry = self._write_delete_file(dels, content=1, sequence_number=seq)
-                if dentry is None:
-                    return self._snapshot(
-                        meta, "overwrite", parent.data_files, parent.delete_files,
-                        parent, branch,
+                dentry = self._write_delete_file(dels, 1, staged)
+                if dentry is not None:
+                    staged.summary["added-position-deletes"] = dentry.record_count
+                    updated = matched.drop(_META_FILE, _META_POS).withColumns(
+                        {c: F.expr(e) for c, e in set_exprs.items()}
                     )
-                updated = apply_set(matched.drop(_META_FILE, _META_POS))
-                added = self._write_data_files(updated, meta.current_schema_id, seq, meta=meta)
-                return self._snapshot(
-                    meta,
-                    "overwrite",
-                    parent.data_files + added,
-                    parent.delete_files + [dentry],
-                    parent,
-                    branch,
-                    {"added-position-deletes": dentry.record_count},
-                )
-            affected = {
+                    self._write_data_files(updated, staged)
+                return staged
+            staged.replaces = {
                 r[0]
                 for r in live.filter(cond).select(_META_FILE).distinct().collect()
             }
-            if not affected:
-                return self._snapshot(
-                    meta, "overwrite", parent.data_files, parent.delete_files, parent, branch
-                )
-            keep_files = [
-                f for f in parent.data_files if _file_uri(f.path) not in affected
-            ]
-            scoped = live.filter(F.col(_META_FILE).isin(list(affected)))
-            rewritten = (
-                scoped.withColumns(
+            if staged.replaces:
+                scoped = live.filter(F.col(_META_FILE).isin(list(staged.replaces)))
+                rewritten = scoped.withColumns(
                     {
                         c: F.when(cond, F.expr(e)).otherwise(F.col(c))
                         for c, e in set_exprs.items()
                     }
-                )
-                .select(*schema_cols)
-            )
-            new_entries = self._write_data_files(rewritten, meta.current_schema_id, seq, meta=meta)
-            return self._snapshot(
-                meta, "overwrite", keep_files + new_entries, parent.delete_files, parent, branch
-            )
+                ).select(*meta.current_schema.names())
+                self._write_data_files(rewritten, staged)
+            return staged
 
-        self._commit(mutate)
+        self._commit_write(write, branch, _new_head)
 
     def merge(
         self,
@@ -1421,13 +1416,9 @@ class IceLiteTable:
 
         src = source.withColumn("__s_present", F.lit(1))
 
-        def mutate(meta: TableMetadata) -> TableMetadata:
-            import dataclasses as _dc  # noqa: PLC0415
-
+        def write(meta: TableMetadata) -> _Staged:
             parent = _head(meta, branch)
             live = self._read_snapshot(parent, with_meta=True)
-            meta.last_sequence_number += 1
-            seq = meta.last_sequence_number
             schema_cols = meta.current_schema.names()
 
             t, s = live.alias("t"), src.alias("s")
@@ -1465,11 +1456,7 @@ class IceLiteTable:
                 affected = {
                     _file_uri(f.path) for f in (parent.data_files if parent else [])
                 }
-            keep_files = [
-                f for f in (parent.data_files if parent else []) if _file_uri(f.path) not in affected
-            ]
-
-            new_entries = []
+            staged = _Staged("merge", replaces=affected)
             if affected or insert_when_not_matched:
                 # Pass 2 (the only full-width join): victim files ⋈ source.
                 # Every source row that matches ANY target row matches one
@@ -1480,7 +1467,7 @@ class IceLiteTable:
                 # (separate scoped/insert branches unioned) collapse into
                 # one join consumed by a single filter + per-column CASE.
                 if parent is not None and len(affected) < len(parent.data_files):
-                    scoped_snap = _dc.replace(
+                    scoped_snap = replace(
                         parent,
                         data_files=[
                             f
@@ -1551,19 +1538,10 @@ class IceLiteTable:
                     return F.when(~t_present, s_val).otherwise(t_val).alias(c)
 
                 out = out.select(*[_col_out(c) for c in schema_cols])
-                new_entries = self._write_data_files(
-                    out, meta.current_schema_id, seq, meta=meta
-                )
-            return self._snapshot(
-                meta,
-                "merge",
-                keep_files + new_entries,
-                parent.delete_files if parent else [],
-                parent,
-                branch,
-            )
+                self._write_data_files(out, staged)
+            return staged
 
-        self._commit(mutate)
+        self._commit_write(write, branch, _new_head)
 
     def set_identifier_fields(self, columns: list[str]) -> None:
         """ALTER TABLE ... SET IDENTIFIER FIELDS — declare the row-identity
@@ -1616,10 +1594,7 @@ class IceLiteTable:
                     "(set_identifier_fields)"
                 )
 
-        def mutate(meta: TableMetadata) -> TableMetadata:
-            parent = _head(meta, branch)
-            meta.last_sequence_number += 1
-            seq = meta.last_sequence_number
+        def write(meta: TableMetadata) -> _Staged:
             if order_by is not None:
                 w = Window.partitionBy(*key_columns).orderBy(
                     F.col(order_by).desc()
@@ -1631,26 +1606,18 @@ class IceLiteTable:
                 )
             else:
                 dedup = source.dropDuplicates(key_columns)
-            keys = dedup.select(*key_columns)
+            staged = _Staged("overwrite")
             dentry = self._write_delete_file(
-                keys, content=2, sequence_number=seq, equality_columns=key_columns
+                dedup.select(*key_columns), 2, staged, equality_columns=key_columns
             )
-            added = self._write_data_files(dedup, meta.current_schema_id, seq, meta=meta)
-            deletes = [dentry] if dentry is not None else []
-            return self._snapshot(
-                meta,
-                "overwrite",
-                (parent.data_files if parent else []) + added,
-                (parent.delete_files if parent else []) + deletes,
-                parent,
-                branch,
-                {
-                    "added-equality-deletes": sum(d.record_count for d in deletes),
-                    **(extra_summary or {}),
-                },
-            )
+            self._write_data_files(dedup, staged)
+            staged.summary = {
+                "added-equality-deletes": dentry.record_count if dentry else 0,
+                **(extra_summary or {}),
+            }
+            return staged
 
-        self._commit(mutate)
+        self._commit_write(write, branch)
 
     # ------------------------------------------------------- schema evolution
 
@@ -1877,7 +1844,6 @@ class IceLiteTable:
         """Move ``main`` back to the LATEST ancestor committed strictly
         before ``timestamp_ms`` (Iceberg's ``rollback_to_timestamp``
         procedure). Returns the snapshot id rolled back to."""
-        target: list[int] = []
 
         def mutate(meta: TableMetadata) -> TableMetadata:
             by_id = {s.snapshot_id: s for s in meta.snapshots}
@@ -1888,17 +1854,13 @@ class IceLiteTable:
                     break
                 if snap.timestamp_ms < timestamp_ms:
                     meta.refs["main"] = Ref(snapshot_id=sid, type="branch")
-                    target.append(sid)
                     return meta
                 sid = snap.parent_id
             raise ValueError(
                 f"no ancestor of main committed before {timestamp_ms}"
             )
 
-        self._commit(mutate)
-        # [-1]: _commit re-runs mutate on conflict retry; only the LAST
-        # attempt's value is the committed one
-        return target[-1]
+        return self._commit(mutate).current_snapshot_id
 
     def fast_forward(self, branch: str, to: str) -> tuple[int | None, int]:
         """Fast-forward ``branch`` to another ref's head (Iceberg's
@@ -1942,9 +1904,8 @@ class IceLiteTable:
         staged/rolled-back append without replaying history). Non-append
         snapshots are rejected, matching Iceberg's own restriction.
         Returns the new snapshot id."""
-        out: list[int] = []
 
-        def mutate(meta: TableMetadata) -> TableMetadata:
+        def write(meta: TableMetadata) -> _Staged:
             src = meta.snapshot_by_id(snapshot_id)
             if src.operation != "append":
                 raise ValueError(
@@ -1954,27 +1915,14 @@ class IceLiteTable:
             by_id = {s.snapshot_id: s for s in meta.snapshots}
             src_parent = by_id.get(src.parent_id) if src.parent_id else None
             prev = {f.path for f in src_parent.data_files} if src_parent else set()
-            added = [f for f in src.data_files if f.path not in prev]
-            parent = _head(meta, "main")
-            cur_paths = {f.path for f in parent.data_files} if parent else set()
-            dup = [f.path for f in added if f.path in cur_paths]
-            if dup:
-                raise ValueError(
-                    f"cherrypick would re-add files already live: {dup[:3]}"
-                )
-            meta.last_sequence_number += 1
-            new_entries = [replace(f, sequence_number=meta.last_sequence_number) for f in added]
-            data = (parent.data_files if parent else []) + new_entries
-            deletes = parent.delete_files if parent else []
-            m2 = self._snapshot(
-                meta, "append", data, deletes, parent, "main",
-                extra_summary={"source-snapshot-id": str(snapshot_id)},
+            # re-adding a file main already holds is rejected by _snapshot
+            return _Staged(
+                "append",
+                data_files=[f for f in src.data_files if f.path not in prev],
+                summary={"source-snapshot-id": str(snapshot_id)},
             )
-            out.append(m2.current_snapshot_id)
-            return m2
 
-        self._commit(mutate)
-        return out[-1]
+        return self._commit_write(write).current_snapshot_id
 
     def ancestors_of(self, snapshot_id: int | None = None) -> list[tuple[int, int]]:
         """(snapshot_id, timestamp_ms) for the parent chain starting at
@@ -2021,6 +1969,18 @@ class IceLiteTable:
 def _head(meta: TableMetadata, ref: str = "main") -> Snapshot | None:
     r = meta.refs.get(ref)
     return meta.snapshot_by_id(r.snapshot_id) if r else None
+
+
+def _layout(meta: TableMetadata) -> tuple:
+    """What every write step depends on: the schema and partition spec
+    it wrote its files in."""
+    return meta.current_schema_id, meta.partition_spec
+
+
+def _new_head(before: Snapshot | None, now: Snapshot | None) -> bool:
+    """``moved`` for ops that read the branch they write: any commit to
+    it restarts the write."""
+    return (before.snapshot_id if before else None) != (now.snapshot_id if now else None)
 
 
 def _file_uri(path: str) -> str:
