@@ -4,9 +4,9 @@ The reference's flagship DML surface is literally ``spark.sql("MERGE INTO
 ... / UPDATE ... / DELETE FROM ... / INSERT INTO ...")`` against Iceberg
 tables (/root/reference/tests/iceberg_feature_tests.py:454,512-529).
 IceLite exposes the same operations as API calls
-(tables/table.py:548,608,670); this module closes the fidelity gap with a
-parse-and-dispatch shim so a user can run the reference's exact statement
-shapes unchanged.
+(``IceLiteTable.delete`` / ``update`` / ``merge``); this module closes the
+fidelity gap with a parse-and-dispatch shim so a user can run the
+reference's exact statement shapes unchanged.
 
 Scope is deliberate: the four DML verbs plus the DDL statements the
 reference's SQL-driven tests use (CREATE/DROP NAMESPACE, CREATE TABLE
@@ -1349,8 +1349,9 @@ class IceLiteSQL:
     # --------------------------------------------------------------- DML
 
     def _aligned(self, table: IceLiteTable, df: DataFrame, cols: list[str] | None) -> DataFrame:
-        """Positionally align an input frame to the table schema, casting
-        to physical types; unspecified columns fill with write-default."""
+        """Bind an input frame's columns by position to ``cols`` (default:
+        every table column), then align it through ``IceLiteTable._align``,
+        which casts and fills unspecified columns with their write-default."""
         fields = table.meta.current_schema.fields
         targets = cols if cols is not None else [f.name for f in fields]
         if len(df.columns) != len(targets):
@@ -1360,8 +1361,8 @@ class IceLiteSQL:
         # Spark resolves identifiers case-insensitively: (ID, VAL) binds
         # to columns id/val — and the duplicate check must use the SAME
         # folding, or (id, ID) would slip past a case-sensitive set and
-        # silently bind two values to one column (INSERT-list fuzz,
-        # round 7; DDL validates names the same way in _evolve_schema).
+        # silently bind two values to one column (DDL validates names
+        # the same way in _evolve_schema).
         if len({c.lower() for c in targets}) != len(targets):
             raise UnsupportedSQLError(
                 f"INSERT column list repeats a column: {targets}"
@@ -1373,26 +1374,8 @@ class IceLiteSQL:
                 f"INSERT column list names unknown columns {unknown}; "
                 f"table has {[f.name for f in fields]}"
             )
-        targets = [by_lower[c.lower()] for c in targets]
-        by_pos = dict(zip(targets, df.columns))
-        dtypes = dict(df.dtypes)
-        out = []
-        for f in fields:
-            if f.name in by_pos:
-                col = F.col(by_pos[f.name])
-                if f.type == "timestamp_ns" and dtypes.get(
-                    by_pos[f.name], ""
-                ).startswith("timestamp"):
-                    # timestamp→bigint casts to SECONDS; route through
-                    # micros to the nanos physical value (same rule as
-                    # IceLiteTable._align)
-                    col = F.unix_micros(col.cast("timestamp")) * F.lit(1000)
-                out.append(col.cast(_physical_type(f.type)).alias(f.name))
-            else:
-                out.append(
-                    F.lit(f.write_default).cast(_physical_type(f.type)).alias(f.name)
-                )
-        return df.select(*out)
+        names = [by_lower[c.lower()] for c in targets]
+        return table._align(df, table.meta.current_schema, names)
 
     def _insert(self, stmt: str) -> None:
         if re.match(r"INSERT\s+(?:INTO|OVERWRITE)\s+FUNCTION\b", stmt, re.I):
@@ -1549,7 +1532,7 @@ class IceLiteSQL:
             raise UnsupportedSQLError("MERGE needs at least one WHEN clause")
         on_text, whens_text = tail[:w], tail[w:]
 
-        # IceLiteTable.merge hard-codes aliases t/s (tables/table.py:670);
+        # IceLiteTable.merge names the target t and the source s;
         # rewrite the user's qualifiers simultaneously so swaps are safe.
         if t_alias == s_alias:
             # e.g. MERGE INTO ns.items USING staging.items — both default

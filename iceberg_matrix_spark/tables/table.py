@@ -599,17 +599,21 @@ class IceLiteTable:
         ddl = ", ".join(f"{f.name} {_physical_type(f.type)}" for f in ts.fields)
         return StructType.fromDDL(ddl)
 
-    def _align(self, df: DataFrame, ts: TableSchema) -> DataFrame:
+    def _align(
+        self, df: DataFrame, ts: TableSchema, names: list[str] | None = None
+    ) -> DataFrame:
         """Project/cast an incoming DataFrame to the table schema; a
         missing column takes its V3 write-default (falling back to the
-        initial-default, then NULL)."""
+        initial-default, then NULL). ``names`` binds the frame's columns
+        by position to those table columns; without it they bind by name."""
         cols = []
         dtypes = dict(df.dtypes)
+        source = dict(zip(names or df.columns, df.columns))
         for f in ts.fields:
             pt = _physical_type(f.type)
-            if f.name in df.columns:
-                col = F.col(f.name)
-                if f.type == "timestamp_ns" and dtypes.get(f.name, "").startswith(
+            if f.name in source:
+                col = F.col(source[f.name])
+                if f.type == "timestamp_ns" and dtypes.get(source[f.name], "").startswith(
                     "timestamp"
                 ):
                     # a plain cast timestamp→bigint yields SECONDS —
@@ -1269,115 +1273,135 @@ class IceLiteTable:
     def _dml_mode(self, op: str) -> str:
         return self.meta.properties.get(f"write.{op}.mode", "copy-on-write")
 
+    def _row_level(self, op, branch, mode, target, clauses, victims=None) -> None:
+        """The one row-level write behind delete, update and merge, in the
+        shape of Spark's ReplaceData (copy-on-write) and WriteDelta
+        (merge-on-read) plans. ``op`` names the snapshot operation.
+
+        ``target(live)`` turns the branch head's live rows, which carry
+        ``__file`` and ``__pos``, into the frame the clauses run over: the
+        target row's columns under alias ``t`` and, for merge, the source
+        row's under ``s``. A row whose ``t.__file`` is NULL has no target
+        row.
+
+        ``clauses`` is an ordered list of ``(condition, action)``. Each
+        row takes the first clause whose SQL condition is TRUE (NULL is
+        not TRUE; a None condition always holds), Spark's first-match-wins
+        rule for ``WHEN ... AND``. Actions:
+
+        - ``("delete",)`` drops the target row;
+        - ``("update", {col: expr})`` sets the named columns of the target
+          row, the others keep their value;
+        - ``("insert", source_cols)`` writes a new row from the source
+          columns of the same names, NULL where the source has none.
+
+        A row that no clause takes keeps its target row unchanged, or
+        vanishes if it has none. SET keys and insert columns resolve
+        against the current schema case-insensitively, as in Spark; an
+        unknown SET key or a column named twice raises ValueError before
+        any Spark job runs.
+
+        ``merge-on-read`` writes one position-delete file covering every
+        target row a clause took, plus the updated and inserted rows.
+        ``copy-on-write`` rewrites the files holding those rows:
+        ``victims(frame, parent)`` names them (by default the distinct
+        ``__file`` of the taken rows), and the rewrite reads only those
+        files. An unknown branch raises ValueError; a branch with no
+        snapshot and no insert clause commits nothing."""
+        if branch != "main" and branch not in self.meta.refs:
+            raise ValueError(f"unknown branch {branch!r}")
+        if self._current_snapshot(branch) is None and not any(
+            a[0] == "insert" for _c, a in clauses
+        ):
+            return
+
+        def write(meta: TableMetadata) -> _Staged:
+            names = meta.current_schema.names()
+            resolved = _resolve_clauses(names, clauses)
+            drop = [i for i, (_c, kind, _e) in enumerate(resolved) if kind == "delete"]
+            ins = [i for i, (_c, kind, _e) in enumerate(resolved) if kind == "insert"]
+            act = " ".join(
+                f"WHEN {'true' if c is None else f'({c})'} THEN {i}"
+                for i, (c, _k, _e) in enumerate(resolved)
+            )
+            act = F.expr(f"CASE {act} ELSE -1 END" if act else "-1")
+
+            def acted(live: DataFrame) -> DataFrame:
+                return target(live).withColumn("__act", act)
+
+            has_t = F.col(f"t.{_META_FILE}").isNotNull()
+            took = has_t & (F.col("__act") >= 0)
+            keep = (has_t & ~F.col("__act").isin(drop)) | F.col("__act").isin(ins)
+            outputs = [_project(c, resolved) for c in names]
+
+            parent = _head(meta, branch)
+            frame = acted(self._read_snapshot(parent, with_meta=True))
+            staged = _Staged(op)
+            if mode == "merge-on-read":
+                dels = frame.filter(took).select(
+                    F.col(f"t.{_META_FILE}").alias("file_path"),
+                    F.col(f"t.{_META_POS}").alias("pos"),
+                )
+                entry = self._write_delete_file(dels, 1, staged)
+                if entry is not None:
+                    staged.summary["added-position-deletes"] = entry.record_count
+                # rows to write exist only if a clause writes rows and
+                # either took a target row or inserts
+                if len(drop) < len(resolved) and (entry is not None or ins):
+                    rows = frame.filter(keep & (F.col("__act") >= 0))
+                    self._write_data_files(rows.selectExpr(*outputs), staged)
+                return staged
+            if victims is not None:
+                staged.replaces = victims(frame, parent)
+            else:
+                taken = frame.filter(took).select(f"t.{_META_FILE}").distinct()
+                staged.replaces = {r[0] for r in taken.collect()}
+            if staged.replaces or ins:
+                if parent is not None and len(staged.replaces) < len(parent.data_files):
+                    # every target row a clause takes, and every target
+                    # row a source row matches, lives in a victim file, so
+                    # a read of those files alone gives each row the same
+                    # clause (and finds the same unmatched source rows)
+                    scoped = [
+                        f for f in parent.data_files if _file_uri(f.path) in staged.replaces
+                    ]
+                    frame = acted(
+                        self._read_snapshot(replace(parent, data_files=scoped), with_meta=True)
+                    )
+                self._write_data_files(frame.filter(keep).selectExpr(*outputs), staged)
+            return staged
+
+        self._commit_write(write, branch, _new_head)
+
     def delete(
         self,
         where: str | None = None,
         branch: str = "main",
         delete_filter: str | None = None,
     ) -> None:
-        """DELETE FROM ... WHERE (iceberg_feature_tests.py:516).
+        """DELETE FROM ... WHERE (iceberg_feature_tests.py:516): the row-
+        level write ``[(where, ("delete",))]`` in ``write.delete.mode``
+        (see :meth:`_row_level`). Copy-on-write rewrites only the files
+        containing matches (:553-585, :667-680); merge-on-read writes one
+        position-delete file (PUFFIN-tagged on V3).
 
         ``delete_filter`` is PyIceberg's keyword for the same predicate —
         the reference calls ``tbl.delete(delete_filter="id == 2")``
         (pyiceberg_feature_tests.py:214); ``==`` is valid Spark SQL so
-        the string passes through unchanged.
-
-        MoR writes position-delete files (single PUFFIN-tagged DV file on
-        V3); CoW rewrites only the files containing matches, leaving the
-        rest untouched (:553-585, :667-680)."""
+        the string passes through unchanged."""
         if where is None:
             where = delete_filter
         if where is None:
             raise ValueError("delete needs a predicate (where= or delete_filter=)")
-        cond = F.expr(where)
-        mode = self._dml_mode("delete")
-        if self._current_snapshot(branch) is None:
-            if branch != "main" and branch not in self.meta.refs:
-                # a typo'd/never-created branch must fail loudly, never
-                # silently swallow the write as an empty-table no-op
-                raise ValueError(f"unknown branch {branch!r}")
-            # Iceberg semantics: DELETE on a table with no snapshots
-            # matches nothing and commits nothing (the reference runs
-            # DELETE right after CREATE in its MoR probes).
-            return
-
-        def write(meta: TableMetadata) -> _Staged:
-            parent = _head(meta, branch)
-            if parent is None:
-                raise ValueError("delete on empty table")
-            live = self._read_snapshot(parent, with_meta=True)
-            staged = _Staged("delete")
-            if mode == "merge-on-read":
-                hits = live.filter(cond).select(
-                    F.col(_META_FILE).alias("file_path"), F.col(_META_POS).alias("pos")
-                )
-                entry = self._write_delete_file(hits, 1, staged)
-                if entry is not None:
-                    staged.summary["added-position-deletes"] = entry.record_count
-                return staged
-            # copy-on-write: rewrite only affected files
-            staged.replaces = {
-                r[0]
-                for r in live.filter(cond).select(_META_FILE).distinct().collect()
-            }
-            if staged.replaces:
-                # keep rows where the predicate is NOT TRUE (null-safe): a
-                # plain `~cond` maps NULL→NULL and filter drops it —
-                # silently deleting rows the predicate didn't match. SQL
-                # DELETE removes TRUE only.
-                survivors = live.filter(
-                    F.col(_META_FILE).isin(list(staged.replaces))
-                    & ~(cond.eqNullSafe(F.lit(True)))
-                ).drop(_META_FILE, _META_POS)
-                self._write_data_files(survivors, staged)
-            return staged
-
-        self._commit_write(write, branch, _new_head)
+        clauses = [(where, ("delete",))]
+        self._row_level("delete", branch, self._dml_mode("delete"), _as_target, clauses)
 
     def update(self, set_exprs: dict[str, str], where: str = "true", branch: str = "main") -> None:
-        """UPDATE ... SET ... WHERE (iceberg_feature_tests.py:512)."""
-        cond = F.expr(where)
-        mode = self._dml_mode("update")
-        if self._current_snapshot(branch) is None:
-            if branch != "main" and branch not in self.meta.refs:
-                raise ValueError(f"unknown branch {branch!r}")
-            return  # no snapshots → nothing to update, nothing committed
-
-        def write(meta: TableMetadata) -> _Staged:
-            parent = _head(meta, branch)
-            if parent is None:
-                raise ValueError("update on empty table")
-            live = self._read_snapshot(parent, with_meta=True)
-            staged = _Staged("overwrite")
-            if mode == "merge-on-read":
-                matched = live.filter(cond)
-                dels = matched.select(
-                    F.col(_META_FILE).alias("file_path"), F.col(_META_POS).alias("pos")
-                )
-                dentry = self._write_delete_file(dels, 1, staged)
-                if dentry is not None:
-                    staged.summary["added-position-deletes"] = dentry.record_count
-                    updated = matched.drop(_META_FILE, _META_POS).withColumns(
-                        {c: F.expr(e) for c, e in set_exprs.items()}
-                    )
-                    self._write_data_files(updated, staged)
-                return staged
-            staged.replaces = {
-                r[0]
-                for r in live.filter(cond).select(_META_FILE).distinct().collect()
-            }
-            if staged.replaces:
-                scoped = live.filter(F.col(_META_FILE).isin(list(staged.replaces)))
-                rewritten = scoped.withColumns(
-                    {
-                        c: F.when(cond, F.expr(e)).otherwise(F.col(c))
-                        for c, e in set_exprs.items()
-                    }
-                ).select(*meta.current_schema.names())
-                self._write_data_files(rewritten, staged)
-            return staged
-
-        self._commit_write(write, branch, _new_head)
+        """UPDATE ... SET ... WHERE (iceberg_feature_tests.py:512): the
+        row-level write ``[(where, ("update", set_exprs))]`` in
+        ``write.update.mode`` (see :meth:`_row_level`)."""
+        clauses = [(where, ("update", set_exprs))]
+        self._row_level("overwrite", branch, self._dml_mode("update"), _as_target, clauses)
 
     def merge(
         self,
@@ -1391,21 +1415,19 @@ class IceLiteTable:
         not_matched_by_source_clauses: list[tuple[str | None, tuple]] | None = None,
         insert_condition: str | None = None,
     ) -> None:
-        """MERGE INTO t USING s ON <cond> — CoW plan, same full-outer
-        equi-join Spark uses (iceberg_feature_tests.py:525-529).
+        """MERGE INTO t USING s ON <cond> (iceberg_feature_tests.py:525-529):
+        a copy-on-write row-level write over the full outer join of
+        target and source, the join Spark plans (see :meth:`_row_level`).
 
-        ``on`` references aliases ``t`` (target) and ``s`` (source);
-        ``matched_update`` maps target column → expression over t/s.
-
-        Full clause grammar: ``matched_clauses`` /
-        ``not_matched_by_source_clauses`` are ORDERED lists of
-        ``(condition | None, action)`` with action ``("update", {col:
-        expr})`` or ``("delete",)`` — per row, the first clause whose
-        condition holds applies, later clauses are dead for that row
-        (Spark's WHEN ... AND semantics). The legacy single-action
-        kwargs remain as the unconditional one-clause special case.
-        ``insert_condition`` guards the NOT MATCHED [BY TARGET] INSERT.
-        """
+        ``on`` and every clause reference the target as ``t`` and the
+        source as ``s``. ``matched_clauses`` and
+        ``not_matched_by_source_clauses`` are ordered ``(condition | None,
+        action)`` lists with action ``("update", {col: expr})`` or
+        ``("delete",)``; the legacy ``matched_update`` / ``matched_delete``
+        kwargs are the unconditional one-clause case.
+        ``insert_when_not_matched`` adds the NOT MATCHED [BY TARGET]
+        insert, guarded by ``insert_condition``. A target row matching
+        more than one source row raises ValueError, as in Iceberg."""
         if matched_clauses is None:
             matched_clauses = []
             if matched_delete:
@@ -1413,26 +1435,33 @@ class IceLiteTable:
             elif matched_update is not None:
                 matched_clauses.append((None, ("update", matched_update)))
         nmbs_clauses = not_matched_by_source_clauses or []
-
+        t_in = f"t.{_META_FILE} IS NOT NULL"
+        s_in = "s.__s_present IS NOT NULL"
+        families = [
+            (f"{t_in} AND {s_in}", matched_clauses),
+            (f"{t_in} AND s.__s_present IS NULL", nmbs_clauses),
+        ]
+        if insert_when_not_matched:
+            insert = ("insert", source.columns)
+            families.append((f"t.{_META_FILE} IS NULL AND {s_in}", [(insert_condition, insert)]))
+        # the families are disjoint, so one ordered list keeps each one's order
+        clauses = [
+            (mark if cond is None else f"{mark} AND ({cond})", action)
+            for mark, family in families
+            for cond, action in family
+        ]
         src = source.withColumn("__s_present", F.lit(1))
 
-        def write(meta: TableMetadata) -> _Staged:
-            parent = _head(meta, branch)
-            live = self._read_snapshot(parent, with_meta=True)
-            schema_cols = meta.current_schema.names()
+        def target(live: DataFrame) -> DataFrame:
+            return live.alias("t").join(src.alias("s"), F.expr(on), "full_outer")
 
-            t, s = live.alias("t"), src.alias("s")
-            t_present = F.col(f"t.{_META_FILE}").isNotNull()
-            s_marker = F.col("s.__s_present").isNotNull()
-
-            # Pass 1 (narrow): match-count per target row identity
-            # (file, pos). Feeds BOTH the cardinality gate and victim-file
-            # capture. Catalyst prunes the join inputs to the `on` keys +
-            # meta columns, so at scale this pass shuffles a few bytes per
-            # row, never the payload.
-            joined = t.join(s, F.expr(on), "full_outer")
+        def victims(joined: DataFrame, parent: Snapshot | None) -> set[str]:
+            # Pass 1 (narrow): match count per target row (file, pos),
+            # for both the cardinality check and the victim files.
+            # Catalyst prunes the join inputs to the `on` keys and the
+            # meta columns, so this pass never shuffles the payload.
             match_stats = (
-                joined.filter(t_present & s_marker)
+                joined.filter(f"{t_in} AND {s_in}")
                 .groupBy(
                     F.col(f"t.{_META_FILE}").alias("__f"),
                     F.col(f"t.{_META_POS}").alias("__p"),
@@ -1448,100 +1477,12 @@ class IceLiteTable:
                     "than one source row (Iceberg raises here; dedupe the "
                     "source or use upsert() for last-writer-wins)"
                 )
-            affected = {r["__f"] for r in match_stats}
-            if nmbs_clauses:
-                # NOT MATCHED BY SOURCE can touch any target row, so
-                # every live file is a rewrite candidate (Spark/Iceberg
-                # CoW does the same file-level scoping)
-                affected = {
-                    _file_uri(f.path) for f in (parent.data_files if parent else [])
-                }
-            staged = _Staged("merge", replaces=affected)
-            if affected or insert_when_not_matched:
-                # Pass 2 (the only full-width join): victim files ⋈ source.
-                # Every source row that matches ANY target row matches one
-                # in an affected file (that is the definition of affected),
-                # so unmatched-source detection against the SCOPED target is
-                # exact — the rewrite never rescans unaffected files, and
-                # the old second+third executions of the target×source join
-                # (separate scoped/insert branches unioned) collapse into
-                # one join consumed by a single filter + per-column CASE.
-                if parent is not None and len(affected) < len(parent.data_files):
-                    scoped_snap = replace(
-                        parent,
-                        data_files=[
-                            f
-                            for f in parent.data_files
-                            if _file_uri(f.path) in affected
-                        ],
-                    )
-                    t_scoped = self._read_snapshot(scoped_snap, with_meta=True)
-                else:
-                    t_scoped = live
-                j2 = t_scoped.alias("t").join(src.alias("s"), F.expr(on), "full_outer")
+            if nmbs_clauses and parent is not None:
+                # NOT MATCHED BY SOURCE can take any target row
+                return {_file_uri(f.path) for f in parent.data_files}
+            return {r["__f"] for r in match_stats}
 
-                insert_rows = (~t_present) & s_marker
-                if insert_condition:
-                    insert_rows = insert_rows & F.expr(insert_condition).eqNullSafe(
-                        F.lit(True)
-                    )
-                if not insert_when_not_matched:
-                    insert_rows = F.lit(False)
-                out = j2.filter(t_present | insert_rows)
-
-                # Ordered first-match-wins clause resolution: one WHEN
-                # chain assigns each row its clause index (matched and
-                # not-matched-by-source rows are disjoint by marker, so a
-                # single chain keeps each family's own ordering). Insert
-                # rows (t side null) never satisfy a clause marker.
-                all_clauses = [
-                    (t_present & s_marker, cond, action)
-                    for cond, action in matched_clauses
-                ] + [
-                    (t_present & ~s_marker, cond, action)
-                    for cond, action in nmbs_clauses
-                ]
-                act = None
-                for i, (mk, cond, _action) in enumerate(all_clauses):
-                    full = mk & (F.expr(cond) if cond else F.lit(True))
-                    act = (
-                        F.when(full, F.lit(i))
-                        if act is None
-                        else act.when(full, F.lit(i))
-                    )
-                act = act.otherwise(F.lit(-1)) if act is not None else F.lit(-1)
-                out = out.withColumn("__act", act)
-                del_ids = [
-                    i
-                    for i, (_m, _c, a) in enumerate(all_clauses)
-                    if a[0] == "delete"
-                ]
-                if del_ids:
-                    out = out.filter(~F.col("__act").isin(del_ids))
-
-                def _col_out(c: str) -> F.Column:
-                    expr = None
-                    for i, (_m, _c, a) in enumerate(all_clauses):
-                        if a[0] != "update":
-                            continue
-                        e = F.expr(a[1].get(c, f"t.{c}"))
-                        expr = (
-                            F.when(F.col("__act") == i, e)
-                            if expr is None
-                            else expr.when(F.col("__act") == i, e)
-                        )
-                    base = F.col(f"t.{c}")
-                    t_val = expr.otherwise(base) if expr is not None else base
-                    s_val = (
-                        F.col(f"s.{c}") if c in source.columns else F.lit(None)
-                    )
-                    return F.when(~t_present, s_val).otherwise(t_val).alias(c)
-
-                out = out.select(*[_col_out(c) for c in schema_cols])
-                self._write_data_files(out, staged)
-            return staged
-
-        self._commit_write(write, branch, _new_head)
+        self._row_level("merge", branch, "copy-on-write", target, clauses, victims)
 
     def set_identifier_fields(self, columns: list[str]) -> None:
         """ALTER TABLE ... SET IDENTIFIER FIELDS — declare the row-identity
@@ -1987,6 +1928,56 @@ def _file_uri(path: str) -> str:
     """Spark's _metadata.file_path form for a local path (Hadoop-style
     single-slash scheme: ``file:/tmp/...``)."""
     return path if path.startswith("file:") else f"file:{path}"
+
+
+def _as_target(live: DataFrame) -> DataFrame:
+    """DELETE and UPDATE run their clauses over the live rows alone."""
+    return live.alias("t")
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _resolve_clauses(names: list[str], clauses) -> list[tuple]:
+    """``(condition, kind, {column: SQL expr})`` per row-level clause, its
+    SET keys and insert columns resolved to the schema's ``names``
+    case-insensitively. An insert gives NULL to a column its source
+    lacks and ignores a source column the schema lacks; an unknown SET
+    key or a column named twice raises."""
+    by_lower = {n.lower(): n for n in names}
+    out = []
+    for cond, action in clauses:
+        kind, exprs = action[0], {}
+        if kind not in ("delete", "update", "insert"):
+            raise ValueError(f"unknown row-level action {kind!r}")
+        for key in action[1] if kind != "delete" else ():
+            name = by_lower.get(key.lower())
+            if name is None and kind == "insert":
+                continue
+            if name is None:
+                raise ValueError(f"SET names unknown column {key!r}; table has {names}")
+            if name in exprs:
+                raise ValueError(f"{kind.upper()} names column {name!r} twice")
+            exprs[name] = action[1][key] if kind == "update" else f"s.{_quote(key)}"
+        if kind == "insert":
+            exprs = {n: exprs.get(n, "NULL") for n in names}
+        out.append((cond, kind, exprs))
+    return out
+
+
+def _project(col: str, resolved: list[tuple]) -> str:
+    """SQL for output column ``col``: the value the row's clause gives
+    it, else the target row's value."""
+    whens = [
+        f"WHEN __act = {i} THEN ({exprs[col]})"
+        for i, (_c, _k, exprs) in enumerate(resolved)
+        if col in exprs
+    ]
+    value = f"t.{_quote(col)}"
+    if whens:
+        value = f"CASE {' '.join(whens)} ELSE {value} END"
+    return f"{value} AS {_quote(col)}"
 
 
 def _sql_lit(val) -> str:

@@ -455,10 +455,10 @@ def test_float_partition_values_prune_numerically(spark, catalog):
     assert got == [1]
 
 
-def test_expire_snapshots_retry_does_not_delete_live_files(spark, catalog):
+def test_expire_snapshots_retry_does_not_delete_live_files(spark, catalog, monkeypatch):
     """removed_files must be recomputed per commit attempt, not accumulated
     across optimistic-commit retries."""
-    from iceberg_matrix_spark.tables import metadata as md
+    from iceberg_matrix_spark.tables import table as table_mod
 
     t = catalog.create_table("ns.expret", "id bigint, val string")
     t.append(_kv_df(spark, [(1, "a")]))
@@ -466,8 +466,9 @@ def test_expire_snapshots_retry_does_not_delete_live_files(spark, catalog):
     t.append(_kv_df(spark, [(3, "c")]))
 
     # Force one CommitConflict on the first attempt: concurrently advance the
-    # table version between mutate() and the version write.
-    original_commit = md.commit_metadata
+    # table version between mutate() and the version write. The hook goes
+    # where IceLiteTable._commit looks the function up.
+    original_commit = table_mod.commit_metadata
     fired = {"done": False}
 
     def racing_commit(location, meta, expected_version):
@@ -478,11 +479,10 @@ def test_expire_snapshots_retry_does_not_delete_live_files(spark, catalog):
             t2.append(_kv_df(spark, [(4, "d")]))
         return original_commit(location, meta, expected_version)
 
-    md.commit_metadata = racing_commit
-    try:
-        maint.expire_snapshots(t, retain_last=1)
-    finally:
-        md.commit_metadata = original_commit
+    monkeypatch.setattr(table_mod, "commit_metadata", racing_commit)
+    maint.expire_snapshots(t, retain_last=1)
+    assert fired["done"]
+    assert len(t.meta.snapshots) == 1
     # every row referenced by the surviving head is still readable
     assert t.df().count() >= 1
     for f in t._current_snapshot().data_files:

@@ -322,6 +322,120 @@ def test_update_matches_sql_semantics(spark, vals, pred, joiner, mode):
     assert got == expect
 
 
+# MERGE: ordered WHEN clauses, first match wins (Spark's rule), over keys
+# and values that may be NULL. Each SQL fragment is drawn with its Python
+# meaning under three-valued logic (None is NULL); the model applies the
+# clauses row by row.
+def _add(a, b):
+    return None if a is None or b is None else a + b
+
+
+def _gt(a, b):
+    return None if a is None or b is None else a > b
+
+
+_M_COND = [
+    ("s.v > 0", lambda t, s: _gt(s, 0)),
+    ("t.v < s.v", lambda t, s: _gt(s, t)),
+    ("t.v IS NULL", lambda t, s: t is None),
+]
+_M_SET = [
+    ("s.v", lambda t, s: s),
+    ("t.v + s.v", _add),
+    ("t.v - 1", lambda t, s: _add(t, -1)),
+]
+_NMBS_COND = [("t.v > 0", lambda t, s: _gt(t, 0)), ("t.v IS NULL", lambda t, s: t is None)]
+_NMBS_SET = [("t.v + 100", lambda t, s: _add(t, 100)), ("NULL", lambda t, s: None)]
+_INS_COND = [("s.v > 0", lambda t, s: _gt(s, 0)), ("s.v IS NULL", lambda t, s: s is None)]
+
+
+def _clauses(conds, sets):
+    """Up to two ``(condition | None, action)`` pairs; action None is
+    DELETE, a drawn SET expression is UPDATE v."""
+    action = st.one_of(st.none(), st.sampled_from(sets))
+    return st.lists(st.tuples(st.one_of(st.none(), st.sampled_from(conds)), action), max_size=2)
+
+
+_KEEP = object()
+
+
+def _merge_model(target, source, matched, nmbs, insert, ins_cond):
+    def taken(clauses, t, s):
+        return next((a for c, a in clauses if c is None or c[1](t, s) is True), _KEEP)
+
+    out, hit = [], set()
+    for k, tv in target:
+        match = [sv for sk, sv in source if k is not None and sk == k]
+        if match:
+            hit.add(k)
+        s = match[0] if match else None
+        action = taken(matched if match else nmbs, tv, s)
+        if action is _KEEP:
+            out.append((k, tv))
+        elif action is not None:
+            out.append((k, action[1](tv, s)))
+    if insert:
+        out += [
+            (sk, sv)
+            for sk, sv in source
+            if (sk is None or sk not in hit) and (ins_cond is None or ins_cond[1](None, sv) is True)
+        ]
+    return out
+
+
+def _nulls_last(rows):
+    return sorted(rows, key=lambda r: tuple((x is None, x or 0) for x in r))
+
+
+_key = st.one_of(st.none(), st.integers(0, 5))
+_val = st.one_of(st.none(), st.integers(-3, 3))
+
+
+# the fast profile's first examples are near-empty, so a clause list long
+# enough to test ordering needs a larger budget than the other suites
+@settings(max_examples=n_examples(12, 30), deadline=None, derandomize=DERANDOMIZE)
+@given(
+    target=st.lists(st.tuples(_key, _val), max_size=8),
+    two_files=st.booleans(),
+    source=st.lists(st.tuples(_key, _val), max_size=6),
+    matched=_clauses(_M_COND, _M_SET),
+    nmbs=_clauses(_NMBS_COND, _NMBS_SET),
+    insert=st.booleans(),
+    ins_cond=st.one_of(st.none(), st.sampled_from(_INS_COND)),
+)
+def test_merge_matches_first_match_wins_model(
+    spark, target, two_files, source, matched, nmbs, insert, ins_cond
+):
+    # a NULL source key matches nothing; a repeated non-NULL one would be
+    # a cardinality violation, so keep its first row only
+    seen: set = set()
+    source = [r for r in source if r[0] is None or not (r[0] in seen or seen.add(r[0]))]
+    schema = "k bigint, v bigint"
+    t = _fresh_table(spark, schema, None)
+    mid = len(target) // 2 if two_files else len(target)
+    for chunk in (target[:mid], target[mid:]):
+        if chunk:
+            t.refresh().append(local_df(spark, chunk, schema))
+
+    def api(clauses):
+        return [
+            (c and c[0], ("delete",) if a is None else ("update", {"v": a[0]}))
+            for c, a in clauses
+        ]
+
+    t.refresh().merge(
+        local_df(spark, source, schema),
+        on="t.k = s.k",
+        matched_clauses=api(matched),
+        not_matched_by_source_clauses=api(nmbs),
+        insert_when_not_matched=insert,
+        insert_condition=ins_cond and ins_cond[0],
+    )
+    got = [(r["k"], r["v"]) for r in t.refresh().df().collect()]
+    expect = _merge_model(target, source, matched, nmbs, insert, ins_cond)
+    assert _nulls_last(got) == _nulls_last(expect)
+
+
 # ---------------------------------------------------------------------------
 # Schema-evolution soundness: any sequence of add/rename/drop/widen/append
 # must read back exactly what the in-memory model predicts (field-ID

@@ -91,3 +91,34 @@ def test_equality_delete_and_lineage_reads_match_the_model(spark, table):
     }
     assert seqs[5] > seqs[4]
     assert lineage.select("_row_id").distinct().count() == len(model)
+
+
+# Spark jobs per row-level write, measured before DELETE, UPDATE and MERGE
+# shared one executor (IceLiteTable._row_level): the shared path may not
+# add Spark work. Each op runs on a fresh fixture table.
+_DML = {
+    "mor-delete": (lambda spark, t: t.delete("id IN (17, 99)"), 1, {17: None, 18: "v18"}),
+    "mor-update": (
+        lambda spark, t: t.update({"v": "'x'"}, where="id IN (3, 150)"),
+        2,
+        {3: "x", 150: "x", 4: "v4"},
+    ),
+    "cow-merge": (
+        lambda spark, t: t.merge(
+            local_df(spark, [(5, "m5"), (300, "m300")], _SCHEMA),
+            on="t.id = s.id",
+            matched_update={"v": "s.v"},
+        ),
+        3,
+        {5: "m5", 300: "m300", 6: "v6"},
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_DML))
+def test_dml_write_runs_its_pinned_job_count(spark, table, op):
+    run, n_jobs, expect = _DML[op]
+    _, jobs = _jobs(spark, f"dml-jobs-{op}", lambda: run(spark, table))
+    assert len(jobs) == n_jobs
+    got = {r.id: r.v for r in table.refresh().df().filter(F.col("id").isin(*expect)).collect()}
+    assert got == {k: v for k, v in expect.items() if v is not None}
