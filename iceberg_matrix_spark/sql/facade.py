@@ -1314,6 +1314,8 @@ class IceLiteSQL:
         # Iceberg's write-layout DDL: WRITE ORDERED BY sets the sort order
         # AND range distribution; WRITE LOCALLY ORDERED BY sets only the
         # local sort; WRITE DISTRIBUTED BY PARTITION sets hash clustering.
+        # Every later data write (INSERT, DML, MERGE, upsert, compaction)
+        # honours both through IceLiteTable._write_data_files.
         wm = re.match(
             r"WRITE\s+(LOCALLY\s+)?ORDERED\s+BY\s*(.*)$", body, re.I | re.S
         )

@@ -28,7 +28,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
-from iceberg_matrix_spark.tables.metadata import load_metadata
+from iceberg_matrix_spark.tables.metadata import _ancestors, load_metadata
 
 SOURCE_NAME = "icelite_stream"
 
@@ -41,14 +41,8 @@ class _FilePartition(InputPartition):
 
 def _main_lineage(meta):
     """Snapshots on the main-branch parent chain, oldest first."""
-    by_id = {s.snapshot_id: s for s in meta.snapshots}
     ref = meta.refs.get("main")
-    chain = []
-    cur = by_id.get(ref.snapshot_id) if ref else None
-    while cur is not None:
-        chain.append(cur)
-        cur = by_id.get(cur.parent_id) if cur.parent_id is not None else None
-    return list(reversed(chain))
+    return list(reversed(list(_ancestors(meta, ref.snapshot_id if ref else None))))
 
 
 class IceLiteStreamReader(DataSourceStreamReader):

@@ -18,6 +18,8 @@ from iceberg_matrix_spark.tables.table import (
     IceLiteTable,
     _file_uri,
     _head,
+    _sort_columns,
+    _sort_fields,
     _Staged,
 )
 
@@ -115,16 +117,25 @@ def rewrite_data_files(
     as a compact file set (op="replace"); the captured files' delete files
     are applied and dropped. Returns a summary like the Iceberg procedure.
 
-    ``strategy`` mirrors Iceberg's rewrite_data_files strategies:
+    ``strategy`` mirrors Iceberg's rewrite_data_files strategies. Each
+    one only picks an order and a file count for
+    ``IceLiteTable._write_data_files``, the layout step every IceLite
+    write shares. Other writes distribute by ``write.distribution-mode``
+    and sort by the table order; a rewrite distributes by its strategy
+    instead. Either way every output file holds one partition value and
+    is sorted by the order:
 
-    - ``binpack`` (default): rewrite as-is (optionally repartitioned).
-    - ``sort``: range-repartition + sort within partitions on ``columns``
-      (default: the table's registered sort order, see
-      ``replace_sort_order``) so each output file covers a disjoint key
-      range — manifest min/max pruning then skips files for range
-      predicates. At 100 TB this is the difference between scanning the
-      whole table and scanning one file per point query.
-    - ``zorder``: cluster on the Morton interleave of ``columns`` so
+    - ``binpack`` (default): no shuffle; read splits merge into
+      ``target_partitions`` tasks, or by default into as many as
+      ``write.target-file-size-bytes`` asks for. Files keep the table
+      sort order.
+    - ``sort``: range-distribute on the partition columns plus
+      ``columns`` (default: the table's registered sort order, see
+      ``replace_sort_order``) into ``target_partitions`` tasks (default
+      ``spark.sql.shuffle.partitions``), so each output file covers a
+      disjoint key range — manifest min/max pruning then skips files for
+      range predicates.
+    - ``zorder``: the same on the Morton interleave of ``columns``, so
       min/max bounds tighten on EVERY z-dimension at once — multi-column
       predicates prune files that a single-column sort cannot.
 
@@ -135,8 +146,6 @@ def rewrite_data_files(
     left the head or a newer delete file landed, the same as Iceberg's
     conflicting-delete validation."""
 
-    from pyspark.sql import functions as F
-
     if strategy not in ("binpack", "sort", "zorder"):
         raise ValueError(f"unknown rewrite strategy: {strategy!r}")
 
@@ -145,48 +154,26 @@ def rewrite_data_files(
         if parent is None:
             raise ValueError("nothing to compact")
         live = table._read_snapshot(parent, with_meta=False)
+        order = None
+        n = target_partitions or int(table.spark.conf.get("spark.sql.shuffle.partitions"))
         if strategy == "sort":
-            if columns:
-                fields = []
-                for c in columns:
-                    parts = c.split()
-                    direction = parts[1].lower() if len(parts) > 1 else "asc"
-                    if direction not in ("asc", "desc"):
-                        raise ValueError(f"bad sort direction: {c!r}")
-                    fields.append({"column": parts[0], "direction": direction})
-            else:
-                fields = table.sort_order_fields()
+            fields = (
+                _sort_fields(columns, meta.current_schema.names())
+                if columns
+                else table.sort_order_fields()
+            )
             if not fields:
                 raise ValueError(
                     "strategy='sort' needs columns= or a table sort order "
                     "(replace_sort_order)"
                 )
-            order = [
-                F.col(f["column"]).desc() if f["direction"] == "desc" else F.col(f["column"]).asc()
-                for f in fields
-            ]
-            n = target_partitions or int(
-                table.spark.conf.get("spark.sql.shuffle.partitions")
-            )
-            live = live.repartitionByRange(n, *order).sortWithinPartitions(*order)
+            order = _sort_columns(fields)
         elif strategy == "zorder":
             if not columns:
                 raise ValueError("strategy='zorder' needs columns=")
-            n = target_partitions or int(
-                table.spark.conf.get("spark.sql.shuffle.partitions")
-            )
-            zv = _zorder_expr(live, columns)
-            live = (
-                live.withColumn("__z", zv)
-                .repartitionByRange(n, F.col("__z"))
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
-        elif target_partitions:
-            live = live.repartition(target_partitions)
-        else:
-            # size-aware binpack: coalesce (no shuffle — merges read
-            # splits, Iceberg's binpack grouping) toward
+            order = [_zorder_expr(live, columns).asc()]
+        elif not target_partitions:
+            # size-aware binpack: merge read splits toward
             # write.target-file-size-bytes so compaction emits ~target-
             # sized files instead of one file per input split
             target_bytes = int(
@@ -196,7 +183,6 @@ def rewrite_data_files(
             )
             total = sum(f.file_size_bytes for f in parent.data_files)
             n = max(1, -(-total // max(target_bytes, 1)))
-            live = live.coalesce(n)
         # every delete file is applied by the read above, so the snapshot
         # drops them all along with the victims
         staged = _Staged(
@@ -205,7 +191,7 @@ def rewrite_data_files(
                 _file_uri(f.path) for f in parent.data_files + parent.delete_files
             },
         )
-        table._write_data_files(live, staged)
+        table._write_data_files(live, staged, order, n)
         staged.summary = {
             "rewritten-data-files": len(parent.data_files),
             "added-data-files-compact": len(staged.data_files),

@@ -248,6 +248,17 @@ class TableMetadata:
         return TableMetadata(**raw)
 
 
+def _ancestors(meta: TableMetadata, snapshot_id: int | None):
+    """The snapshots on ``snapshot_id``'s parent chain, newest first and
+    starting with it. The walk ends at the first snapshot that is no
+    longer in ``meta`` (expired), not with a KeyError."""
+    by_id = {s.snapshot_id: s for s in meta.snapshots}
+    snap = by_id.get(snapshot_id)
+    while snap is not None:
+        yield snap
+        snap = by_id.get(snap.parent_id)
+
+
 def new_table_metadata(
     location: str,
     schema: TableSchema,

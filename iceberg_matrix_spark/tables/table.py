@@ -45,6 +45,7 @@ from iceberg_matrix_spark.tables.metadata import (
     Snapshot,
     TableMetadata,
     TableSchema,
+    _ancestors,
     commit_metadata,
     load_metadata,
 )
@@ -427,27 +428,32 @@ class _ManageSnapshots:
         self._ops: list = []
 
     def create_branch(self, snapshot_id: int, branch_name: str):
-        self._ops.append(
-            lambda: self._table.create_branch(branch_name, snapshot_id)
-        )
+        self._ops.append((_add_ref, branch_name, "branch", snapshot_id))
         return self
 
     def create_tag(self, snapshot_id: int, tag_name: str):
-        self._ops.append(lambda: self._table.create_tag(tag_name, snapshot_id))
+        self._ops.append((_add_ref, tag_name, "tag", snapshot_id))
         return self
 
     def remove_branch(self, branch_name: str):
-        self._ops.append(lambda: self._table.drop_ref(branch_name))
+        self._ops.append((_remove_ref, branch_name))
         return self
 
     def remove_tag(self, tag_name: str):
-        self._ops.append(lambda: self._table.drop_ref(tag_name))
+        self._ops.append((_remove_ref, tag_name))
         return self
 
     def commit(self) -> None:
+        """Apply the queued ops in order as one metadata commit: if one
+        raises, none of them lands."""
         ops, self._ops = self._ops, []
-        for op in ops:
-            op()
+
+        def mutate(meta: TableMetadata) -> TableMetadata:
+            for op, *args in ops:
+                meta = op(meta, *args)
+            return meta
+
+        self._table._commit(mutate)
 
 
 class PartitionSpecView:
@@ -660,11 +666,28 @@ class IceLiteTable:
                 result[c] = _strip_null_leaves(merged).simpleString()
         return result
 
-    def _write_data_files(self, df: DataFrame, staged: _Staged) -> None:
+    def _write_data_files(
+        self, df: DataFrame, staged: _Staged, order: list | None = None, files: int | None = None
+    ) -> None:
         """Write df as parquet data files in the current schema and add
         their entries, with footer stats, to ``staged``. Inferred
         variant-shred schemas go to ``staged.properties`` so they ride
-        the same commit."""
+        the same commit.
+
+        Every data file IceLite writes is laid out here, in the one
+        required ordering of Iceberg's Spark writer: partition columns
+        first, then the table sort order. ``write.distribution-mode``
+        distributes the rows (``hash``: by the partition columns;
+        ``range``: by the partition columns plus the order; ``none``: as
+        they come), and each task sorts them by partition columns, then
+        order, so Spark's planned write adds no partition sort of its own
+        that would drop the order. ``rewrite_data_files`` overrides the
+        layout: ``order`` (sort-order Columns) replaces the table order
+        and range-distributes into ``files`` tasks; ``files`` alone
+        coalesces into that many tasks (binpack, no shuffle)."""
+        mode = str(self.meta.properties.get("write.distribution-mode", "none")).lower()
+        if mode not in ("none", "hash", "range"):
+            raise ValueError(f"bad write.distribution-mode: {mode!r}")
         schema_id = self.meta.current_schema_id
         ts = self.meta.schema_by_id(schema_id)
         out = self._align(df, ts)
@@ -720,24 +743,34 @@ class IceLiteTable:
             if prop.startswith("write.parquet.bloom-filter-enabled.column.")
             and str(val).lower() == "true"
         }
-        if transforms:
-            # identity transforms partition on an aliased copy (__p_<col>):
-            # partitionBy strips the partition column from the data files,
-            # and the source column must survive in the data.
-            pcols = {
-                (f"__p_{t.source}" if t.kind == "identity" else t.field_name): t.apply_typed(
-                    dtypes[t.source]
-                )
-                for t in transforms
-            }
-            (
-                out.withColumns(pcols)
-                .write.options(**bloom_opts)
-                .partitionBy(*pcols.keys())
-                .parquet(commit_dir)
+        # identity transforms partition on an aliased copy (__p_<col>):
+        # partitionBy strips the partition column from the data files,
+        # and the source column must survive in the data.
+        pcols = {
+            (f"__p_{t.source}" if t.kind == "identity" else t.field_name): t.apply_typed(
+                dtypes[t.source]
             )
+            for t in transforms
+        }
+        keys = list(pcols)
+        if pcols:
+            out = out.withColumns(pcols)
+        if order is not None:
+            out = out.repartitionByRange(files, *keys, *order)
         else:
-            out.write.options(**bloom_opts).parquet(commit_dir)
+            order = _sort_columns(
+                f for f in self.sort_order_fields() if f["column"] in dtypes
+            )
+            if files:
+                out = out.coalesce(files)
+            elif mode == "range" and (keys or order):
+                out = out.repartitionByRange(*keys, *order)
+            elif mode == "hash" and keys:
+                out = out.repartition(*keys)
+        if order:
+            out = out.sortWithinPartitions(*keys, *order)
+        writer = out.write.options(**bloom_opts)
+        (writer.partitionBy(*keys) if keys else writer).parquet(commit_dir)
 
         paths = []
         for root, _dirs, names in os.walk(commit_dir):
@@ -887,40 +920,6 @@ class IceLiteTable:
         meta.refs[branch] = Ref(snapshot_id=sid, type="branch")
         return meta
 
-    def _distribute_for_write(self, df: DataFrame) -> DataFrame:
-        """Honor ``write.distribution-mode`` (none | hash | range) like
-        Iceberg's writer. ``hash`` clusters rows by the partition
-        transforms so each task writes one file per partition instead of
-        EVERY task writing to every partition — the small-files
-        explosion that kills 1000-executor writes. ``range`` range-
-        partitions on partition transforms + sort order so fresh files
-        carry tight, near-disjoint min/max bounds (clustered-on-write,
-        no rewrite needed). Any registered sort order is also applied as
-        the local in-partition sort, both modes."""
-        mode = str(
-            self.meta.properties.get("write.distribution-mode", "none")
-        ).lower()
-        if mode not in ("none", "hash", "range"):
-            raise ValueError(f"bad write.distribution-mode: {mode!r}")
-        dtypes = dict(df.dtypes)
-        order = [
-            F.col(f["column"]).desc() if f["direction"] == "desc" else F.col(f["column"]).asc()
-            for f in self.sort_order_fields()
-            if f["column"] in dtypes
-        ]
-        pexprs = [
-            t.apply_typed(dtypes[t.source])
-            for t in self._transforms()
-            if t.source in dtypes
-        ]
-        if mode == "hash" and pexprs:
-            df = df.repartition(*pexprs)
-        elif mode == "range" and (pexprs or order):
-            df = df.repartitionByRange(*pexprs, *order)
-        if order:
-            df = df.sortWithinPartitions(*order)
-        return df
-
     def append(
         self,
         df: DataFrame,
@@ -935,7 +934,7 @@ class IceLiteTable:
 
         def write(meta: TableMetadata) -> _Staged:
             staged = _Staged("append", summary=dict(extra_summary or {}))
-            self._write_data_files(self._distribute_for_write(df), staged)
+            self._write_data_files(df, staged)
             return staged
 
         self._commit_write(write, branch)
@@ -1063,7 +1062,7 @@ class IceLiteTable:
                     for f in (parent.data_files + parent.delete_files if parent else [])
                 },
             )
-            self._write_data_files(self._distribute_for_write(df), staged)
+            self._write_data_files(df, staged)
             return staged
 
         self._commit_write(write, branch, _new_head)
@@ -1691,19 +1690,11 @@ class IceLiteTable:
         """ALTER TABLE ... WRITE ORDERED BY — metadata-only commit that
         registers a new sort order and makes it the default. Columns may
         carry a direction suffix ("col desc"); default is ascending.
-        Existing files keep their layout; `rewrite_data_files(strategy=
-        "sort")` and range-distributed writes consult this order."""
-        schema_names = set(self.meta.current_schema.names())
-        fields = []
-        for c in columns:
-            parts = c.split()
-            name = parts[0]
-            direction = parts[1].lower() if len(parts) > 1 else "asc"
-            if name not in schema_names:
-                raise KeyError(f"sort column not in schema: {name}")
-            if direction not in ("asc", "desc"):
-                raise ValueError(f"bad sort direction: {c!r}")
-            fields.append({"column": name, "direction": direction})
+        Existing files keep their layout. Every later data write (append,
+        overwrite, upsert, each row-level write and ``rewrite_data_files``)
+        sorts each file it adds by partition columns, then this order,
+        and distributes its rows by ``write.distribution-mode``."""
+        fields = _sort_fields(columns, self.meta.current_schema.names())
 
         def mutate(meta: TableMetadata) -> TableMetadata:
             order_id = max((o["order_id"] for o in meta.sort_orders), default=0) + 1
@@ -1725,22 +1716,14 @@ class IceLiteTable:
     # ------------------------------------------------------------- refs
 
     def create_branch(self, name: str, snapshot_id: int | None = None) -> None:
-        self._create_ref(name, "branch", snapshot_id)
+        """A new branch at ``snapshot_id`` (default: main's head); an
+        existing ref name raises ValueError."""
+        self.manage_snapshots().create_branch(snapshot_id, name).commit()
 
     def create_tag(self, name: str, snapshot_id: int | None = None) -> None:
-        """CREATE TAG ... AS OF VERSION (iceberg_feature_tests.py:888-889)."""
-        self._create_ref(name, "tag", snapshot_id)
-
-    def _create_ref(self, name: str, kind: str, snapshot_id: int | None) -> None:
-        def mutate(meta: TableMetadata) -> TableMetadata:
-            sid = snapshot_id if snapshot_id is not None else meta.current_snapshot_id
-            if sid is None:
-                raise ValueError("cannot create ref on empty table")
-            meta.snapshot_by_id(sid)  # existence check
-            meta.refs[name] = Ref(snapshot_id=sid, type=kind)
-            return meta
-
-        self._commit(mutate)
+        """CREATE TAG ... AS OF VERSION (iceberg_feature_tests.py:888-889);
+        an existing ref name raises ValueError."""
+        self.manage_snapshots().create_tag(snapshot_id, name).commit()
 
     def rollback_to_snapshot(self, snapshot_id: int) -> None:
         """Move ``main`` back to an ANCESTOR snapshot (the Iceberg
@@ -1751,15 +1734,8 @@ class IceLiteTable:
 
         def mutate(meta: TableMetadata) -> TableMetadata:
             meta.snapshot_by_id(snapshot_id)  # existence check
-            by_id = {s.snapshot_id: s for s in meta.snapshots}
-            sid = meta.current_snapshot_id
-            while sid is not None and sid != snapshot_id:
-                # stop cleanly if the chain crosses an expired snapshot —
-                # the walk must end in the documented ValueError, not a
-                # KeyError from the missing intermediate
-                parent = by_id.get(sid)
-                sid = parent.parent_id if parent is not None else None
-            if sid != snapshot_id:
+            chain = _ancestors(meta, meta.current_snapshot_id)
+            if all(s.snapshot_id != snapshot_id for s in chain):
                 raise ValueError(
                     f"snapshot {snapshot_id} is not an ancestor of the current "
                     "main head; use set_current_snapshot for non-linear jumps"
@@ -1787,16 +1763,10 @@ class IceLiteTable:
         procedure). Returns the snapshot id rolled back to."""
 
         def mutate(meta: TableMetadata) -> TableMetadata:
-            by_id = {s.snapshot_id: s for s in meta.snapshots}
-            sid = meta.current_snapshot_id
-            while sid is not None:
-                snap = by_id.get(sid)
-                if snap is None:
-                    break
+            for snap in _ancestors(meta, meta.current_snapshot_id):
                 if snap.timestamp_ms < timestamp_ms:
-                    meta.refs["main"] = Ref(snapshot_id=sid, type="branch")
+                    meta.refs["main"] = Ref(snapshot_id=snap.snapshot_id, type="branch")
                     return meta
-                sid = snap.parent_id
             raise ValueError(
                 f"no ancestor of main committed before {timestamp_ms}"
             )
@@ -1821,17 +1791,13 @@ class IceLiteTable:
                 raise ValueError(f"{branch!r} is a {cur.type}, not a branch")
             head = cur.snapshot_id if cur is not None else None
             # ancestry check: branch head must be on to-head's parent chain
-            if head is not None:
-                by_id = {s.snapshot_id: s for s in meta.snapshots}
-                sid = to_ref.snapshot_id
-                while sid is not None and sid != head:
-                    s = by_id.get(sid)
-                    sid = s.parent_id if s is not None else None
-                if sid != head:
-                    raise ValueError(
-                        f"cannot fast-forward {branch!r}: its head {head} is "
-                        f"not an ancestor of {to!r} ({to_ref.snapshot_id})"
-                    )
+            if head is not None and all(
+                s.snapshot_id != head for s in _ancestors(meta, to_ref.snapshot_id)
+            ):
+                raise ValueError(
+                    f"cannot fast-forward {branch!r}: its head {head} is "
+                    f"not an ancestor of {to!r} ({to_ref.snapshot_id})"
+                )
             meta.refs[branch] = Ref(snapshot_id=to_ref.snapshot_id, type="branch")
             out.append((head, to_ref.snapshot_id))
             return meta
@@ -1870,27 +1836,15 @@ class IceLiteTable:
         ``snapshot_id`` (default: current main head), newest first —
         Iceberg's ``ancestors_of`` procedure output."""
         meta = self.meta
-        by_id = {s.snapshot_id: s for s in meta.snapshots}
         sid = snapshot_id if snapshot_id is not None else meta.current_snapshot_id
-        if sid is not None and sid not in by_id:
+        if sid is not None and all(s.snapshot_id != sid for s in meta.snapshots):
             raise ValueError(f"unknown snapshot {sid}")
-        chain: list[tuple[int, int]] = []
-        while sid is not None:
-            s = by_id.get(sid)
-            if s is None:
-                break
-            chain.append((s.snapshot_id, s.timestamp_ms))
-            sid = s.parent_id
-        return chain
+        return [(s.snapshot_id, s.timestamp_ms) for s in _ancestors(meta, sid)]
 
     def drop_ref(self, name: str) -> None:
-        def mutate(meta: TableMetadata) -> TableMetadata:
-            if name == "main":
-                raise ValueError("cannot drop main")
-            del meta.refs[name]
-            return meta
-
-        self._commit(mutate)
+        """Remove a branch or tag; main and an unknown name raise
+        ValueError."""
+        self._commit(lambda meta: _remove_ref(meta, name))
 
     def set_properties(self, props: dict[str, str]) -> None:
         """ALTER TABLE ... SET TBLPROPERTIES (flink :994)."""
@@ -1910,6 +1864,49 @@ class IceLiteTable:
 def _head(meta: TableMetadata, ref: str = "main") -> Snapshot | None:
     r = meta.refs.get(ref)
     return meta.snapshot_by_id(r.snapshot_id) if r else None
+
+
+def _add_ref(meta: TableMetadata, name: str, kind: str, snapshot_id: int | None) -> TableMetadata:
+    if name in meta.refs:
+        raise ValueError(f"ref {name!r} already exists")
+    sid = snapshot_id if snapshot_id is not None else meta.current_snapshot_id
+    if sid is None:
+        raise ValueError("cannot create ref on empty table")
+    meta.snapshot_by_id(sid)  # existence check
+    meta.refs[name] = Ref(snapshot_id=sid, type=kind)
+    return meta
+
+
+def _remove_ref(meta: TableMetadata, name: str) -> TableMetadata:
+    if name == "main":
+        raise ValueError("cannot drop main")
+    if name not in meta.refs:
+        raise ValueError(f"unknown ref {name!r}")
+    del meta.refs[name]
+    return meta
+
+
+def _sort_fields(columns: list[str], names: list[str]) -> list[dict]:
+    """Sort-order fields from ``"col [asc|desc]"`` strings; a column not
+    in ``names`` raises KeyError, a bad direction ValueError."""
+    fields = []
+    for c in columns:
+        name, *rest = c.split()
+        direction = rest[0].lower() if rest else "asc"
+        if name not in names:
+            raise KeyError(f"sort column not in schema: {name}")
+        if direction not in ("asc", "desc"):
+            raise ValueError(f"bad sort direction: {c!r}")
+        fields.append({"column": name, "direction": direction})
+    return fields
+
+
+def _sort_columns(fields) -> list:
+    """Spark sort Columns for sort-order fields."""
+    return [
+        F.col(f["column"]).desc() if f["direction"] == "desc" else F.col(f["column"]).asc()
+        for f in fields
+    ]
 
 
 def _layout(meta: TableMetadata) -> tuple:

@@ -816,6 +816,55 @@ def test_pyiceberg_update_spec_and_manage_snapshots(spark, catalog):
     assert "dev_branch" not in t.metadata.refs and "v1_tag" not in t.metadata.refs
 
 
+def _two_snapshots(catalog, spark, name):
+    catalog.create_namespace("ns")
+    t = catalog.create_table(f"ns.{name}", "id bigint, val string")
+    t.append(_kv_df(spark, [(1, "a")]))
+    first = t.current_snapshot().snapshot_id
+    t.append(_kv_df(spark, [(2, "b")]))
+    return t, first
+
+
+def test_creating_an_existing_ref_raises(spark, catalog):
+    """A ref name is created once: a tag named main would make main
+    unwritable, and a second create_branch would move the branch."""
+    t, first = _two_snapshots(catalog, spark, "dupref")
+    with pytest.raises(ValueError, match="already exists"):
+        t.create_tag("main")
+    t.create_branch("dev", first)
+    with pytest.raises(ValueError, match="already exists"):
+        t.create_branch("dev")
+    with pytest.raises(ValueError, match="already exists"):
+        t.manage_snapshots().create_tag(first, "dev").commit()
+    refs = t.refresh().metadata.refs
+    assert (refs["main"].type, refs["dev"].type) == ("branch", "branch")
+    assert refs["dev"].snapshot_id == first
+    t.append(_kv_df(spark, [(3, "c")]))
+    assert sorted(r.id for r in t.df().collect()) == [1, 2, 3]
+
+
+def test_dropping_an_unknown_ref_raises_value_error(spark, catalog):
+    t, _first = _two_snapshots(catalog, spark, "noref")
+    with pytest.raises(ValueError, match="unknown ref"):
+        t.drop_ref("nosuch")
+    with pytest.raises(ValueError, match="unknown ref"):
+        t.manage_snapshots().remove_tag("nosuch").commit()
+
+
+def test_manage_snapshots_commits_all_ops_or_none(spark, catalog):
+    t, first = _two_snapshots(catalog, spark, "atomic")
+    version = t.version
+    with pytest.raises(KeyError, match="no snapshot"):
+        t.manage_snapshots().create_branch(first, "dev").create_tag(999, "bad").commit()
+    assert t.refresh().version == version
+    assert set(t.metadata.refs) == {"main"}
+    t.manage_snapshots().create_branch(first, "dev").create_tag(first, "v1").commit()
+    assert t.refresh().version == version + 1
+    assert {n: r.type for n, r in t.metadata.refs.items()} == {
+        "main": "branch", "dev": "branch", "v1": "tag",
+    }
+
+
 def test_pyiceberg_schema_as_arrow_append_cast(spark, catalog):
     """The reference's append idiom: tbl.append(df.cast(tbl.schema()
     .as_arrow())) (pyiceberg_feature_tests.py:519)."""

@@ -1,5 +1,6 @@
-"""Spark jobs per IceLite read: a point read pays only for what its
-snapshot needs (counted through statusTracker, as in test_store.py)."""
+"""Spark jobs per IceLite read and write: a point read pays only for
+what its snapshot needs, and each write path keeps its pinned job count
+(counted through statusTracker, as in test_store.py)."""
 
 from __future__ import annotations
 
@@ -7,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from iceberg_matrix_spark.session import local_df
+from iceberg_matrix_spark.tables import maintenance as maint
 from iceberg_matrix_spark.tables.catalog import IceLiteCatalog
 
 _SCHEMA = "id bigint, v string"
@@ -93,10 +95,36 @@ def test_equality_delete_and_lineage_reads_match_the_model(spark, table):
     assert lineage.select("_row_id").distinct().count() == len(model)
 
 
-# Spark jobs per row-level write, measured before DELETE, UPDATE and MERGE
-# shared one executor (IceLiteTable._row_level): the shared path may not
-# add Spark work. Each op runs on a fresh fixture table.
+# Spark jobs per write, pinned where they were measured before the path
+# they run through was shared: DELETE, UPDATE and MERGE before one
+# executor (IceLiteTable._row_level), and the rest before one layout step
+# (IceLiteTable._write_data_files). The fixture table has no sort order and
+# distribution mode none, so the layout step may add no Spark work. The
+# sort rewrite ran 3 jobs before: its 61 files (8 ranges x 8 buckets) took
+# the executor-side footer read, where the 15 clustered files now take the
+# driver-side one. Each op runs on a fresh fixture table.
 _DML = {
+    "append": (
+        lambda spark, t: t.append(local_df(spark, [(300, "a")], _SCHEMA)),
+        1,
+        {300: "a", 7: "v7"},
+    ),
+    "overwrite": (
+        lambda spark, t: t.overwrite(local_df(spark, [(1, "o1"), (2, "o2")], _SCHEMA)),
+        1,
+        {1: "o1", 2: "o2", 3: None},
+    ),
+    "upsert": (
+        lambda spark, t: t.upsert(local_df(spark, [(5, "u5"), (300, "u300")], _SCHEMA), ["id"]),
+        2,
+        {5: "u5", 300: "u300", 6: "v6"},
+    ),
+    "rewrite-binpack": (lambda spark, t: maint.rewrite_data_files(t), 1, {0: "v0", 199: "v199"}),
+    "rewrite-sort": (
+        lambda spark, t: maint.rewrite_data_files(t, strategy="sort", columns=["v"]),
+        2,
+        {0: "v0", 199: "v199"},
+    ),
     "mor-delete": (lambda spark, t: t.delete("id IN (17, 99)"), 1, {17: None, 18: "v18"}),
     "mor-update": (
         lambda spark, t: t.update({"v": "'x'"}, where="id IN (3, 150)"),
