@@ -129,12 +129,12 @@ def rewrite_data_files(
       ``target_partitions`` tasks, or by default into as many as
       ``write.target-file-size-bytes`` asks for. Files keep the table
       sort order.
-    - ``sort``: range-distribute on the partition columns plus
-      ``columns`` (default: the table's registered sort order, see
-      ``replace_sort_order``) into ``target_partitions`` tasks (default
-      ``spark.sql.shuffle.partitions``), so each output file covers a
-      disjoint key range — manifest min/max pruning then skips files for
-      range predicates.
+    - ``sort``: range-distribute on ``columns`` alone (default: the
+      table's registered sort order, see ``replace_sort_order``; names
+      resolve case-insensitively) into ``target_partitions`` tasks
+      (default ``spark.sql.shuffle.partitions``), so within each
+      partition every output file covers a disjoint key range — manifest
+      min/max pruning then skips files for range predicates.
     - ``zorder``: the same on the Morton interleave of ``columns``, so
       min/max bounds tighten on EVERY z-dimension at once — multi-column
       predicates prune files that a single-column sort cannot.

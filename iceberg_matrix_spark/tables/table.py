@@ -428,19 +428,19 @@ class _ManageSnapshots:
         self._ops: list = []
 
     def create_branch(self, snapshot_id: int, branch_name: str):
-        self._ops.append((_add_ref, branch_name, "branch", snapshot_id))
+        self._ops.append(lambda m: _add_ref(m, branch_name, "branch", snapshot_id))
         return self
 
     def create_tag(self, snapshot_id: int, tag_name: str):
-        self._ops.append((_add_ref, tag_name, "tag", snapshot_id))
+        self._ops.append(lambda m: _add_ref(m, tag_name, "tag", snapshot_id))
         return self
 
     def remove_branch(self, branch_name: str):
-        self._ops.append((_remove_ref, branch_name))
+        self._ops.append(lambda m: _remove_ref(m, branch_name))
         return self
 
     def remove_tag(self, tag_name: str):
-        self._ops.append((_remove_ref, tag_name))
+        self._ops.append(lambda m: _remove_ref(m, tag_name))
         return self
 
     def commit(self) -> None:
@@ -449,8 +449,8 @@ class _ManageSnapshots:
         ops, self._ops = self._ops, []
 
         def mutate(meta: TableMetadata) -> TableMetadata:
-            for op, *args in ops:
-                meta = op(meta, *args)
+            for op in ops:
+                meta = op(meta)
             return meta
 
         self._table._commit(mutate)
@@ -683,8 +683,10 @@ class IceLiteTable:
         order, so Spark's planned write adds no partition sort of its own
         that would drop the order. ``rewrite_data_files`` overrides the
         layout: ``order`` (sort-order Columns) replaces the table order
-        and range-distributes into ``files`` tasks; ``files`` alone
-        coalesces into that many tasks (binpack, no shuffle)."""
+        and range-distributes on the order alone into ``files`` tasks, so
+        within each partition every file covers a disjoint key range;
+        ``files`` alone coalesces into that many tasks (binpack, no
+        shuffle)."""
         mode = str(self.meta.properties.get("write.distribution-mode", "none")).lower()
         if mode not in ("none", "hash", "range"):
             raise ValueError(f"bad write.distribution-mode: {mode!r}")
@@ -756,7 +758,7 @@ class IceLiteTable:
         if pcols:
             out = out.withColumns(pcols)
         if order is not None:
-            out = out.repartitionByRange(files, *keys, *order)
+            out = out.repartitionByRange(files, *order)
         else:
             order = _sort_columns(
                 f for f in self.sort_order_fields() if f["column"] in dtypes
@@ -1718,12 +1720,12 @@ class IceLiteTable:
     def create_branch(self, name: str, snapshot_id: int | None = None) -> None:
         """A new branch at ``snapshot_id`` (default: main's head); an
         existing ref name raises ValueError."""
-        self.manage_snapshots().create_branch(snapshot_id, name).commit()
+        self._commit(lambda meta: _add_ref(meta, name, "branch", snapshot_id))
 
     def create_tag(self, name: str, snapshot_id: int | None = None) -> None:
         """CREATE TAG ... AS OF VERSION (iceberg_feature_tests.py:888-889);
         an existing ref name raises ValueError."""
-        self.manage_snapshots().create_tag(snapshot_id, name).commit()
+        self._commit(lambda meta: _add_ref(meta, name, "tag", snapshot_id))
 
     def rollback_to_snapshot(self, snapshot_id: int) -> None:
         """Move ``main`` back to an ANCESTOR snapshot (the Iceberg
@@ -1887,14 +1889,18 @@ def _remove_ref(meta: TableMetadata, name: str) -> TableMetadata:
 
 
 def _sort_fields(columns: list[str], names: list[str]) -> list[dict]:
-    """Sort-order fields from ``"col [asc|desc]"`` strings; a column not
-    in ``names`` raises KeyError, a bad direction ValueError."""
+    """Sort-order fields from ``"col [asc|desc]"`` strings. Columns
+    resolve case-insensitively, as Spark's do, and keep the schema's
+    spelling; a column not in ``names`` raises KeyError, a bad direction
+    ValueError."""
+    by_lower = {n.lower(): n for n in reversed(names)}
     fields = []
     for c in columns:
-        name, *rest = c.split()
+        col, *rest = c.split()
         direction = rest[0].lower() if rest else "asc"
-        if name not in names:
-            raise KeyError(f"sort column not in schema: {name}")
+        name = col if col in names else by_lower.get(col.lower())
+        if name is None:
+            raise KeyError(f"sort column not in schema: {col}")
         if direction not in ("asc", "desc"):
             raise ValueError(f"bad sort direction: {c!r}")
         fields.append({"column": name, "direction": direction})

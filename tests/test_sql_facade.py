@@ -351,6 +351,21 @@ def test_call_zorder_sort_order_dispatch(sql):
     assert sql.sql("SELECT count(*) FROM local.nz.t").collect()[0][0] == 4
 
 
+def test_call_sort_order_resolves_column_case_insensitively(sql):
+    """Spark resolves column names case-insensitively, so a CALL's
+    ``sort_order`` does too; the rewritten file is sorted on ``id``."""
+    import pyarrow.parquet as pq
+
+    sql.sql("CREATE NAMESPACE IF NOT EXISTS local.nc")
+    _seed(sql, "local.nc.t", rows="(2,'b'),(3,'c'),(1,'a')")
+    sql.sql(
+        "CALL local.system.rewrite_data_files(table => 'nc.t', "
+        "sort_order => 'ID DESC', target_partitions => 1)"
+    )
+    (f,) = sql.table("local.nc.t").current_snapshot().data_files
+    assert pq.read_table(f.path, columns=["id"]).column("id").to_pylist() == [3, 2, 1]
+
+
 def test_call_compute_table_stats(sql):
     sql.sql("CREATE NAMESPACE IF NOT EXISTS local.ns")
     _seed(sql, "local.ns.st")
