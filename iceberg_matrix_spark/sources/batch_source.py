@@ -11,25 +11,29 @@ the :class:`IceLiteTable` wrapper:
 The driver plans the read with :func:`tables.scan.plan_scan`, the same
 plan ``IceLiteTable.df`` and the DuckDB rebuild execute: snapshot and
 read schema, pruned data files, the delete files that apply, and one
-field-id projection per write schema. This module executes the plan in
-Arrow:
+field-id projection per write schema. :func:`execute_scan` executes a
+plan in Arrow, and it is the one Arrow executor: this source runs it
+once per data file on executors, and ``IceLiteTable.df`` runs it on the
+driver for a small plan (see ``IceLiteTable._read_plan``):
 
-- one input partition per planned data file, carrying its projection
-  and the plan's delete files, decoded on executors;
-- each task applies position deletes to its own file's rows, projects
-  them, then applies the equality deletes newer than its file;
+- one input partition per planned data file, carrying the plan scoped
+  to that file;
+- each file's position deletes drop rows by position, the rows are
+  projected to the read schema, then the equality deletes newer than
+  the file drop rows by key;
 - filter pushdown: ``pushFilters`` turns Spark's EqualTo/Greater/Less
   filters into plan filters, which prune files. All filters are also
   returned as residuals, so Spark re-applies them after the scan:
   pruning is an optimization, never a correctness dependency.
 
-Scale: the driver touches one metadata JSON (partition planning reads no
-data); row decoding, delete merging, and schema projection all run in
-executor Python workers on Arrow batches.
+Scale: planning reads one metadata JSON and no data. Through this
+source, row decoding, delete merging and schema projection run in
+executor Python workers, one task per data file.
 """
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Iterator
 
 from pyspark.sql import SparkSession
@@ -44,14 +48,17 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
-from iceberg_matrix_spark.tables.metadata import load_metadata
+from iceberg_matrix_spark.tables.metadata import TableSchema, load_metadata
 from iceberg_matrix_spark.tables.scan import (
+    META_FILE,
+    META_POS,
+    META_SEQ,
     Column,
     ScanPlan,
+    _file_uri,
     _physical_type,
     plan_scan,
 )
-from iceberg_matrix_spark.tables.table import _file_uri
 
 SOURCE_NAME = "icelite"
 
@@ -105,6 +112,36 @@ def _arrow_type(ddl: str):
     raise NotImplementedError(f"icelite batch source: unsupported type {ddl!r}")
 
 
+def arrow_readable(schema: TableSchema) -> bool:
+    """Whether :func:`execute_scan` can represent every column of
+    ``schema`` (struct and map columns it cannot)."""
+    try:
+        for f in schema.fields:
+            _arrow_type(_physical_type(f.type))
+    except NotImplementedError:
+        return False
+    return True
+
+
+def _default_column(value, typ, n: int):
+    """``n`` copies of a column default, converted to ``typ`` as Spark's
+    ``lit(value).cast(type)`` converts it: metadata stores a date,
+    timestamp or decimal default as its string. A timestamp string
+    without an offset is UTC, the session time zone IceLite runs in."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if value is None:
+        return pa.nulls(n, typ)
+    if pa.types.is_timestamp(typ) and isinstance(value, str):
+        value = datetime.datetime.fromisoformat(value)
+        if typ.tz is not None and value.tzinfo is None:
+            value = value.replace(tzinfo=datetime.timezone.utc)
+    return pa.repeat(pc.cast(pa.array([value]), typ)[0], n)
+
+
 def project_arrow_table(table, columns: list[Column]):
     """Apply a :func:`tables.scan.project` projection to a raw parquet
     Arrow table: rename, cast (widening) and fill defaults. A column the
@@ -120,7 +157,7 @@ def project_arrow_table(table, columns: list[Column]):
             if col.type != typ:
                 col = pc.cast(col, typ)
         else:
-            col = pa.array([c.default] * table.num_rows, type=typ)
+            col = _default_column(c.default, typ, table.num_rows)
         out[c.name] = col
     return pa.table(out)
 
@@ -134,13 +171,106 @@ def _norm(v):
     return v
 
 
+def _equality_hits(rows, key_cols: list[str], keys, file_cols: list[str]):
+    """Mask of the ``rows`` whose ``key_cols`` equal a row of ``keys``
+    (the delete file's ``file_cols``), null-safely and NaN-safely."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if len(key_cols) == 1:
+        # single key: vectorized set membership; Arrow is_in already
+        # matches NaN to NaN and, with nulls in the set, NULL to NULL
+        col = rows[key_cols[0]]
+        return pc.is_in(col, value_set=keys[file_cols[0]].combine_chunks().cast(col.type))
+    # composite keys: row-wise TUPLE matching (_norm maps float NaN to a
+    # sentinel so NaN keys match, mirroring eqNullSafe). Per-column is_in
+    # would cross-match composite keys: deletes {(1,'a'),(2,'b')} must
+    # not delete (1,'b'); Arrow has no struct is_in kernel here.
+    key_set = {
+        tuple(_norm(v) for v in row)
+        for row in zip(*[keys[fc].to_pylist() for fc in file_cols])
+    }
+    found = zip(*[rows[kc].to_pylist() for kc in key_cols])
+    return pa.array([tuple(_norm(v) for v in row) in key_set for row in found], pa.bool_())
+
+
+def execute_scan(plan: ScanPlan, with_meta: bool = False, with_seq: bool = False):
+    """The plan's live rows as one Arrow table in the read schema, read
+    in-process with pyarrow. The plan's filters pruned its files; the
+    caller filters the rows.
+
+    Per data file: its position deletes drop rows by position, the rows
+    are projected to the read schema, then each equality delete newer
+    than the file drops the rows whose keys match one of its rows.
+    ``with_meta`` adds ``__file`` (the file's :func:`tables.scan._file_uri`)
+    and ``__pos`` (the row's index in its file before any delete, Spark's
+    ``_metadata.row_index``); ``with_seq`` adds ``__seq``, the file's
+    sequence number."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    fields = [pa.field(f.name, _arrow_type(_physical_type(f.type))) for f in plan.schema.fields]
+    if with_meta:
+        fields += [pa.field(META_FILE, pa.string()), pa.field(META_POS, pa.int64())]
+    if with_seq:
+        fields.append(pa.field(META_SEQ, pa.int64()))
+
+    # every position-delete row, grouped once into (file identity →
+    # positions); each data file then takes its own positions by lookup
+    dropped = {}
+    if plan.position_deletes:
+        # cast: a delete file written from a Spark scan has non-null columns
+        schema = pa.schema([("file_path", pa.string()), ("pos", pa.int64())])
+        dels = pa.concat_tables(
+            [
+                pq.read_table(d.path, columns=schema.names).cast(schema)
+                for d in plan.position_deletes
+            ]
+        )
+        grouped = dels.group_by("file_path").aggregate([("pos", "list")])
+        dropped = dict(
+            zip(grouped["file_path"].to_pylist(), grouped["pos_list"].combine_chunks())
+        )
+    equality = [
+        (d, pq.read_table(d.path, columns=d.file_cols))
+        for d in plan.equality_deletes
+        if d.file_cols
+    ]
+
+    parts = []
+    for f in plan.files:
+        raw = pq.read_table(f.path)
+        uri = _file_uri(f.path)
+        pos = pa.array(np.arange(raw.num_rows, dtype=np.int64))
+        if uri in dropped:
+            keep = pc.invert(pc.is_in(pos, value_set=dropped[uri].values))
+            raw, pos = raw.filter(keep), pos.filter(keep)
+        out = project_arrow_table(raw, plan.projections[f.schema_id])
+        if with_meta:
+            out = out.append_column(META_FILE, pa.repeat(pa.scalar(uri), len(pos)))
+            out = out.append_column(META_POS, pos)
+        if with_seq:
+            seq = pa.scalar(f.sequence_number, pa.int64())
+            out = out.append_column(META_SEQ, pa.repeat(seq, len(pos)))
+        # equality deletes apply to rows written BEFORE the delete commit;
+        # the delete parquet is read by its write-time column names and
+        # matched against the projected table's read-schema names
+        for d, keys in equality:
+            if out.num_rows and keys.num_rows and f.sequence_number < d.sequence_number:
+                out = out.filter(pc.invert(_equality_hits(out, d.key_cols, keys, d.file_cols)))
+        parts.append(out)
+    # one chunk per column: columns chunked apart slice into empty record
+    # batches, and createDataFrame drops the rows after an empty batch that
+    # follows a non-empty one
+    return pa.concat_tables([pa.schema(fields).empty_table(), *parts]).combine_chunks()
+
+
 class _ScanPartition(InputPartition):
-    def __init__(self, path, seq, columns, pos_deletes, eq_deletes):
-        self.path = path
-        self.seq = seq
-        self.columns = columns  # the file's projection to the read schema
-        self.pos_deletes = pos_deletes  # [delete file path, ...]
-        self.eq_deletes = eq_deletes  # [EqualityDelete, ...]
+    def __init__(self, plan: ScanPlan):
+        self.plan = plan  # the read's plan, scoped to one data file
+        self.path = plan.files[0].path
 
 
 def _plan(options: dict, filters: list[tuple] | None = None) -> ScanPlan:
@@ -168,79 +298,14 @@ class IceLiteBatchReader(DataSourceReader):
 
     def partitions(self) -> list[_ScanPartition]:
         plan = _plan(self.options, self.filters)
-        pos = [d.path for d in plan.position_deletes]
-        return [
-            _ScanPartition(
-                f.path,
-                f.sequence_number,
-                plan.projections[f.schema_id],
-                pos,
-                plan.equality_deletes,
-            )
-            for f in plan.files
-        ]
+        return [_ScanPartition(replace(plan, files=[f])) for f in plan.files]
 
     def read(self, partition: _ScanPartition | None) -> Iterator:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
         if partition is None:
             # PySpark plans one partition of None for an empty plan
             # (an empty table, or every file pruned)
             return
-        table = pq.read_table(partition.path)
-
-        # position deletes scoped to this file (file_path matches the
-        # Spark _metadata.file_path form)
-        uri = _file_uri(partition.path)
-        drop = None
-        for dpath in partition.pos_deletes:
-            dels = pq.read_table(dpath, columns=["file_path", "pos"])
-            mine = dels.filter(pc.equal(dels["file_path"], uri))["pos"]
-            if len(mine):
-                s = mine.to_pylist()
-                drop = set(s) if drop is None else drop | set(s)
-        if drop:
-            mask = [i not in drop for i in range(table.num_rows)]
-            table = table.filter(pa.array(mask))
-
-        out = project_arrow_table(table, partition.columns)
-
-        # equality deletes apply to rows written BEFORE the delete commit;
-        # the delete parquet is read by its write-time column names and
-        # matched against the projected table's read-schema names
-        for d in partition.eq_deletes:
-            if not out.num_rows:
-                break  # nothing left to delete; empty masks are ill-typed
-            if partition.seq >= d.sequence_number or not d.file_cols:
-                continue
-            keys = pq.read_table(d.path, columns=d.file_cols)
-            if not keys.num_rows:
-                continue
-            if len(d.file_cols) == 1:
-                # single-key fast path: vectorized set membership; Arrow
-                # is_in already treats NaN==NaN, nulls handled explicitly
-                vals = keys[d.file_cols[0]].combine_chunks()
-                hit = pc.is_in(out[d.key_cols[0]], value_set=vals)
-                out = out.filter(pc.invert(hit))
-                continue
-            # composite keys: row-wise TUPLE matching, null-safe and
-            # NaN-safe (_norm maps float NaN to a sentinel so NaN keys
-            # match, mirroring eqNullSafe). Per-column is_in would
-            # cross-match composite keys: deletes {(1,'a'),(2,'b')} must
-            # not delete (1,'b'); Arrow has no struct is_in kernel here.
-            key_set = {
-                tuple(_norm(v) for v in row)
-                for row in zip(*[keys[fc].to_pylist() for fc in d.file_cols])
-            }
-            rows = zip(*[out[kc].to_pylist() for kc in d.key_cols])
-            mask = [
-                tuple(_norm(v) for v in row) not in key_set for row in rows
-            ]
-            out = out.filter(pa.array(mask, type=pa.bool_()))
-
-        yield from out.to_batches()
+        yield from execute_scan(partition.plan).to_batches()
 
 
 class IceLiteBatchDataSource(DataSource):

@@ -10,8 +10,11 @@ IceLite re-implements that *operation surface* Spark-first:
 - table state is JSON snapshot metadata with an atomic, optimistic
   version-file commit protocol (create-exclusive, like Iceberg's
   version-hint + metadata.json chain);
-- MoR reads resolve position deletes with ``_metadata.file_path`` /
-  ``_metadata.row_index`` anti-joins — all distributed DataFrame ops;
+- MoR reads apply position and equality deletes to the data files. A
+  read whose files fit under ``spark.sql.autoBroadcastJoinThreshold``
+  runs in-process in Arrow and reaches Spark as a local relation; a
+  larger one is a Spark parquet scan with ``_metadata.file_path`` /
+  ``_metadata.row_index`` anti-joins;
 - hidden partitioning uses Iceberg's transform family
   (years/months/days/hours/bucket/truncate/identity) with manifest-level
   file pruning on scan.

@@ -25,7 +25,7 @@ from __future__ import annotations
 import glob as _glob
 import os
 
-from iceberg_matrix_spark.tables.scan import plan_scan
+from iceberg_matrix_spark.tables.scan import _file_uri, plan_scan
 from iceberg_matrix_spark.tables.table import IceLiteTable
 
 
@@ -60,15 +60,20 @@ def _duck_type(t: str) -> str:
     return _DUCK_TYPES.get(tl, "VARCHAR")
 
 
-def _duck_lit(v) -> str:
-    """Python value → DuckDB literal (V3 initial_default backfill)."""
+def _duck_lit(v, t: str) -> str:
+    """A column default → DuckDB value of the column's type ``t`` (V3
+    initial_default backfill). Metadata stores a date, timestamp or
+    decimal default as its string, so the literal is cast, as Spark's
+    ``lit(v).cast(t)`` is."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, (int, float)):
-        return repr(v)
-    return "'" + str(v).replace("'", "''") + "'"
+        lit = "TRUE" if v else "FALSE"
+    elif isinstance(v, (int, float)):
+        lit = repr(v)
+    else:
+        lit = "'" + str(v).replace("'", "''") + "'"
+    return f"CAST({lit} AS {_duck_type(t)})"
 
 
 def _norm(path: str) -> str:
@@ -156,7 +161,7 @@ def duckdb_scan_sql(table: IceLiteTable, ref: str = "main") -> str:
             (
                 f'"{c.source}" AS "{c.name}"'
                 if c.source is not None
-                else f'{_duck_lit(c.default)} AS "{c.name}"'
+                else f'{_duck_lit(c.default, c.type)} AS "{c.name}"'
             )
             for c in g["select"]
         )
@@ -174,11 +179,23 @@ def duckdb_scan_sql(table: IceLiteTable, ref: str = "main") -> str:
     ctes = [f"data AS ({scan})"]
     live = "data"
 
+    if manifest["position_deletes"] or manifest["equality_deletes"]:
+        # each concrete data file: DuckDB's filename, its file identity
+        # (the form position deletes record, tables/scan.py:_file_uri,
+        # without the scheme) and its sequence number
+        file_rows = ", ".join(
+            f"({_duck_path(_norm(p))}, {_duck_path(_norm(_file_uri(p)))}, {e['seq']})"
+            for e in manifest["data_entries"]
+            for p in e["paths"]
+        )
+        ctes.append(f"files(__fname, __key, __seq) AS (VALUES {file_rows})")
+
     if manifest["position_deletes"]:
         del_list = ", ".join(_duck_path(p) for p in manifest["position_deletes"])
         ctes.append(
-            f"pdels AS (SELECT {norm.format(x='file_path')} AS __fname, "
-            f"pos AS __pos FROM read_parquet([{del_list}]))"
+            f"pdels AS (SELECT f.__fname, d.pos AS __pos "
+            f"FROM read_parquet([{del_list}]) d "
+            f"JOIN files f ON {norm.format(x='d.file_path')} = f.__key)"
         )
         ctes.append(
             f"pos_kept AS (SELECT * FROM {live} "
@@ -191,15 +208,9 @@ def duckdb_scan_sql(table: IceLiteTable, ref: str = "main") -> str:
         # per-concrete-file sequence numbers: equality deletes apply only
         # to rows written BEFORE the delete (data_seq < delete_seq), as in
         # every IceLite reader (tables/scan.py)
-        seq_rows = ", ".join(
-            f"({_duck_path(_norm(p))}, {e['seq']})"
-            for e in manifest["data_entries"]
-            for p in e["paths"]
-        )
-        ctes.append(f"seqs(__fname, __seq) AS (VALUES {seq_rows})")
         ctes.append(
             f"seq_live AS (SELECT {live}.*, __seq FROM {live} "
-            f"JOIN seqs USING (__fname))"
+            f"JOIN files USING (__fname))"
         )
         live = "seq_live"
         for i, e in enumerate(manifest["equality_deletes"]):

@@ -13,10 +13,10 @@ import re
 import shutil
 
 from iceberg_matrix_spark.tables.metadata import TableMetadata
+from iceberg_matrix_spark.tables.scan import _file_uri
 from iceberg_matrix_spark.tables.table import (
     _POS_DELETE_SCHEMA,
     IceLiteTable,
-    _file_uri,
     _head,
     _sort_columns,
     _sort_fields,

@@ -24,11 +24,14 @@ only execute the :class:`ScanPlan` it returns:
 Executing the plan is the readers' part, with the same semantics in each:
 a position delete removes (file, row position); an equality delete
 removes rows of files older than itself whose key columns equal one of
-its key rows, null-safely (NULL matches NULL, NaN matches NaN).
+its key rows, null-safely (NULL matches NULL, NaN matches NaN). A
+position delete names its data file by :func:`_file_uri`, the one file
+identity every reader and the commit path compare.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 
 from iceberg_matrix_spark.tables.metadata import (
@@ -39,6 +42,36 @@ from iceberg_matrix_spark.tables.metadata import (
     TableSchema,
 )
 from iceberg_matrix_spark.tables.transforms import Transform, parse_transform
+
+
+# Row metadata columns a read attaches on request: the row's data file
+# (its _file_uri), its index in that file before any delete (Spark's
+# _metadata.row_index) and the file's sequence number.
+META_FILE = "__file"
+META_POS = "__pos"
+META_SEQ = "__seq"
+
+# What java.net.URI quotes in a path, as Hadoop's Path.toUri() (and so
+# Spark's _metadata.file_path) renders it: the ASCII characters URIs
+# forbid, control characters (Unicode Cc) and space separators (Zs, Zl,
+# Zp). Other non-ASCII characters stay as they are.
+_URI_QUOTED = re.compile(
+    r'[ "#%<>?\[\\\]^`{|}\x00-\x1f\x7f-\xa0'
+    r"\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+)
+
+
+def _file_uri(path: str) -> str:
+    """The identity of a data file: Spark's ``_metadata.file_path`` for
+    ``path``. A local path gets Hadoop's single-slash scheme
+    (``file:/tmp/...``), and each character java.net.URI quotes becomes
+    ``%XX`` of its UTF-8 bytes (space ``%20``, ``%`` ``%25``, ``#``
+    ``%23``, ``?`` ``%3F``). A ``file:`` URI is already in this form."""
+    if path.startswith("file:"):
+        return path
+    return "file:" + _URI_QUOTED.sub(
+        lambda m: "".join(f"%{b:02X}" for b in m.group().encode()), path
+    )
 
 
 @dataclass(frozen=True)

@@ -11,10 +11,14 @@ reads (flink :1184-1211), schema evolution with field-ID resolution
 (:702-750).
 
 Scale design notes
-- All data movement is DataFrame work on executors; the driver touches
-  only file *lists* and JSON metadata (manifest-scale, like Iceberg's
-  planning path).
-- MoR reads resolve position deletes with an anti-join on
+- Writes are DataFrame work on executors; the driver touches only file
+  *lists* and JSON metadata (manifest-scale, like Iceberg's planning
+  path).
+- Reads pick their executor by size (``_read_plan``): a snapshot whose
+  data files add up to at most ``spark.sql.autoBroadcastJoinThreshold``
+  is read in-process with pyarrow, as Spark collects a relation of that
+  size to the driver for a broadcast; a larger one is a parquet scan on
+  executors that resolves position deletes with an anti-join on
   (_metadata.file_path, _metadata.row_index) — a broadcast-able join
   because delete files are small relative to data.
 - CoW DML rewrites only the files that contain matching rows (file set
@@ -50,7 +54,11 @@ from iceberg_matrix_spark.tables.metadata import (
     load_metadata,
 )
 from iceberg_matrix_spark.tables.scan import (
+    META_FILE,
+    META_POS,
+    META_SEQ,
     ScanPlan,
+    _file_uri,
     _physical_type,
     plan_scan,
     plan_snapshot,
@@ -63,9 +71,6 @@ from iceberg_matrix_spark.tables.transforms import (
     transform_spec,
 )
 
-_META_FILE = "__file"
-_META_POS = "__pos"
-_META_SEQ = "__seq"
 # Every position-delete file IceLite writes has exactly these columns;
 # reading with the schema pinned skips Spark's schema-inference job.
 _POS_DELETE_SCHEMA = "file_path string, pos bigint"
@@ -1095,13 +1100,13 @@ class IceLiteTable:
             self.spark,
             [(_file_uri(f.path), f.first_row_id) for f in plan.files]
             or [("", None)],
-            f"{_META_FILE} string, __first_row_id long",
+            f"{META_FILE} string, __first_row_id long",
         )
         return (
-            out.join(F.broadcast(fr_map), _META_FILE, "left")
-            .withColumn("_row_id", F.col("__first_row_id") + F.col(_META_POS))
-            .withColumn("_last_updated_sequence_number", F.col(_META_SEQ))
-            .drop(_META_FILE, _META_POS, _META_SEQ, "__first_row_id")
+            out.join(F.broadcast(fr_map), META_FILE, "left")
+            .withColumn("_row_id", F.col("__first_row_id") + F.col(META_POS))
+            .withColumn("_last_updated_sequence_number", F.col(META_SEQ))
+            .drop(META_FILE, META_POS, META_SEQ, "__first_row_id")
         )
 
     def read_incremental(self, start_snapshot_id: int, end_snapshot_id: int) -> DataFrame:
@@ -1130,7 +1135,9 @@ class IceLiteTable:
             )
         plan = plan_snapshot(self.meta, end)
         files = [f for f in plan.files if lo < f.sequence_number <= hi]
-        return self._read_files(replace(plan, files=files), with_meta=False)
+        return self._read_plan(
+            replace(plan, files=files, position_deletes=[], equality_deletes=[])
+        )
 
     def snapshot_changes(
         self, start_snapshot_id: int, end_snapshot_id: int
@@ -1162,24 +1169,113 @@ class IceLiteTable:
     ) -> list[DataFileEntry]:
         return prune_files(files, filters, *pruning_spec(self.meta))
 
+    def _read_snapshot(self, snap: Snapshot | None, with_meta: bool = False) -> DataFrame:
+        """The live rows of ``snap`` in the current schema."""
+        return self._read_plan(plan_snapshot(self.meta, snap), with_meta)
+
+    def _read_plan(
+        self, plan: ScanPlan, with_meta: bool = False, with_seq: bool = False
+    ) -> DataFrame:
+        """The plan's live rows: data files minus position and equality
+        deletes, filtered by the plan's filters. ``with_meta`` adds each
+        row's ``__file`` and ``__pos`` (DML finds the rows it rewrites or
+        deletes by them); ``with_seq`` adds its file's ``__seq`` (row
+        lineage).
+
+        This is the one place that picks the executor. A plan whose data
+        files add up to at most ``spark.sql.autoBroadcastJoinThreshold``
+        bytes runs in-process in Arrow (``execute_scan``, the batch
+        source's executor): that threshold is Spark's own limit on a
+        relation it collects to the driver for a broadcast, which the
+        Spark path does to every delete file. The rows reach Spark as a
+        ``LocalRelation``, so a filter folds into it and ``collect`` runs
+        no job; a ``with_meta`` read keeps ``local_df``'s one slice, so a
+        write from it runs one task. A larger plan, a plan with an entry
+        of unknown size (0 bytes) or with a column type Arrow cannot
+        represent, and every plan at a threshold of -1, run as a Spark
+        parquet scan (:meth:`_scan_with_spark`)."""
+        # the batch source imports tables.scan, whose package imports this module
+        from iceberg_matrix_spark.sources.batch_source import (  # noqa: PLC0415
+            arrow_readable,
+            execute_scan,
+        )
+
+        limit = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        sizes = [f.file_size_bytes for f in plan.files]
+        if all(sizes) and sum(sizes) <= limit and arrow_readable(plan.schema):
+            struct = self._spark_schema(plan.schema)
+            if with_meta:
+                struct = struct.add(META_FILE, "string").add(META_POS, "long")
+            if with_seq:
+                struct = struct.add(META_SEQ, "long")
+            df = self.spark.createDataFrame(execute_scan(plan, with_meta, with_seq), struct)
+            if with_meta:
+                df = df.coalesce(1)
+        else:
+            df = self._scan_with_spark(plan, with_meta, with_seq)
+        for col, op, val in plan.filters:
+            df = df.filter(F.expr(f"{col} {'==' if op == '=' else op} {_sql_lit(val)}"))
+        return df
+
+    def _scan_with_spark(self, plan: ScanPlan, with_meta: bool, with_seq: bool) -> DataFrame:
+        """:meth:`_read_plan` on Spark executors. A plain read scans the
+        data files and nothing else. The file and position columns come
+        from the parquet ``_metadata`` column and are attached only when
+        the plan has a position or equality delete or the caller asks for
+        them; the sequence-number join only when the plan has an equality
+        delete or the caller asks for it. Columns the caller did not ask
+        for are dropped before returning."""
+        need_seq = with_seq or bool(plan.equality_deletes)
+        need_meta = with_meta or need_seq or bool(plan.position_deletes)
+        df = self._read_files(plan, need_meta, need_seq)
+
+        if plan.position_deletes:
+            dels = (
+                self.spark.read.schema(_POS_DELETE_SCHEMA)
+                .parquet(*[d.path for d in plan.position_deletes])
+                .select(F.col("file_path").alias(META_FILE), F.col("pos").alias(META_POS))
+            )
+            df = df.join(F.broadcast(dels), [META_FILE, META_POS], "left_anti")
+
+        for d in plan.equality_deletes:
+            # rows older than the delete whose keys match null-safely
+            keys = self.spark.read.parquet(d.path).select(*d.file_cols).toDF(*d.key_cols)
+            cond = None
+            for c in d.key_cols:
+                piece = F.col(f"__eqdata.{c}").eqNullSafe(F.col(f"__eqdel.{c}"))
+                cond = piece if cond is None else (cond & piece)
+            doomed = (
+                df.filter(F.col(META_SEQ) < F.lit(d.sequence_number))
+                .alias("__eqdata")
+                .join(F.broadcast(keys.alias("__eqdel")), cond, "left_semi")
+                .select(META_FILE, META_POS)
+            )
+            df = df.join(doomed, [META_FILE, META_POS], "left_anti")
+
+        if need_seq and not with_seq:
+            df = df.drop(META_SEQ)
+        if need_meta and not with_meta:
+            df = df.drop(META_FILE, META_POS)
+        return df
+
     def _read_files(
         self, plan: ScanPlan, with_meta: bool, with_seq: bool = False
     ) -> DataFrame:
         """Read the plan's data files through their projections, without
-        deletes. ``with_meta`` adds each row's file and position;
-        ``with_seq`` (which needs ``with_meta``) adds its file's sequence
-        number."""
+        deletes, as a Spark parquet scan. ``with_meta`` adds each row's
+        file and position; ``with_seq`` (which needs ``with_meta``) adds
+        its file's sequence number."""
         if not plan.files:
             base = self.spark.createDataFrame([], self._spark_schema(plan.schema))
             if with_meta:
                 base = base.withColumns(
                     {
-                        _META_FILE: F.lit(None).cast("string"),
-                        _META_POS: F.lit(None).cast("long"),
+                        META_FILE: F.lit(None).cast("string"),
+                        META_POS: F.lit(None).cast("long"),
                     }
                 )
             if with_seq:
-                base = base.withColumn(_META_SEQ, F.lit(None).cast("long"))
+                base = base.withColumn(META_SEQ, F.lit(None).cast("long"))
             return base
 
         by_schema: dict[int, list[DataFileEntry]] = {}
@@ -1199,8 +1295,8 @@ class IceLiteTable:
             ]
             if with_meta:
                 cols += [
-                    F.col("_metadata.file_path").alias(_META_FILE),
-                    F.col("_metadata.row_index").alias(_META_POS),
+                    F.col("_metadata.file_path").alias(META_FILE),
+                    F.col("_metadata.row_index").alias(META_POS),
                 ]
             parts.append(raw.select(*cols))
         out = parts[0]
@@ -1210,64 +1306,10 @@ class IceLiteTable:
             seq_map = local_df(
                 self.spark,
                 [(_file_uri(f.path), f.sequence_number) for f in plan.files],
-                f"{_META_FILE} string, {_META_SEQ} long",
+                f"{META_FILE} string, {META_SEQ} long",
             )
-            out = out.join(F.broadcast(seq_map), _META_FILE, "left")
+            out = out.join(F.broadcast(seq_map), META_FILE, "left")
         return out
-
-    def _read_snapshot(self, snap: Snapshot | None, with_meta: bool = False) -> DataFrame:
-        """The live rows of ``snap`` in the current schema."""
-        return self._read_plan(plan_snapshot(self.meta, snap), with_meta)
-
-    def _read_plan(
-        self, plan: ScanPlan, with_meta: bool = False, with_seq: bool = False
-    ) -> DataFrame:
-        """The plan's live rows: data files minus position and equality
-        deletes, filtered by the plan's filters.
-
-        A plain read scans the data files and nothing else. The file and
-        position columns (``__file``, ``__pos``) come from the parquet
-        ``_metadata`` column and are attached only when the plan has a
-        position or equality delete, or when the caller asks for them
-        with ``with_meta`` (DML finds the rows it rewrites or deletes by
-        them). The sequence-number join (``__seq``) is attached only when
-        the plan has an equality delete, or when the caller asks for it
-        with ``with_seq`` (row lineage). Columns the caller did not ask
-        for are dropped before returning."""
-        need_seq = with_seq or bool(plan.equality_deletes)
-        need_meta = with_meta or need_seq or bool(plan.position_deletes)
-        df = self._read_files(plan, need_meta, need_seq)
-
-        if plan.position_deletes:
-            dels = (
-                self.spark.read.schema(_POS_DELETE_SCHEMA)
-                .parquet(*[d.path for d in plan.position_deletes])
-                .select(F.col("file_path").alias(_META_FILE), F.col("pos").alias(_META_POS))
-            )
-            df = df.join(F.broadcast(dels), [_META_FILE, _META_POS], "left_anti")
-
-        for d in plan.equality_deletes:
-            # rows older than the delete whose keys match null-safely
-            keys = self.spark.read.parquet(d.path).select(*d.file_cols).toDF(*d.key_cols)
-            cond = None
-            for c in d.key_cols:
-                piece = F.col(f"__eqdata.{c}").eqNullSafe(F.col(f"__eqdel.{c}"))
-                cond = piece if cond is None else (cond & piece)
-            doomed = (
-                df.filter(F.col(_META_SEQ) < F.lit(d.sequence_number))
-                .alias("__eqdata")
-                .join(F.broadcast(keys.alias("__eqdel")), cond, "left_semi")
-                .select(_META_FILE, _META_POS)
-            )
-            df = df.join(doomed, [_META_FILE, _META_POS], "left_anti")
-
-        if need_seq and not with_seq:
-            df = df.drop(_META_SEQ)
-        if need_meta and not with_meta:
-            df = df.drop(_META_FILE, _META_POS)
-        for col, op, val in plan.filters:
-            df = df.filter(F.expr(f"{col} {'==' if op == '=' else op} {_sql_lit(val)}"))
-        return df
 
     # ------------------------------------------------------------------- DML
 
@@ -1330,7 +1372,7 @@ class IceLiteTable:
             def acted(live: DataFrame) -> DataFrame:
                 return target(live).withColumn("__act", act)
 
-            has_t = F.col(f"t.{_META_FILE}").isNotNull()
+            has_t = F.col(f"t.{META_FILE}").isNotNull()
             took = has_t & (F.col("__act") >= 0)
             keep = (has_t & ~F.col("__act").isin(drop)) | F.col("__act").isin(ins)
             outputs = [_project(c, resolved) for c in names]
@@ -1340,8 +1382,8 @@ class IceLiteTable:
             staged = _Staged(op)
             if mode == "merge-on-read":
                 dels = frame.filter(took).select(
-                    F.col(f"t.{_META_FILE}").alias("file_path"),
-                    F.col(f"t.{_META_POS}").alias("pos"),
+                    F.col(f"t.{META_FILE}").alias("file_path"),
+                    F.col(f"t.{META_POS}").alias("pos"),
                 )
                 entry = self._write_delete_file(dels, 1, staged)
                 if entry is not None:
@@ -1355,7 +1397,7 @@ class IceLiteTable:
             if victims is not None:
                 staged.replaces = victims(frame, parent)
             else:
-                taken = frame.filter(took).select(f"t.{_META_FILE}").distinct()
+                taken = frame.filter(took).select(f"t.{META_FILE}").distinct()
                 staged.replaces = {r[0] for r in taken.collect()}
             if staged.replaces or ins:
                 if parent is not None and len(staged.replaces) < len(parent.data_files):
@@ -1436,7 +1478,7 @@ class IceLiteTable:
             elif matched_update is not None:
                 matched_clauses.append((None, ("update", matched_update)))
         nmbs_clauses = not_matched_by_source_clauses or []
-        t_in = f"t.{_META_FILE} IS NOT NULL"
+        t_in = f"t.{META_FILE} IS NOT NULL"
         s_in = "s.__s_present IS NOT NULL"
         families = [
             (f"{t_in} AND {s_in}", matched_clauses),
@@ -1444,7 +1486,7 @@ class IceLiteTable:
         ]
         if insert_when_not_matched:
             insert = ("insert", source.columns)
-            families.append((f"t.{_META_FILE} IS NULL AND {s_in}", [(insert_condition, insert)]))
+            families.append((f"t.{META_FILE} IS NULL AND {s_in}", [(insert_condition, insert)]))
         # the families are disjoint, so one ordered list keeps each one's order
         clauses = [
             (mark if cond is None else f"{mark} AND ({cond})", action)
@@ -1464,8 +1506,8 @@ class IceLiteTable:
             match_stats = (
                 joined.filter(f"{t_in} AND {s_in}")
                 .groupBy(
-                    F.col(f"t.{_META_FILE}").alias("__f"),
-                    F.col(f"t.{_META_POS}").alias("__p"),
+                    F.col(f"t.{META_FILE}").alias("__f"),
+                    F.col(f"t.{META_POS}").alias("__p"),
                 )
                 .agg(F.count(F.lit(1)).alias("__n"))
                 .groupBy("__f")
@@ -1927,12 +1969,6 @@ def _new_head(before: Snapshot | None, now: Snapshot | None) -> bool:
     return (before.snapshot_id if before else None) != (now.snapshot_id if now else None)
 
 
-def _file_uri(path: str) -> str:
-    """Spark's _metadata.file_path form for a local path (Hadoop-style
-    single-slash scheme: ``file:/tmp/...``)."""
-    return path if path.startswith("file:") else f"file:{path}"
-
-
 def _as_target(live: DataFrame) -> DataFrame:
     """DELETE and UPDATE run their clauses over the live rows alone."""
     return live.alias("t")
@@ -2063,7 +2099,10 @@ def _collect_file_stats(spark: SparkSession, paths: list[str]) -> dict[str, dict
                     if st is None:
                         continue
                     nulls[name] = nulls.get(name, 0) + (st.null_count or 0)
-                    if st.has_min_max:
+                    # pyarrow cannot convert the bounds of a decimal stored
+                    # as INT32/INT64 (Spark's layout up to precision 18);
+                    # a column without bounds never prunes
+                    if st.has_min_max and st.logical_type.type != "DECIMAL":
                         mn, mx = _plain(st.min), _plain(st.max)
                         if name not in lower or _lt(mn, lower[name]):
                             lower[name] = mn

@@ -1,6 +1,12 @@
 """Spark jobs per IceLite read and write: a point read pays only for
 what its snapshot needs, and each write path keeps its pinned job count
-(counted through statusTracker, as in test_store.py)."""
+(counted through statusTracker, as in test_store.py).
+
+Reads run on one of two executors (``IceLiteTable._read_plan``). The
+fixture table is far below ``spark.sql.autoBroadcastJoinThreshold``, so
+its reads run in-process in Arrow and a point read runs no Spark job.
+The same reads at a threshold of -1 run as a Spark parquet scan and keep
+the counts pinned before the Arrow executor existed."""
 
 from __future__ import annotations
 
@@ -10,6 +16,9 @@ from pyspark.sql import functions as F
 from iceberg_matrix_spark.session import local_df
 from iceberg_matrix_spark.tables import maintenance as maint
 from iceberg_matrix_spark.tables.catalog import IceLiteCatalog
+from iceberg_matrix_spark.tables.scan import plan_scan
+
+from tests.executors import read_threshold
 
 _SCHEMA = "id bigint, v string"
 _ROWS = {i: f"v{i}" for i in range(200)}
@@ -49,7 +58,8 @@ def _point(t, k):
 
 
 def test_point_read_without_deletes_runs_one_job(spark, table):
-    rows, jobs = _jobs(spark, "read-jobs-plain", _point(table, 17))
+    with read_threshold(spark, -1):
+        rows, jobs = _jobs(spark, "read-jobs-plain", _point(table, 17))
     assert rows == [(17, "v17")]
     assert len(jobs) == 1
 
@@ -57,9 +67,10 @@ def test_point_read_without_deletes_runs_one_job(spark, table):
 def test_point_read_with_position_deletes_runs_two_jobs(spark, table):
     table.delete("id IN (17, 99)")
     assert [d.content for d in table.current_snapshot().delete_files] == [1]
-    rows, _ = _jobs(spark, "read-jobs-pos", _point(table, 17))
-    assert rows == []
-    rows, jobs = _jobs(spark, "read-jobs-pos-live", _point(table, 18))
+    with read_threshold(spark, -1):
+        rows, _ = _jobs(spark, "read-jobs-pos", _point(table, 17))
+        assert rows == []
+        rows, jobs = _jobs(spark, "read-jobs-pos-live", _point(table, 18))
     assert rows == [(18, "v18")]
     assert len(jobs) <= 2
 
@@ -68,11 +79,59 @@ def test_update_matching_nothing_commits_no_delete_file(spark, table):
     """A merge-on-read update with no match adds no (empty) delete file,
     so later point reads stay at one job."""
     before = table.current_snapshot().delete_files
-    table.update({"v": "'x'"}, where="id < 0")
-    assert table.current_snapshot().delete_files == before
-    rows, jobs = _jobs(spark, "read-jobs-noop-update", _point(table, 17))
+    with read_threshold(spark, -1):
+        table.update({"v": "'x'"}, where="id < 0")
+        assert table.current_snapshot().delete_files == before
+        rows, jobs = _jobs(spark, "read-jobs-noop-update", _point(table, 17))
     assert rows == [(17, "v17")]
     assert len(jobs) == 1
+
+
+def test_arrow_point_reads_run_no_job(spark, table):
+    """The three reads above, on the Arrow executor: the rows reach Spark
+    as a LocalRelation, the filter folds into it, and collect runs no
+    job, with or without position deletes."""
+    rows, jobs = _jobs(spark, "arrow-plain", _point(table, 17))
+    assert (rows, len(jobs)) == ([(17, "v17")], 0)
+    before = table.current_snapshot().delete_files
+    table.update({"v": "'x'"}, where="id < 0")
+    assert table.current_snapshot().delete_files == before
+    rows, jobs = _jobs(spark, "arrow-noop-update", _point(table, 17))
+    assert (rows, len(jobs)) == ([(17, "v17")], 0)
+    table.delete("id IN (17, 99)")
+    rows, jobs = _jobs(spark, "arrow-pos", _point(table, 17))
+    assert (rows, len(jobs)) == ([], 0)
+    rows, jobs = _jobs(spark, "arrow-pos-live", _point(table, 18))
+    assert (rows, len(jobs)) == ([(18, "v18")], 0)
+
+
+def _plan_bytes(t, k) -> int:
+    return sum(f.file_size_bytes for f in plan_scan(t.meta, filters=[("id", "=", k)]).files)
+
+
+def test_threshold_equal_to_the_plan_bytes_reads_on_arrow(spark, table):
+    with read_threshold(spark, _plan_bytes(table, 17)):
+        rows, jobs = _jobs(spark, "arrow-boundary", _point(table, 17))
+    assert (rows, len(jobs)) == ([(17, "v17")], 0)
+
+
+def test_threshold_one_byte_below_the_plan_reads_on_spark(spark, table):
+    with read_threshold(spark, _plan_bytes(table, 17) - 1):
+        rows, jobs = _jobs(spark, "spark-boundary", _point(table, 17))
+    assert rows == [(17, "v17")]
+    assert len(jobs) >= 1
+
+
+def test_a_file_of_unknown_size_reads_on_spark(spark, table):
+    """Metadata may carry a file without its size (0, the field's
+    default). The executor is chosen from sizes, so such a plan stays
+    on Spark."""
+    table.current_snapshot().data_files[0].file_size_bytes = 0
+    rows, jobs = _jobs(
+        spark, "spark-unknown-size", lambda: sorted(r.id for r in table.df().collect())
+    )
+    assert rows == sorted(_ROWS)
+    assert len(jobs) >= 1
 
 
 def test_equality_delete_and_lineage_reads_match_the_model(spark, table):

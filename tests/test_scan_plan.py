@@ -1,9 +1,12 @@
 """One scan plan for every IceLite reader (tables/scan.py).
 
-A three-way differential: random DML histories are read through
-``tb.df()``, ``spark.read.format("icelite")`` and ``read_with_duckdb``,
-and each read must equal an in-memory model. A tooling guard keeps
-equality-delete key resolution inside the planner.
+A differential: random DML histories are read through ``tb.df()`` on
+both of its executors (in-process Arrow, and a Spark scan at
+``spark.sql.autoBroadcastJoinThreshold=-1``), ``spark.read.format
+("icelite")`` and ``read_with_duckdb``, and each read must equal an
+in-memory model. A cross-executor test stages DML on one executor and
+reads on the other. A tooling guard keeps equality-delete key
+resolution inside the planner.
 """
 
 from __future__ import annotations
@@ -12,6 +15,7 @@ import ast
 import pathlib
 import tempfile
 
+import pyspark.sql.functions as F
 from hypothesis import given, settings, strategies as st
 
 from iceberg_matrix_spark.session import local_df
@@ -19,23 +23,40 @@ from iceberg_matrix_spark.sources.batch_source import register_batch_source
 from iceberg_matrix_spark.tables.catalog import IceLiteCatalog
 from iceberg_matrix_spark.tables.interop import read_with_duckdb
 
+from tests.executors import read_threshold
 from tests.hypcfg import DERANDOMIZE, n_examples
 
 # Every example runs each kind once, in a drawn order with drawn
 # arguments, so a handful of examples covers every kind.
 _KINDS = (
     "append", "delete-mor", "update-mor", "upsert", "rename",
-    "delete-cow", "add-column", "upsert", "append",
+    "delete-cow", "add-column", "upsert", "append", "add-typed",
 )
 _TYPES = {"id": "bigint", "v": "bigint", "w": "string"}
+# add-typed: columns whose defaults metadata stores as strings; every
+# reader must return them typed. They are compared as Spark's and
+# Python's string forms, which agree for these three types.
+_TYPED = {
+    "d": ("date", "2024-01-02"),
+    "ts": ("timestamp", "2024-01-02 03:04:05"),
+    "amt": ("decimal(10,2)", "12.34"),
+}
 
 
 def _ddl(names):
     return ", ".join(f"{names[c]} {_TYPES[c]}" for c in names)
 
 
-def _rows(model, names):
-    return sorted(tuple(r[c] for c in names) for r in model.values())
+def _rows(model, names, typed=()):
+    return sorted(
+        tuple(r[c] for c in names) + tuple(_TYPED[c][1] for c in typed)
+        for r in model.values()
+    )
+
+
+def _spark_rows(df, cols, typed=()):
+    typed_cols = [F.col(c).cast("string") for c in typed]
+    return sorted(tuple(r) for r in df.select(*cols, *typed_cols).collect())
 
 
 @settings(max_examples=n_examples(2, 20), deadline=None, derandomize=DERANDOMIZE)
@@ -51,6 +72,7 @@ def test_three_readers_agree_with_model(spark, order, picks, pin):
     t = cat.create_table("d.t", "id bigint, v bigint", properties={"format-version": "3"})
     t.set_properties({"write.update.mode": "merge-on-read"})
     names = {"id": "id", "v": "v"}  # model column → current table name
+    typed: list[str] = []  # the _TYPED columns added so far
     model: dict[int, dict] = {}
     pinned = []  # (snapshot id, names, rows) after each data commit
     next_id = 0
@@ -93,30 +115,82 @@ def test_three_readers_agree_with_model(spark, order, picks, pin):
             t.rename_column(key, "key")
             names["id"] = "key"
             continue
+        elif kind == "add-typed":
+            t.add_columns(
+                {c: typ for c, (typ, _v) in _TYPED.items()},
+                defaults={c: v for c, (_typ, v) in _TYPED.items()},
+            )
+            typed = list(_TYPED)
+            continue
         else:
             t.add_columns({"w": "string"}, defaults={"w": "dflt"})
             names["w"] = "w"
             for r in model.values():
                 r["w"] = "dflt"
             continue
-        pinned.append((t.current_snapshot().snapshot_id, dict(names), _rows(model, names)))
+        pinned.append(
+            (
+                t.current_snapshot().snapshot_id,
+                list(names.values()) + typed,
+                _rows(model, names, typed),
+            )
+        )
 
-    want = _rows(model, names)
+    want = _rows(model, names, typed)
     cols = list(names.values())
-    assert sorted(tuple(r) for r in t.df().select(*cols).collect()) == want
+    assert _spark_rows(t.df(), cols, typed) == want
+    with read_threshold(spark, -1):
+        assert _spark_rows(t.df(), cols, typed) == want
     batch_read = spark.read.format("icelite").load(t.location)
-    assert sorted(tuple(r) for r in batch_read.select(*cols).collect()) == want
+    assert _spark_rows(batch_read, cols, typed) == want
     duck = read_with_duckdb(t).to_pylist()
-    assert sorted(tuple(r[c] for c in cols) for r in duck) == want
+    duck_rows = (tuple(r[c] for c in cols) + tuple(str(r[c]) for c in typed) for r in duck)
+    assert sorted(duck_rows) == want
 
-    sid, old_names, old_rows = pinned[pin % len(pinned)]
-    old_cols = list(old_names.values())
+    sid, old_cols, old_rows = pinned[pin % len(pinned)]
+    old_typed = [c for c in old_cols if c in _TYPED]
+    old_plain = [c for c in old_cols if c not in _TYPED]
     got = t.df(snapshot_id=sid)
     assert got.columns == old_cols
-    assert sorted(tuple(r) for r in got.collect()) == old_rows
+    assert _spark_rows(got, old_plain, old_typed) == old_rows
     got = spark.read.format("icelite").option("snapshot_id", sid).load(t.location)
     assert got.columns == old_cols
-    assert sorted(tuple(r) for r in got.collect()) == old_rows
+    assert _spark_rows(got, old_plain, old_typed) == old_rows
+
+
+def _write_mixed(spark, t, on_spark: bool, key: int) -> None:
+    """One merge-on-read DELETE, one copy-on-write DELETE and one upsert,
+    each staged from a read on one executor."""
+    with read_threshold(spark, -1 if on_spark else "10485760"):
+        t.set_properties({"write.delete.mode": "merge-on-read"})
+        t.delete(f"id = {key}")
+        t.set_properties({"write.delete.mode": "copy-on-write"})
+        t.delete(f"id = {key + 1}")
+        t.upsert(local_df(spark, [(key + 2, -1)], "id bigint, v bigint"), ["id"])
+
+
+def test_dml_staged_on_one_executor_reads_alike_on_the_other(spark, tmp_path):
+    """Position deletes staged from an Arrow read are later applied by the
+    Spark scan once a table outgrows the threshold, and the reverse, so
+    both executors must name files and positions alike. The warehouse
+    path contains a space, which Spark's file identity percent-encodes."""
+    register_batch_source(spark)
+    cat = IceLiteCatalog(spark, str(tmp_path / "ware house"))
+    cat.create_namespace("x")
+    t = cat.create_table("x.t", "id bigint, v bigint", properties={"format-version": "2"})
+    t.append(local_df(spark, [(i, i) for i in range(12)], "id bigint, v bigint"))
+    model = {i: i for i in range(12)}
+    for on_spark, key in ((False, 0), (True, 6)):
+        _write_mixed(spark, t, on_spark, key)
+        del model[key], model[key + 1]
+        model[key + 2] = -1
+        want = sorted(model.items())
+        for threshold in ("10485760", -1):
+            with read_threshold(spark, threshold):
+                assert sorted(tuple(r) for r in t.refresh().df().collect()) == want
+        batch = spark.read.format("icelite").load(t.location)
+        assert sorted(tuple(r) for r in batch.collect()) == want
+        assert sorted((r["id"], r["v"]) for r in read_with_duckdb(t).to_pylist()) == want
 
 
 # ------------------------------------------------------------ tooling guard
@@ -164,3 +238,35 @@ def test_equality_ids_are_read_only_by_the_planner():
         "equality-delete keys are resolved in tables/scan.py:plan_scan; "
         f"read the plan's key_cols instead: {offenders}"
     )
+
+
+def test_typed_defaults_read_alike_in_every_reader(spark, tmp_path):
+    """Metadata stores a date, timestamp or decimal default as a string;
+    every reader returns it in the column's type."""
+    register_batch_source(spark)
+    cat = IceLiteCatalog(spark, str(tmp_path))
+    cat.create_namespace("d")
+    t = cat.create_table("d.t", "id bigint", properties={"format-version": "3"})
+    t.append(local_df(spark, [(1,), (2,)], "id bigint"))
+    t.add_columns(
+        {c: typ for c, (typ, _v) in _TYPED.items()},
+        defaults={c: v for c, (_typ, v) in _TYPED.items()},
+    )
+    want = [(i, *(v for _typ, v in _TYPED.values())) for i in (1, 2)]
+    readers = {"batch-source": spark.read.format("icelite").load(t.location)}
+    readers["df-arrow"] = t.df()
+    with read_threshold(spark, -1):
+        readers["df-spark"] = t.df()
+        got = {name: _spark_rows(df, ["id"], _TYPED) for name, df in readers.items()}
+    for name, df in readers.items():
+        assert [f.dataType.simpleString() for f in df.schema.fields[1:]] == [
+            typ for typ, _v in _TYPED.values()
+        ], name
+    assert got == dict.fromkeys(readers, want)
+    duck = read_with_duckdb(t)
+    assert [str(duck.schema.field(c).type) for c in _TYPED] == [
+        "date32[day]", "timestamp[us]", "decimal128(10, 2)"
+    ]
+    assert sorted(tuple(str(v) for v in r.values()) for r in duck.to_pylist()) == [
+        tuple(map(str, r)) for r in want
+    ]
