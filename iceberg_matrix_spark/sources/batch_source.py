@@ -126,8 +126,11 @@ def arrow_readable(schema: TableSchema) -> bool:
 def _default_column(value, typ, n: int):
     """``n`` copies of a column default, converted to ``typ`` as Spark's
     ``lit(value).cast(type)`` converts it: metadata stores a date,
-    timestamp or decimal default as its string. A timestamp string
-    without an offset is UTC, the session time zone IceLite runs in."""
+    timestamp or decimal default as its string. IceLite stores a
+    timestamp default with its offset; ``IceLiteTable.df`` resolves one
+    without (older metadata) in the session time zone before it calls
+    :func:`execute_scan`, and the batch source, which runs outside any
+    session, reads it as UTC."""
     import datetime
 
     import pyarrow as pa
@@ -233,10 +236,12 @@ def execute_scan(plan: ScanPlan, with_meta: bool = False, with_seq: bool = False
         dropped = dict(
             zip(grouped["file_path"].to_pylist(), grouped["pos_list"].combine_chunks())
         )
+    # a batch-source task's plan holds one file: skip a delete file no
+    # planned file is older than before reading it
     equality = [
         (d, pq.read_table(d.path, columns=d.file_cols))
         for d in plan.equality_deletes
-        if d.file_cols
+        if d.file_cols and any(f.sequence_number < d.sequence_number for f in plan.files)
     ]
 
     parts = []

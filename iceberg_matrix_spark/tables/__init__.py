@@ -11,8 +11,9 @@ IceLite re-implements that *operation surface* Spark-first:
   version-file commit protocol (create-exclusive, like Iceberg's
   version-hint + metadata.json chain);
 - MoR reads apply position and equality deletes to the data files. A
-  read whose files fit under ``spark.sql.autoBroadcastJoinThreshold``
-  runs in-process in Arrow and reaches Spark as a local relation; a
+  read of at most 256 KB of files (and of at most
+  ``spark.sql.autoBroadcastJoinThreshold``) runs in-process in Arrow and
+  reaches Spark as a local relation; a
   larger one is a Spark parquet scan with ``_metadata.file_path`` /
   ``_metadata.row_index`` anti-joins;
 - hidden partitioning uses Iceberg's transform family

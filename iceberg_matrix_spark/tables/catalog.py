@@ -26,7 +26,7 @@ from iceberg_matrix_spark.tables.metadata import (
     current_version,
     new_table_metadata,
 )
-from iceberg_matrix_spark.tables.table import IceLiteTable, _physical_type
+from iceberg_matrix_spark.tables.table import IceLiteTable, _physical_type, _stored_default
 from iceberg_matrix_spark.tables.transforms import parse_transform
 
 
@@ -193,6 +193,7 @@ class IceLiteCatalog:
             for col, lit in defaults.items():
                 if col not in by_name:
                     raise ValueError(f"DEFAULT for unknown column {col!r}")
+                lit = _stored_default(self.spark, by_name[col].type, lit)
                 by_name[col].initial_default = lit
                 by_name[col].write_default = lit
         for f in fields:

@@ -25,8 +25,8 @@ from __future__ import annotations
 import glob as _glob
 import os
 
-from iceberg_matrix_spark.tables.scan import _file_uri, plan_scan
-from iceberg_matrix_spark.tables.table import IceLiteTable
+from iceberg_matrix_spark.tables.scan import _file_uri, plan_scan, with_time_zone
+from iceberg_matrix_spark.tables.table import IceLiteTable, _time_zone
 
 
 def _expand(entry_path: str) -> list[str]:
@@ -107,7 +107,7 @@ def live_file_manifest(table: IceLiteTable, ref: str = "main") -> dict:
     the current schema names (field-id resolved) — a foreign engine
     selects file_cols and compares against key_cols.
     """
-    plan = plan_scan(table.meta, ref=ref)
+    plan = with_time_zone(plan_scan(table.meta, ref=ref), _time_zone(table.spark))
     data_entries = [
         {"paths": _expand(f.path), "seq": f.sequence_number, "schema_id": f.schema_id}
         for f in plan.files

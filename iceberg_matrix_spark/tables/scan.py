@@ -32,7 +32,7 @@ identity every reader and the commit path compare.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from iceberg_matrix_spark.tables.metadata import (
     DataFileEntry,
@@ -102,6 +102,48 @@ class ScanPlan:
     position_deletes: list[DeleteFileEntry]
     equality_deletes: list[EqualityDelete]
     projections: dict[int, list[Column]]  # schema id → read-schema columns
+
+
+def timestamp_default(value, time_zone: str):
+    """A ``timestamp`` column default as an ISO string in UTC with its
+    offset, the Iceberg spec's form for an instant. A string without an
+    offset is a wall-clock time in ``time_zone`` (a region id such as
+    ``America/New_York`` or an offset such as ``+05:00``), which is how
+    Spark's ``lit(value).cast("timestamp")`` reads it in that session.
+    Any other value, or a string Python cannot parse, is returned as is."""
+    import datetime
+    import zoneinfo
+
+    if not isinstance(value, str):
+        return value
+    try:
+        ts = datetime.datetime.fromisoformat(value)
+        if ts.tzinfo is None:
+            try:
+                tz = zoneinfo.ZoneInfo(time_zone)
+            except (ValueError, zoneinfo.ZoneInfoNotFoundError):
+                tz = datetime.datetime.fromisoformat("2000-01-01T00:00:00" + time_zone).tzinfo
+            ts = ts.replace(tzinfo=tz)
+    except ValueError:
+        return value
+    return ts.astimezone(datetime.timezone.utc).isoformat()
+
+
+def with_time_zone(plan: ScanPlan, time_zone: str) -> ScanPlan:
+    """``plan`` with every ``timestamp`` default resolved by
+    :func:`timestamp_default` in the session time zone ``time_zone``, for
+    an executor that reads the default outside Spark. Metadata written
+    before defaults were stored resolved holds strings without an offset."""
+    projections = {
+        sid: [
+            replace(c, default=timestamp_default(c.default, time_zone))
+            if c.type.lower() == "timestamp"
+            else c
+            for c in cols
+        ]
+        for sid, cols in plan.projections.items()
+    }
+    return replace(plan, projections=projections)
 
 
 def resolve_snapshot(

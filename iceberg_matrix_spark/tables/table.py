@@ -15,9 +15,9 @@ Scale design notes
   *lists* and JSON metadata (manifest-scale, like Iceberg's planning
   path).
 - Reads pick their executor by size (``_read_plan``): a snapshot whose
-  data files add up to at most ``spark.sql.autoBroadcastJoinThreshold``
-  is read in-process with pyarrow, as Spark collects a relation of that
-  size to the driver for a broadcast; a larger one is a parquet scan on
+  data files add up to at most 256 KB (and to at most
+  ``spark.sql.autoBroadcastJoinThreshold``) is read in-process with
+  pyarrow; a larger one is a parquet scan on
   executors that resolves position deletes with an anti-join on
   (_metadata.file_path, _metadata.row_index) — a broadcast-able join
   because delete files are small relative to data.
@@ -64,6 +64,8 @@ from iceberg_matrix_spark.tables.scan import (
     plan_snapshot,
     prune_files,
     pruning_spec,
+    timestamp_default,
+    with_time_zone,
 )
 from iceberg_matrix_spark.tables.transforms import (
     Transform,
@@ -74,6 +76,15 @@ from iceberg_matrix_spark.tables.transforms import (
 # Every position-delete file IceLite writes has exactly these columns;
 # reading with the schema pinned skips Spark's schema-inference job.
 _POS_DELETE_SCHEMA = "file_path string, pos bigint"
+
+# The most data-file bytes a read runs in-process in Arrow. Arrow's cost
+# grows with the rows it decodes and hands to the JVM; a Spark scan's is
+# mostly fixed per query and per file. tools/read_executor_probe.py on a
+# 4-vCPU host, one data file per MB, median CPU seconds of driver and JVM,
+# Arrow vs Spark: a point read 0.11 vs 0.46 at 256 KB, 0.26 vs 0.43 at
+# 1 MB; a grouped full scan 0.32 vs 0.43 at 256 KB, 0.46 vs 0.36 at
+# 512 KB, 0.62 vs 0.44 at 1 MB. The cap sits where the scan crosses over.
+_ARROW_SCAN_BYTES = 256 << 10
 
 # int→bigint / float→double widening per the reference's type-promotion
 # probes (/root/reference/tests/iceberg_feature_tests.py:738-750)
@@ -1183,24 +1194,26 @@ class IceLiteTable:
         lineage).
 
         This is the one place that picks the executor. A plan whose data
-        files add up to at most ``spark.sql.autoBroadcastJoinThreshold``
-        bytes runs in-process in Arrow (``execute_scan``, the batch
-        source's executor): that threshold is Spark's own limit on a
-        relation it collects to the driver for a broadcast, which the
-        Spark path does to every delete file. The rows reach Spark as a
-        ``LocalRelation``, so a filter folds into it and ``collect`` runs
-        no job; a ``with_meta`` read keeps ``local_df``'s one slice, so a
-        write from it runs one task. A larger plan, a plan with an entry
-        of unknown size (0 bytes) or with a column type Arrow cannot
-        represent, and every plan at a threshold of -1, run as a Spark
-        parquet scan (:meth:`_scan_with_spark`)."""
+        files add up to at most ``_ARROW_SCAN_BYTES`` (256 KB: above it a
+        full scan costs more CPU in Arrow than on Spark) runs
+        in-process in Arrow (``execute_scan``, the batch source's
+        executor). The rows reach Spark as a ``LocalRelation``, so a
+        filter folds into it and ``collect`` runs no job; a ``with_meta``
+        read keeps ``local_df``'s one slice, so a write from it runs one
+        task. A read collected to the driver is what a broadcast is, so
+        ``spark.sql.autoBroadcastJoinThreshold`` bounds it too: a lower
+        threshold lowers the cut-off and -1 turns the Arrow path off. A
+        larger plan, a plan with an entry of unknown size (0 bytes) or
+        with a column type Arrow cannot represent run as a Spark parquet
+        scan (:meth:`_scan_with_spark`)."""
         # the batch source imports tables.scan, whose package imports this module
         from iceberg_matrix_spark.sources.batch_source import (  # noqa: PLC0415
             arrow_readable,
             execute_scan,
         )
 
-        limit = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        broadcast = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        limit = min(broadcast, _ARROW_SCAN_BYTES)
         sizes = [f.file_size_bytes for f in plan.files]
         if all(sizes) and sum(sizes) <= limit and arrow_readable(plan.schema):
             struct = self._spark_schema(plan.schema)
@@ -1208,7 +1221,8 @@ class IceLiteTable:
                 struct = struct.add(META_FILE, "string").add(META_POS, "long")
             if with_seq:
                 struct = struct.add(META_SEQ, "long")
-            df = self.spark.createDataFrame(execute_scan(plan, with_meta, with_seq), struct)
+            rows = execute_scan(with_time_zone(plan, _time_zone(self.spark)), with_meta, with_seq)
+            df = self.spark.createDataFrame(rows, struct)
             if with_meta:
                 df = df.coalesce(1)
         else:
@@ -1659,7 +1673,7 @@ class IceLiteTable:
         def build(meta, fields):
             for name, dtype in columns.items():
                 meta.last_field_id += 1
-                dflt = (defaults or {}).get(name)
+                dflt = _stored_default(self.spark, dtype, (defaults or {}).get(name))
                 fields.append(
                     SchemaField(
                         id=meta.last_field_id,
@@ -2017,6 +2031,20 @@ def _project(col: str, resolved: list[tuple]) -> str:
     if whens:
         value = f"CASE {' '.join(whens)} ELSE {value} END"
     return f"{value} AS {_quote(col)}"
+
+
+def _time_zone(spark: SparkSession) -> str:
+    return spark.conf.get("spark.sql.session.timeZone")
+
+
+def _stored_default(spark: SparkSession, typ: str, value):
+    """A column default as metadata stores it. A ``timestamp`` default
+    is resolved in the session time zone and stored in UTC with its
+    offset (:func:`tables.scan.timestamp_default`), so every reader, in
+    any session, reads the instant the writer meant."""
+    if _physical_type(typ).lower() == "timestamp":
+        return timestamp_default(value, _time_zone(spark))
+    return value
 
 
 def _sql_lit(val) -> str:

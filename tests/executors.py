@@ -1,8 +1,10 @@
 """Pick the executor of IceLite reads in a test.
 
 ``IceLiteTable._read_plan`` runs a plan whose data files add up to at
-most ``spark.sql.autoBroadcastJoinThreshold`` bytes in-process in Arrow,
-and larger plans as a Spark parquet scan; -1 sends every read to Spark.
+most ``_ARROW_SCAN_BYTES`` and at most
+``spark.sql.autoBroadcastJoinThreshold`` bytes in-process in Arrow, and
+larger plans as a Spark parquet scan; a threshold of -1 sends every read
+to Spark.
 """
 
 from __future__ import annotations

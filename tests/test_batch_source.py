@@ -4,15 +4,18 @@ IceLiteTable.df() across deletes, evolution, time travel, and pruning."""
 from __future__ import annotations
 
 import tempfile
+from dataclasses import replace
 
 import pytest
 
 from iceberg_matrix_spark.sources.batch_source import (
     IceLiteBatchReader,
+    execute_scan,
     register_batch_source,
 )
 from iceberg_matrix_spark.session import local_df
 from iceberg_matrix_spark.tables.catalog import IceLiteCatalog
+from iceberg_matrix_spark.tables.scan import plan_scan
 
 
 @pytest.fixture
@@ -279,3 +282,19 @@ def test_unknown_ref_raises_key_error(spark, cat):
         IceLiteBatchReader({"path": t.location, "ref": "nope"}).partitions()
     with pytest.raises(Exception, match="KeyError: 'unknown ref nope'"):
         _read(spark, t.location, ref="nope").collect()
+
+
+def test_task_reads_only_equality_deletes_that_can_apply(spark, cat, tmp_path):
+    """Each batch-source task executes the plan scoped to one data file.
+    An equality delete that is not newer than that file cannot drop its
+    rows, so the task does not read it: here it no longer exists."""
+    t = cat.create_table("b.eqskip", "id bigint, v bigint")
+    t.append(local_df(spark, [(1, 10), (2, 20)], "id bigint, v bigint"))
+    t.refresh().upsert(local_df(spark, [(2, 99)], "id bigint, v bigint"), key_columns=["id"])
+    plan = plan_scan(t.refresh().meta)
+    (d,) = plan.equality_deletes
+    newest = max(plan.files, key=lambda f: f.sequence_number)
+    assert newest.sequence_number == d.sequence_number  # written with the delete
+    gone = replace(d, path=str(tmp_path / "gone.parquet"))
+    scoped = replace(plan, files=[newest], equality_deletes=[gone])
+    assert execute_scan(scoped).to_pylist() == [{"id": 2, "v": 99}]

@@ -3,8 +3,9 @@ what its snapshot needs, and each write path keeps its pinned job count
 (counted through statusTracker, as in test_store.py).
 
 Reads run on one of two executors (``IceLiteTable._read_plan``). The
-fixture table is far below ``spark.sql.autoBroadcastJoinThreshold``, so
-its reads run in-process in Arrow and a point read runs no Spark job.
+fixture table is far below ``_ARROW_SCAN_BYTES`` and
+``spark.sql.autoBroadcastJoinThreshold``, so its reads run in-process in
+Arrow and a point read runs no Spark job.
 The same reads at a threshold of -1 run as a Spark parquet scan and keep
 the counts pinned before the Arrow executor existed."""
 
@@ -118,6 +119,21 @@ def test_threshold_equal_to_the_plan_bytes_reads_on_arrow(spark, table):
 def test_threshold_one_byte_below_the_plan_reads_on_spark(spark, table):
     with read_threshold(spark, _plan_bytes(table, 17) - 1):
         rows, jobs = _jobs(spark, "spark-boundary", _point(table, 17))
+    assert rows == [(17, "v17")]
+    assert len(jobs) >= 1
+
+
+def test_the_arrow_cap_bounds_the_threshold(spark, table, monkeypatch):
+    """Above ``_ARROW_SCAN_BYTES`` a plan reads on Spark however high the
+    threshold is: raising it for larger broadcast joins moves no larger
+    read into the driver."""
+    cap = "iceberg_matrix_spark.tables.table._ARROW_SCAN_BYTES"
+    with read_threshold(spark, 1 << 40):
+        monkeypatch.setattr(cap, _plan_bytes(table, 17))
+        rows, jobs = _jobs(spark, "arrow-cap", _point(table, 17))
+        assert (rows, len(jobs)) == ([(17, "v17")], 0)
+        monkeypatch.setattr(cap, _plan_bytes(table, 17) - 1)
+        rows, jobs = _jobs(spark, "spark-cap", _point(table, 17))
     assert rows == [(17, "v17")]
     assert len(jobs) >= 1
 

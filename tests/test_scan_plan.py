@@ -12,6 +12,7 @@ resolution inside the planner.
 from __future__ import annotations
 
 import ast
+import datetime
 import pathlib
 import tempfile
 
@@ -270,3 +271,62 @@ def test_typed_defaults_read_alike_in_every_reader(spark, tmp_path):
     assert sorted(tuple(str(v) for v in r.values()) for r in duck.to_pylist()) == [
         tuple(map(str, r)) for r in want
     ]
+
+
+def _default_instants(spark, t):
+    """The ``ts`` default of ``t`` as UTC microseconds, per reader."""
+
+    def micros(df):
+        return {r[0] for r in df.select(F.unix_micros("ts")).collect()}
+
+    got = {"df-arrow": micros(t.df())}
+    with read_threshold(spark, -1):
+        got["df-spark"] = micros(t.df())
+    got["batch-source"] = micros(spark.read.format("icelite").load(t.location))
+    epoch = datetime.datetime(1970, 1, 1)
+    got["duckdb"] = {
+        (r["ts"] - epoch) // datetime.timedelta(microseconds=1)
+        for r in read_with_duckdb(t).to_pylist()
+    }
+    return got
+
+
+def test_timestamp_default_is_one_instant_in_any_session(spark, tmp_path):
+    """A timestamp default without an offset is a wall-clock time in the
+    session time zone, as ``lit(v).cast("timestamp")`` reads it. Metadata
+    stores it resolved, so every reader returns the writer's instant, in
+    the writing session and in a session in another time zone. Metadata
+    that still holds the bare string (written before defaults were stored
+    resolved) reads in the reading session's zone on both ``tb.df()``
+    executors and in DuckDB, as the Spark scan always read it."""
+    register_batch_source(spark)
+    tz = "spark.sql.session.timeZone"
+    old = spark.conf.get(tz)
+    new_york = 1704182645 * 10**6  # 2024-01-02 03:04:05 America/New_York
+    utc = 1704164645 * 10**6  # 2024-01-02 03:04:05 UTC
+    cat = IceLiteCatalog(spark, str(tmp_path))
+    cat.create_namespace("d")
+    try:
+        spark.conf.set(tz, "America/New_York")
+        t = cat.create_table("d.t", "id bigint", properties={"format-version": "3"})
+        t.append(local_df(spark, [(1,)], "id bigint"))
+        t.add_columns({"ts": "timestamp"}, defaults={"ts": "2024-01-02 03:04:05"})
+        assert t.meta.current_schema.fields[-1].initial_default == "2024-01-02T08:04:05+00:00"
+        want = dict.fromkeys(("df-arrow", "df-spark", "batch-source", "duckdb"), {new_york})
+        assert _default_instants(spark, t) == want
+        spark.conf.set(tz, "UTC")
+        assert _default_instants(spark, t) == want
+
+        def bare(meta):
+            f = meta.current_schema.fields[-1]
+            f.initial_default = f.write_default = "2024-01-02 03:04:05"
+            return meta
+
+        t._commit(bare)
+        for zone, instant in (("America/New_York", new_york), ("UTC", utc)):
+            spark.conf.set(tz, zone)
+            got = _default_instants(spark, t)
+            del got["batch-source"]  # runs outside any session: reads UTC
+            assert got == dict.fromkeys(("df-arrow", "df-spark", "duckdb"), {instant}), zone
+    finally:
+        spark.conf.set(tz, old)
