@@ -1635,7 +1635,6 @@ def report_state_table_lifecycle(spark: SparkSession, sf_dir: str):
                 "nt": "t.nt + s.nt",
                 "nq": "t.nq + s.nq",
             },
-            insert_when_not_matched=True,
         )
         t = t.refresh()
         pre_retract = t.current_snapshot().snapshot_id
@@ -1656,7 +1655,7 @@ def report_state_table_lifecycle(spark: SparkSession, sf_dir: str):
                     ),
                 ),
             ],
-            insert_when_not_matched=False,
+            not_matched_clauses=[],
         )
         return t.refresh(), pre_retract
 

@@ -16,9 +16,23 @@ views over the tables' current snapshots — reads therefore inherit the
 full Catalyst plan (pushdown, pruning, AQE), and nothing here re-implements
 query execution.
 
-Parsing is a small depth-aware tokenizer (quotes + parens), not a grammar:
-statements outside the supported shapes raise ``UnsupportedSQLError``
-loudly rather than mis-executing.
+MERGE, UPDATE, DELETE and CALL are parsed by Spark's own SQL parser
+(``sessionState().sqlParser().parsePlan``), which needs no catalog. The
+facade walks the unresolved plan into ``IceLiteTable`` clause lists and
+procedure arguments; every condition, value and subquery is a slice of
+the statement at the span Spark records, with target and source
+qualifiers renamed to ``t`` and ``s``. The one pre-pass splices a column
+list into DuckDB's column-list-free ``INSERT VALUES``.
+
+The other verbs keep a small depth-aware tokenizer (quotes + parens),
+because the engine dialects they serve are spellings Spark's grammar
+rejects: Flink's ``WITH ('k'='v')`` properties, ``TIMESTAMP(6)``,
+``PRIMARY KEY ... NOT ENFORCED`` and ``/*+ OPTIONS(...) */`` hints,
+DuckDB's ``AT (VERSION => n)``, the ``tbl$snapshots`` metadata spelling,
+and Iceberg's ALTER extensions (``ADD PARTITION FIELD``, ``WRITE ORDERED
+BY``, ``CREATE BRANCH``). Each verb has exactly one parser. Statements
+outside the supported shapes raise ``UnsupportedSQLError`` loudly rather
+than mis-executing.
 """
 
 from __future__ import annotations
@@ -28,12 +42,12 @@ import os
 import re
 from datetime import datetime, timezone
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from iceberg_matrix_spark.session import local_df
 from iceberg_matrix_spark.tables.catalog import IceLiteCatalog, NoSuchTableError
-from iceberg_matrix_spark.tables.table import IceLiteTable, _physical_type
+from iceberg_matrix_spark.tables.table import IceLiteTable, _physical_type, _quote
 
 
 class UnsupportedSQLError(Exception):
@@ -94,29 +108,89 @@ def _take_parens(s: str) -> tuple[str, str]:
     raise UnsupportedSQLError("unbalanced parentheses")
 
 
-def _rewrite_aliases(expr: str, mapping: dict[str, str]) -> str:
-    """Rewrite ``alias.`` qualifiers simultaneously (handles t/s swaps).
-    Quote-aware: a literal like ``'tgt.archived'`` is data, not a
-    qualifier — rewriting inside it would corrupt the written value."""
-    if not mapping:
-        return expr
-    # longest keys first: the full spelling 'schema.tbl' must win over
-    # the short default alias 'tbl' at the same position, or
-    # 'schema.tbl.id' would rewrite to 'schema.t.id'
-    keys = sorted(mapping, key=len, reverse=True)
-    pat = re.compile(
-        r"\b(" + "|".join(re.escape(a) for a in keys) + r")\s*\.", re.IGNORECASE
-    )
-    tops = {i for i, _c, _d, quoted in _scan_top(expr) if not quoted}
-    out, last = [], 0
-    for m in pat.finditer(expr):
-        if m.start() not in tops:
+def _kind(node) -> str:
+    """Class name of a node of Spark's unresolved plan."""
+    return node.getClass().getSimpleName()
+
+
+def _seq(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _span(node) -> tuple[int, int]:
+    """Start and end offsets of ``node`` in the text Spark parsed."""
+    origin = node.origin()
+    return origin.startIndex().get(), origin.stopIndex().get() + 1
+
+
+def _text(stmt: str, node, qualifiers: dict[str, str] | None = None) -> str:
+    """The text of expression ``node`` in ``stmt``, with each column
+    qualifier that ``qualifiers`` maps (lower case) renamed: ``tgt.id``
+    becomes ``t.id`` under ``{"tgt": "t"}``. Only attribute spans change,
+    so text inside literals is never touched.
+
+    The text runs from the first to the last offset of the node and its
+    descendants: a predicate's own span starts at its keyword (``IS NULL``
+    leaves out its operand). Two kinds of node carry a span that is not
+    their text, so theirs are skipped: the parser's one shared TRUE and
+    one shared FALSE literal, whose origin belongs to whatever statement
+    first built them (a bare one renders as ``true``/``false``), and
+    EXISTS, which carries its enclosing expression's span."""
+    start, end, renames, stack = len(stmt), 0, [], [node]
+    while stack:
+        n = stack.pop()
+        kind = _kind(n)
+        if kind == "Exists" or (kind == "Literal" and n.sql() in ("true", "false")):
             continue
-        out.append(expr[last : m.start()])
-        out.append(mapping[m.group(1).lower()] + ".")
-        last = m.end()
-    out.append(expr[last:])
+        a, b = _span(n)
+        start, end = min(start, a), max(end, b)
+        if kind != "UnresolvedAttribute":
+            stack.extend(_seq(n.children()))
+            continue
+        parts = _seq(n.nameParts())
+        for k in range(len(parts) - 1, 0, -1):
+            alias = (qualifiers or {}).get(".".join(parts[:k]).lower())
+            if alias:
+                renames.append((a, a + _part_starts(stmt[a:b])[k], alias))
+                break
+    if start >= end:
+        if _kind(node) == "Exists":
+            raise UnsupportedSQLError(f"a bare EXISTS has no text of its own: {stmt[:80]!r}")
+        return node.sql()
+    out, last = [], start
+    for a, b, alias in sorted(renames):
+        out += [stmt[last:a], alias, "."]
+        last = b
+    out.append(stmt[last:end])
     return "".join(out)
+
+
+def _part_starts(name: str) -> list[int]:
+    """Offset of each part of a dotted name; a backquoted part may hold
+    dots (a doubled backquote toggles twice)."""
+    starts, quoted = [0], False
+    for i, ch in enumerate(name):
+        if ch == "`":
+            quoted = not quoted
+        elif ch == "." and not quoted:
+            starts.append(i + 1)
+    return starts
+
+
+def _assignments(stmt: str, assignments, qualifiers: dict[str, str]) -> dict[str, str]:
+    """``{column: value text}`` of SET or INSERT assignments. A qualified
+    column (``t.val``) names its last part."""
+    out: dict[str, str] = {}
+    for assignment in _seq(assignments):
+        col = _seq(assignment.key().nameParts())[-1]
+        if col in out:
+            raise UnsupportedSQLError(f"column {col!r} is assigned twice")
+        out[col] = _text(stmt, assignment.value(), qualifiers)
+    return out
+
+
+# MERGE actions that carry assignments → IceLiteTable row-level action
+_ASSIGNING_ACTIONS = {"UpdateAction": "update", "InsertAction": "insert"}
 
 
 def _lit_type(v) -> str:
@@ -171,26 +245,6 @@ def _norm_type(t: str) -> str:
         )
     return _TYPE_ALIASES.get(tl, tl)
 
-# Recognized named arguments per CALL procedure. Checked up front so a
-# typo'd argument fails BEFORE the procedure executes (Iceberg validates
-# named args at parse time; expire_snapshots must never run first).
-_PROC_ARGS: dict[str, set[str]] = {
-    "rewrite_data_files": {"table", "strategy", "sort_order", "target_partitions"},
-    "expire_snapshots": {"table", "older_than", "retain_last"},
-    "remove_orphan_files": {"table", "older_than", "dry_run"},
-    "rewrite_manifests": {"table"},
-    "rewrite_position_delete_files": {"table"},
-    "compute_table_stats": {"table", "columns"},
-    # snapshot management (Iceberg's spark procedures surface)
-    "rollback_to_snapshot": {"table", "snapshot_id"},
-    "rollback_to_timestamp": {"table", "timestamp"},
-    "set_current_snapshot": {"table", "snapshot_id"},
-    "cherrypick_snapshot": {"table", "snapshot_id"},
-    "fast_forward": {"table", "branch", "to"},
-    "ancestors_of": {"table", "snapshot_id"},
-    "add_files": {"table", "source_table"},
-}
-
 # Positional-argument order per procedure (Iceberg's CALL surface accepts
 # both `CALL system.rollback_to_snapshot('db.t', 123)` and named args;
 # the positional order matches the Iceberg procedure signatures).
@@ -210,6 +264,13 @@ _PROC_POSITIONAL: dict[str, list[str]] = {
     "add_files": ["table", "source_table"],
 }
 
+# Recognized named arguments per CALL procedure: its positional ones, plus
+# IceLite's output file count for a rewrite. Checked up front so a typo'd
+# argument fails BEFORE the procedure executes (Iceberg validates named
+# args at parse time; expire_snapshots must never run first).
+_PROC_ARGS = {proc: set(order) for proc, order in _PROC_POSITIONAL.items()}
+_PROC_ARGS["rewrite_data_files"].add("target_partitions")
+
 
 class IceLiteSQL:
     """Parse-and-dispatch SQL shim over an :class:`IceLiteCatalog`.
@@ -227,7 +288,7 @@ class IceLiteSQL:
         # session current namespace, set by USE <ns> — the Flink/Spark
         # session idiom (flink_feature_tests.py:345-348: USE CATALOG
         # test_catalog; USE test_db; then bare table names throughout).
-        # None = bare names are rejected, the pre-round-4 behavior.
+        # None = bare names are rejected.
         self.default_ns: str | None = None
 
     # ----------------------------------------------------------- dispatch
@@ -252,10 +313,8 @@ class IceLiteSQL:
             return self._drop_table(stmt)
         if verb == "INSERT":
             return self._insert(stmt)
-        if verb == "UPDATE":
-            return self._update(stmt)
-        if verb == "DELETE":
-            return self._delete(stmt)
+        if verb in ("UPDATE", "DELETE"):
+            return self._update_or_delete(stmt)
         if verb == "MERGE":
             return self._merge(stmt)
         if verb in ("SELECT", "WITH", "VALUES"):
@@ -743,11 +802,8 @@ class IceLiteSQL:
                             f"unsupported OPTIONS hint keys: {sorted(unknown)}"
                         )
                     # exactly ONE read selector: snapshot-id / branch /
-                    # tag / the start-tag+end-tag pair. Before this
-                    # check, OPTIONS('snapshot-id'=..,'branch'=..)
-                    # silently read the snapshot and IGNORED the branch
-                    # — ambiguous hints must reject, not guess (the
-                    # OPTIONS fuzz, round 7; Flink validates the same).
+                    # tag / the start-tag+end-tag pair. Ambiguous hints
+                    # must reject, not guess (Flink validates the same).
                     selectors = [
                         s
                         for s in (
@@ -943,7 +999,6 @@ class IceLiteSQL:
             if t.meta.partition_spec:
                 # canonical spec strings, not the user's raw spelling —
                 # 'BUCKET( 4 , id )' reads back as 'bucket(4, id)'
-                # (found by the round-9 CREATE TABLE grammar fuzz)
                 from iceberg_matrix_spark.tables.transforms import (  # noqa: PLC0415
                     parse_transform,
                 )
@@ -1227,10 +1282,6 @@ class IceLiteSQL:
                 try:
                     from pyspark.sql.types import StructType  # noqa: PLC0415
 
-                    from iceberg_matrix_spark.tables.table import (  # noqa: PLC0415
-                        _physical_type,
-                    )
-
                     StructType.fromDDL(f"`{name.strip('`')}` {_physical_type(norm)}")
                 except Exception:
                     raise UnsupportedSQLError(
@@ -1466,292 +1517,115 @@ class IceLiteSQL:
             return
         table.append(aligned, branch=branch)
 
-    def _update(self, stmt: str) -> None:
-        m = re.match(rf"UPDATE\s+({_IDENT})\s+SET\s+(.*)$", stmt, re.I | re.S)
-        if not m:
-            raise UnsupportedSQLError(stmt)
-        ident, body = self._resolve(m.group(1)), m.group(2)
-        w = _find_top_keyword(body, "WHERE")
-        where = "true"
-        if w >= 0:
-            where = body[w + len("WHERE") :].strip()
-            body = body[:w]
-        sets = {}
-        for assign in _split_top(body):
-            lhs, eq, rhs = assign.partition("=")
-            if not eq:
-                raise UnsupportedSQLError(f"bad SET clause: {assign!r}")
-            col = lhs.strip().strip("`")
-            col = col.split(".")[-1]  # accept tbl-qualified LHS
-            sets[col] = rhs.strip()
-        self.catalog.load_table(ident).update(sets, where=where)
-
-    def _delete(self, stmt: str) -> None:
-        m = re.match(
-            rf"DELETE\s+FROM\s+({_IDENT})(?:\s+WHERE\s+(.*))?$", stmt, re.I | re.S
-        )
-        if not m:
-            raise UnsupportedSQLError(stmt)
-        ident = self._resolve(m.group(1))
-        self.catalog.load_table(ident).delete(where=(m.group(2) or "true").strip())
-
-    # -------------------------------------------------------------- MERGE
+    def _update_or_delete(self, stmt: str) -> None:
+        """UPDATE and DELETE: one ``(condition, action)`` clause over the
+        target, which every qualifier naming it calls ``t``."""
+        plan = self._parse(stmt)
+        ident, names, _ = self._relation(plan.table())
+        qualifiers = dict.fromkeys(names, "t")
+        table = self.catalog.load_table(ident)
+        cond = plan.condition()
+        if _kind(plan) == "DeleteFromTable":
+            # without WHERE, the condition is the parser's shared TRUE
+            table.delete(where=_text(stmt, cond, qualifiers))
+            return
+        where = _text(stmt, cond.get(), qualifiers) if cond.isDefined() else "true"
+        table.update(_assignments(stmt, plan.assignments(), qualifiers), where=where)
 
     def _merge(self, stmt: str) -> None:
-        m = re.match(
-            rf"MERGE\s+INTO\s+({_IDENT})(?:\s+AS)?(?:\s+(\w+))?\s+USING\s+(.*)$",
-            stmt,
-            re.I | re.S,
-        )
-        if not m:
-            raise UnsupportedSQLError(f"unsupported MERGE shape: {stmt[:80]!r}")
-        target_id = self._resolve(m.group(1))
-        t_alias = (m.group(2) or m.group(1).split(".")[-1]).lower()
-        rest = m.group(3).strip()
-
-        if rest.startswith("("):
-            inner, rest = _take_parens(rest)  # nested-paren-safe subquery
-            source = self._run_select(inner)
-            src_name = None
-        else:
-            sm = re.match(rf"({_IDENT})(.*)$", rest, re.S)
-            if not sm:
-                raise UnsupportedSQLError(f"bad MERGE source: {rest[:60]!r}")
-            src_name = sm.group(1)
-            source = self.catalog.load_table(self._resolve(src_name)).df()
-            rest = sm.group(2)
-        am = re.match(r"\s*(?:AS\s+)?(\w+)?\s*ON\s+(.*)$", rest, re.I | re.S)
-        if not am:
-            raise UnsupportedSQLError(f"expected [alias] ON ...: {rest[:60]!r}")
-        s_alias = (am.group(1) or "").lower()
-        tail = am.group(2)
-        if not s_alias:
-            if src_name is None:
-                raise UnsupportedSQLError("MERGE subquery source needs an alias")
-            s_alias = src_name.split(".")[-1].lower()
-        w = _find_top_keyword(tail, "WHEN")
-        if w < 0:
-            raise UnsupportedSQLError("MERGE needs at least one WHEN clause")
-        on_text, whens_text = tail[:w], tail[w:]
-
-        # IceLiteTable.merge names the target t and the source s;
-        # rewrite the user's qualifiers simultaneously so swaps are safe.
-        if t_alias == s_alias:
-            # e.g. MERGE INTO ns.items USING staging.items — both default
-            # aliases are 'items'; one amap key would rewrite EVERY
-            # qualifier to one side and silently mis-match
+        stmt = self._positional_inserts(stmt)
+        plan = self._parse(stmt)
+        target_id, t_names, _ = self._relation(plan.targetTable())
+        source_id, s_names, source_plan = self._relation(plan.sourceTable())
+        if not s_names:
+            raise UnsupportedSQLError("MERGE subquery source needs an alias")
+        if t_names[0] == s_names[0]:
+            # e.g. MERGE INTO ns.items USING staging.items: both answer
+            # to 'items', so no qualifier could say which side it means
             raise UnsupportedSQLError(
                 f"ambiguous MERGE: target and source both answer to "
-                f"{t_alias!r}; give explicit aliases"
+                f"{t_names[0]!r}; give explicit aliases"
             )
-        amap = {t_alias: "t", s_alias: "s"}
-        # an unaliased target may be referenced by its FULL spelling in
-        # ON/SET — the Redshift suite's MERGE does exactly this
-        # (redshift_feature_tests.py:685-689: ON schema.tbl.id = src.id)
-        full_t = m.group(1).strip().strip("`").lower()
-        if full_t not in amap:
-            amap[full_t] = "t"
-        if src_name:
-            full_s = src_name.strip().strip("`").lower()
-            if full_s not in amap:
-                amap[full_s] = "s"
-        on = _rewrite_aliases(on_text.strip(), amap)
+        # IceLiteTable.merge names the target t and the source s. A first
+        # name (alias or last name part) wins over a full name, and the
+        # target's full name over the source's.
+        qualifiers = {
+            **dict.fromkeys(s_names[1:], "s"),
+            **dict.fromkeys(t_names[1:], "t"),
+            s_names[0]: "s",
+            t_names[0]: "t",
+        }
+        if source_id is None:
+            source = self._run_select(stmt[slice(*_span(source_plan))])
+        else:
+            source = self.catalog.load_table(source_id).df()
 
-        matched_clauses: list[tuple[str | None, tuple]] = []
-        nmbs_clauses: list[tuple[str | None, tuple]] = []
-        insert_when_not_matched = False
-        insert_condition: str | None = None
-        reshape: dict[str, str] = {}
-
-        def _set_map(text: str) -> dict[str, str]:
-            out: dict[str, str] = {}
-            for assign in _split_top(text):
-                lhs, eq, rhs = assign.partition("=")
-                if not eq:
-                    raise UnsupportedSQLError(f"bad MERGE SET: {assign!r}")
-                col = lhs.strip().strip("`").split(".")[-1]
-                out[col] = _rewrite_aliases(rhs.strip(), amap)
+        def clauses(actions) -> list[tuple[str | None, tuple]]:
+            out = []
+            for action in _seq(actions):
+                kind, cond = _kind(action), action.condition()
+                cond = _text(stmt, cond.get(), qualifiers) if cond.isDefined() else None
+                if kind == "DeleteAction":
+                    out.append((cond, ("delete",)))
+                elif kind == "InsertStarAction":
+                    out.append((cond, ("insert", "*")))
+                elif kind in _ASSIGNING_ACTIONS:
+                    sets = _assignments(stmt, action.assignments(), qualifiers)
+                    out.append((cond, (_ASSIGNING_ACTIONS[kind], sets)))
+                else:
+                    raise UnsupportedSQLError(f"unsupported MERGE action: {kind}")
             return out
-
-        def _cond(text: str | None) -> str | None:
-            return _rewrite_aliases(text.strip(), amap) if text else None
-
-        for clause in self._split_whens(whens_text):
-            cm = re.match(
-                r"MATCHED\s+(?:AND\s+(.*?)\s+)?THEN\s+UPDATE\s+SET\s+(.*)$",
-                clause,
-                re.I | re.S,
-            )
-            if cm:
-                matched_clauses.append(
-                    (_cond(cm.group(1)), ("update", _set_map(cm.group(2))))
-                )
-                continue
-            dm = re.match(
-                r"MATCHED\s+(?:AND\s+(.*?)\s+)?THEN\s+DELETE\s*$", clause, re.I | re.S
-            )
-            if dm:
-                matched_clauses.append((_cond(dm.group(1)), ("delete",)))
-                continue
-            sm2 = re.match(
-                r"NOT\s+MATCHED\s+BY\s+SOURCE\s+(?:AND\s+(.*?)\s+)?THEN\s+"
-                r"(DELETE\s*$|UPDATE\s+SET\s+(.*)$)",
-                clause,
-                re.I | re.S,
-            )
-            if sm2:
-                # NOT MATCHED BY SOURCE conditions see TARGET columns only
-                action = (
-                    ("delete",)
-                    if sm2.group(2).strip().upper().startswith("DELETE")
-                    else ("update", _set_map(sm2.group(3)))
-                )
-                nmbs_clauses.append((_cond(sm2.group(1)), action))
-                continue
-            # INSERT\b\s* (not \s+): 'INSERT(cols)' with no space before
-            # the paren must still land here — if this regex misses it,
-            # the im/bm regexes below (whose AND groups are
-            # non-capturing) would swallow a WHEN ... AND condition and
-            # run the insert unconditionally. Belt: the guard after im.
-            nm = re.match(
-                r"NOT\s+MATCHED\s+(?:BY\s+TARGET\s+)?(?:AND\s+(.*?)\s+)?THEN\s+INSERT\b\s*(.*)$",
-                clause,
-                re.I | re.S,
-            )
-            if nm and insert_when_not_matched:
-                raise UnsupportedSQLError(
-                    "multiple NOT MATCHED INSERT clauses are not supported"
-                )
-            ins_cond = _cond(nm.group(1)) if nm else None
-            if nm and re.match(r"\*\s*$", nm.group(2)):
-                insert_when_not_matched = True
-                insert_condition = ins_cond
-                continue
-            im = re.match(
-                r"NOT\s+MATCHED\s+(?:BY\s+TARGET\s+)?(?:AND\s+.*?\s+)?THEN\s+"
-                r"INSERT\s*\((.*?)\)\s*VALUES\s*\((.*)\)\s*$",
-                clause,
-                re.I | re.S,
-            )
-            if im is None:
-                # DuckDB's column-list-free form: INSERT VALUES (a, b) —
-                # positional against the target schema
-                # (duckdb_feature_tests.py:318-324)
-                bm = re.match(
-                    r"NOT\s+MATCHED\s+(?:BY\s+TARGET\s+)?(?:AND\s+.*?\s+)?THEN\s+"
-                    r"INSERT\s+VALUES\s*\((.*)\)\s*$",
-                    clause,
-                    re.I | re.S,
-                )
-                if bm:
-                    tgt_cols = [
-                        f.name
-                        for f in self.catalog.load_table(target_id)
-                        .meta.current_schema.fields
-                    ]
-                    vals = _split_top(bm.group(1))
-                    if len(vals) != len(tgt_cols):
-                        raise UnsupportedSQLError(
-                            f"MERGE INSERT VALUES supplies {len(vals)} values, "
-                            f"target has {len(tgt_cols)} columns"
-                        )
-                    im = re.match(
-                        r"NOT\s+MATCHED\s+THEN\s+INSERT\s*\((.*?)\)\s*VALUES\s*\((.*)\)\s*$",
-                        "NOT MATCHED THEN INSERT ("
-                        + ", ".join(tgt_cols)
-                        + ") VALUES ("
-                        + bm.group(1)
-                        + ")",
-                        re.I | re.S,
-                    )
-            if (
-                im
-                and ins_cond is None
-                and re.match(
-                    r"NOT\s+MATCHED\s+(?:BY\s+TARGET\s+)?AND\s+", clause, re.I
-                )
-            ):
-                # reject-loudly contract: the clause carries an AND
-                # condition that nm failed to capture — executing the
-                # insert unconditionally would silently change semantics
-                raise UnsupportedSQLError(
-                    f"WHEN NOT MATCHED clause carries a condition the "
-                    f"parser could not capture: WHEN {clause[:60]!r}"
-                )
-            if im:
-                cols = [c.strip().strip("`") for c in _split_top(im.group(1))]
-                exprs = [_rewrite_aliases(e, amap) for e in _split_top(im.group(2))]
-                # Supported mapping: simple s.col references — reshape the
-                # source so merge()'s INSERT-by-name path picks them up.
-                names = []
-                for e in exprs:
-                    em = re.match(r"s\.(\w+)$", e.strip(), re.I)
-                    if not em:
-                        raise UnsupportedSQLError(
-                            f"MERGE INSERT VALUES supports s.col refs only: {e!r}"
-                        )
-                    names.append(em.group(1))
-                source = source.select(
-                    *[F.col(n).alias(c) for n, c in zip(names, cols)]
-                )
-                reshape = dict(zip(names, cols))
-                insert_when_not_matched = True
-                insert_condition = ins_cond
-                continue
-            raise UnsupportedSQLError(f"unsupported MERGE clause: WHEN {clause[:60]!r}")
-
-        # Spark's clause-order rule: within each WHEN family, every clause
-        # but the LAST must carry an AND condition — an unconditional
-        # clause shadows everything after it, so accepting one silently
-        # would make the later clauses dead code the user asked for.
-        for fam, clauses in (
-            ("MATCHED", matched_clauses),
-            ("NOT MATCHED BY SOURCE", nmbs_clauses),
-        ):
-            for cond, _action in clauses[:-1]:
-                if cond is None:
-                    raise UnsupportedSQLError(
-                        f"only the last WHEN {fam} clause may omit its AND "
-                        "condition (an unconditional clause shadows the rest)"
-                    )
-
-        if reshape:
-            # The reshaped source carries target column names; rewrite the
-            # ON condition (and any UPDATE exprs) to the new names. A
-            # reference to a source column the INSERT list dropped cannot
-            # resolve — fail loudly rather than mis-plan.
-            def _remap(expr: str) -> str:
-                def sub(mm: re.Match) -> str:
-                    name = mm.group(1)
-                    if name not in reshape:
-                        raise UnsupportedSQLError(
-                            f"s.{name} not in MERGE INSERT column mapping"
-                        )
-                    return "s." + reshape[name]
-
-                return re.sub(r"\bs\.(\w+)", sub, expr)
-
-            on = _remap(on)
-            matched_clauses = [
-                (
-                    _remap(cond) if cond else cond,
-                    ("update", {c: _remap(e) for c, e in a[1].items()})
-                    if a[0] == "update"
-                    else a,
-                )
-                for cond, a in matched_clauses
-            ]
-            if insert_condition:
-                insert_condition = _remap(insert_condition)
 
         self.catalog.load_table(target_id).merge(
             source,
-            on=on,
-            insert_when_not_matched=insert_when_not_matched,
-            matched_clauses=matched_clauses,
-            not_matched_by_source_clauses=nmbs_clauses,
-            insert_condition=insert_condition,
+            on=_text(stmt, plan.mergeCondition(), qualifiers),
+            matched_clauses=clauses(plan.matchedActions()),
+            not_matched_clauses=clauses(plan.notMatchedActions()),
+            not_matched_by_source_clauses=clauses(plan.notMatchedBySourceActions()),
         )
+
+    def _positional_inserts(self, stmt: str) -> str:
+        """DuckDB's ``WHEN NOT MATCHED THEN INSERT VALUES (...)`` binds
+        the values to the target's columns by position
+        (duckdb_feature_tests.py:318-324). Spark's grammar needs the
+        column list, so this splices the target's columns in before the
+        parse; it takes the target from the statement head."""
+        insert = re.compile(r"\bTHEN\s+INSERT\s+(?=VALUES\b)", re.I)
+        head = re.match(rf"MERGE\s+INTO\s+({_IDENT})", stmt, re.I)
+        if head is None or not insert.search(stmt):
+            return stmt
+        fields = self.table(head.group(1)).meta.current_schema.fields
+        cols = ", ".join(_quote(f.name) for f in fields)
+        return self._sub_unquoted(stmt, insert, lambda m: f"{m.group(0)}({cols}) ")
+
+    def _parse(self, stmt: str):
+        """Spark's unresolved plan of one statement. A parse error becomes
+        UnsupportedSQLError naming the statement and Spark's error class."""
+        parser = self.spark._jsparkSession.sessionState().sqlParser()
+        try:
+            return parser.parsePlan(stmt)
+        except ParseException as e:
+            cls = e.getCondition()
+            reason = next(line for line in str(e).splitlines() if line.strip())
+            reason = reason.removeprefix(f"[{cls}] ")
+            raise UnsupportedSQLError(
+                f"Spark's SQL parser rejects {stmt[:80]!r}: {cls}: {reason}"
+            ) from None
+
+    def _relation(self, node) -> tuple[str | None, list[str], object]:
+        """(catalog identifier, names it answers to, plan) of the table or
+        aliased subquery a MERGE, UPDATE or DELETE names. The first name
+        is the alias, else the table's last name part; a table also
+        answers to its full name. A subquery has no identifier."""
+        alias = None
+        if _kind(node) == "SubqueryAlias":
+            alias, node = node.alias(), node.child()
+        if _kind(node) != "UnresolvedRelation":
+            return None, [alias.lower()] if alias else [], node
+        parts = _seq(node.multipartIdentifier())
+        written = ".".join(parts)
+        names = [(alias or parts[-1]).lower(), written.lower()]
+        return self._resolve(written), names, node
 
     # --------------------------------------------------------------- CALL
 
@@ -1760,49 +1634,47 @@ class IceLiteSQL:
         reference's maintenance surface, statement-for-statement
         (iceberg_feature_tests.py:853-860). Returns the procedure's
         summary as a one-row DataFrame, like Iceberg's CALL output."""
-        m = re.match(rf"CALL\s+({_IDENT})\s*\((.*)\)\s*$", stmt, re.I | re.S)
-        if not m:
-            raise UnsupportedSQLError(f"unsupported CALL shape: {stmt[:60]!r}")
-        parts = [p.strip("`") for p in m.group(1).strip().split(".")]
+        plan = self._parse(stmt)
+        parts = _seq(plan.procedure().nameParts())
         if parts and parts[0] == self.name:
             parts = parts[1:]
         if len(parts) != 2 or parts[0].lower() != "system":
             raise UnsupportedSQLError(
-                f"procedures live under [{self.name}.]system: {m.group(1)!r}"
+                f"procedures live under [{self.name}.]system: {'.'.join(parts)!r}"
             )
         proc = parts[1].lower()
-        args: dict[str, str] = {}
-        if m.group(2).strip():
-            items = [i.strip() for i in _split_top(m.group(2).strip())]
-            named = [re.match(r"(\w+)\s*=>\s*(.+)$", i, re.S) for i in items]
-            if all(named):
-                for am in named:
-                    key = am.group(1).lower()
-                    if key in args:
-                        # last-wins would silently honor whichever copy
-                        # came later — e.g. two table => arguments pick an
-                        # arbitrary victim for a destructive procedure
-                        raise UnsupportedSQLError(
-                            f"duplicate CALL argument: {key}"
-                        )
-                    args[key] = am.group(2).strip()
-            elif not any(named):
-                # positional form (Iceberg accepts both):
-                # CALL system.rollback_to_snapshot('db.t', 123)
-                order = _PROC_POSITIONAL.get(proc)
-                if order is None:
-                    raise UnsupportedSQLError(f"unknown procedure: system.{proc}")
-                if len(items) > len(order):
-                    raise UnsupportedSQLError(
-                        f"{proc} takes at most {len(order)} positional "
-                        f"argument(s), got {len(items)}"
-                    )
-                args = dict(zip(order, items))
-            else:
+        # each value is the argument's text, read by _call_value
+        named: dict[str, str] = {}
+        positional: list[str] = []
+        for arg in _seq(plan.args()):
+            if _kind(arg) != "NamedArgumentExpression":
+                positional.append(_text(stmt, arg))
+                continue
+            key = arg.key().lower()
+            if key in named:
+                # last-wins would silently honor whichever copy came
+                # later: two table => arguments pick an arbitrary victim
+                # for a destructive procedure
+                raise UnsupportedSQLError(f"duplicate CALL argument: {key}")
+            named[key] = _text(stmt, arg.value())
+        if named and positional:
+            raise UnsupportedSQLError(
+                "CALL arguments must be all named (name => value) or "
+                f"all positional: {stmt[:80]!r}"
+            )
+        args = named
+        if positional:
+            # Iceberg's positional form, in the procedure's signature order:
+            # CALL system.rollback_to_snapshot('db.t', 123)
+            order = _PROC_POSITIONAL.get(proc)
+            if order is None:
+                raise UnsupportedSQLError(f"unknown procedure: system.{proc}")
+            if len(positional) > len(order):
                 raise UnsupportedSQLError(
-                    "CALL arguments must be all named (name => value) or "
-                    f"all positional: {m.group(2).strip()[:60]!r}"
+                    f"{proc} takes at most {len(order)} positional "
+                    f"argument(s), got {len(positional)}"
                 )
+            args = dict(zip(order, positional))
 
         from iceberg_matrix_spark.tables import maintenance as maint  # noqa: PLC0415
 
@@ -1980,18 +1852,3 @@ class IceLiteSQL:
         if re.fullmatch(r"-?\d+\.\d+", v):
             return float(v)
         raise UnsupportedSQLError(f"unsupported CALL value: {v[:40]!r}")
-
-    def _split_whens(self, text: str) -> list[str]:
-        """Split the WHEN-clause tail into clauses at top-level WHENs."""
-        starts = []
-        pat = re.compile(r"\bWHEN\b", re.I)
-        tops = {i for i, _c, d, q in _scan_top(text) if d == 0 and not q}
-        for mm in pat.finditer(text):
-            if mm.start() in tops:
-                starts.append(mm.start())
-        if not starts or starts[0] != 0:
-            raise UnsupportedSQLError(f"expected WHEN clauses: {text[:60]!r}")
-        starts.append(len(text))
-        return [
-            text[starts[i] + 4 : starts[i + 1]].strip() for i in range(len(starts) - 1)
-        ]

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 from dataclasses import asdict, dataclass, field
@@ -100,6 +101,9 @@ class Snapshot:
     schema_id: int | None = None
 
 
+_CHAR_TYPE = re.compile(r"\b(?:var)?char\s*\(\s*\d+\s*\)", re.IGNORECASE)
+
+
 @dataclass
 class SchemaField:
     id: int
@@ -110,6 +114,12 @@ class SchemaField:
     # read; write-default fills the column when a writer omits it.
     initial_default: object = None
     write_default: object = None
+
+    def __post_init__(self):
+        # Iceberg has no char type, and no reader here reads one back:
+        # char(n) and varchar(n), nested ones too, store as string
+        if "char" in self.type.lower():
+            self.type = _CHAR_TYPE.sub("string", self.type)
 
     # PyIceberg's field attribute name (schema().find_field(c).field_type,
     # pyiceberg_feature_tests.py:373-375) — here the logical type string.

@@ -286,11 +286,13 @@ def _drop_field(name: str):
 
 def _widen_field(name: str, new_type: str):
     def build(meta, fields):
-        for f in fields:
+        for i, f in enumerate(fields):
             if f.name == name:
-                if (f.type, new_type) not in _WIDENINGS:
+                # a new SchemaField stores the type as metadata does
+                widened = replace(f, type=new_type)
+                if widened.type != f.type and (f.type, widened.type) not in _WIDENINGS:
                     raise ValueError(f"narrowing/unsupported: {f.type} → {new_type}")
-                f.type = new_type
+                fields[i] = widened
                 return fields
         raise KeyError(name)
 
@@ -1349,14 +1351,14 @@ class IceLiteTable:
         - ``("delete",)`` drops the target row;
         - ``("update", {col: expr})`` sets the named columns of the target
           row, the others keep their value;
-        - ``("insert", source_cols)`` writes a new row from the source
-          columns of the same names, NULL where the source has none.
+        - ``("insert", {col: expr})`` writes a new row with the named
+          columns set, the others NULL.
 
         A row that no clause takes keeps its target row unchanged, or
-        vanishes if it has none. SET keys and insert columns resolve
-        against the current schema case-insensitively, as in Spark; an
-        unknown SET key or a column named twice raises ValueError before
-        any Spark job runs.
+        vanishes if it has none. SET and insert columns resolve against
+        the current schema case-insensitively, as in Spark; an unknown
+        column or a column named twice raises ValueError before any Spark
+        job runs.
 
         ``merge-on-read`` writes one position-delete file covering every
         target row a clause took, plus the updated and inserted rows.
@@ -1466,25 +1468,26 @@ class IceLiteTable:
         on: str,
         matched_update: dict[str, str] | None = None,
         matched_delete: bool = False,
-        insert_when_not_matched: bool = True,
         branch: str = "main",
         matched_clauses: list[tuple[str | None, tuple]] | None = None,
+        not_matched_clauses: list[tuple[str | None, tuple]] | None = None,
         not_matched_by_source_clauses: list[tuple[str | None, tuple]] | None = None,
-        insert_condition: str | None = None,
     ) -> None:
         """MERGE INTO t USING s ON <cond> (iceberg_feature_tests.py:525-529):
         a copy-on-write row-level write over the full outer join of
         target and source, the join Spark plans (see :meth:`_row_level`).
 
         ``on`` and every clause reference the target as ``t`` and the
-        source as ``s``. ``matched_clauses`` and
-        ``not_matched_by_source_clauses`` are ordered ``(condition | None,
-        action)`` lists with action ``("update", {col: expr})`` or
-        ``("delete",)``; the legacy ``matched_update`` / ``matched_delete``
-        kwargs are the unconditional one-clause case.
-        ``insert_when_not_matched`` adds the NOT MATCHED [BY TARGET]
-        insert, guarded by ``insert_condition``. A target row matching
-        more than one source row raises ValueError, as in Iceberg."""
+        source as ``s``. Each clause family is an ordered ``(condition |
+        None, action)`` list. ``matched_clauses`` and
+        ``not_matched_by_source_clauses`` take ``("update", {col: expr})``
+        or ``("delete",)``; the legacy ``matched_update`` /
+        ``matched_delete`` kwargs are the unconditional one-clause case.
+        ``not_matched_clauses`` (NOT MATCHED [BY TARGET]) take ``("insert",
+        {col: expr})`` or ``("insert", "*")``, which inserts every source
+        column the table has by name; the default is one unconditional
+        INSERT *, and ``[]`` inserts nothing. A target row matching more
+        than one source row raises ValueError, as in Iceberg."""
         if matched_clauses is None:
             matched_clauses = []
             if matched_delete:
@@ -1492,15 +1495,21 @@ class IceLiteTable:
             elif matched_update is not None:
                 matched_clauses.append((None, ("update", matched_update)))
         nmbs_clauses = not_matched_by_source_clauses or []
+        if not_matched_clauses is None:
+            not_matched_clauses = [(None, ("insert", "*"))]
+        table_cols = {n.lower() for n in self.meta.current_schema.names()}
+        star = {c: f"s.{_quote(c)}" for c in source.columns if c.lower() in table_cols}
+        not_matched_clauses = [
+            (cond, ("insert", star) if action == ("insert", "*") else action)
+            for cond, action in not_matched_clauses
+        ]
         t_in = f"t.{META_FILE} IS NOT NULL"
         s_in = "s.__s_present IS NOT NULL"
         families = [
             (f"{t_in} AND {s_in}", matched_clauses),
             (f"{t_in} AND s.__s_present IS NULL", nmbs_clauses),
+            (f"t.{META_FILE} IS NULL AND {s_in}", not_matched_clauses),
         ]
-        if insert_when_not_matched:
-            insert = ("insert", source.columns)
-            families.append((f"t.{META_FILE} IS NULL AND {s_in}", [(insert_condition, insert)]))
         # the families are disjoint, so one ordered list keeps each one's order
         clauses = [
             (mark if cond is None else f"{mark} AND ({cond})", action)
@@ -1994,25 +2003,23 @@ def _quote(name: str) -> str:
 
 def _resolve_clauses(names: list[str], clauses) -> list[tuple]:
     """``(condition, kind, {column: SQL expr})`` per row-level clause, its
-    SET keys and insert columns resolved to the schema's ``names``
-    case-insensitively. An insert gives NULL to a column its source
-    lacks and ignores a source column the schema lacks; an unknown SET
-    key or a column named twice raises."""
+    SET and insert columns resolved to the schema's ``names``
+    case-insensitively. An insert gives NULL to the columns it does not
+    name; an unknown column or a column named twice raises."""
     by_lower = {n.lower(): n for n in names}
     out = []
     for cond, action in clauses:
         kind, exprs = action[0], {}
         if kind not in ("delete", "update", "insert"):
             raise ValueError(f"unknown row-level action {kind!r}")
-        for key in action[1] if kind != "delete" else ():
+        for key, expr in action[1].items() if kind != "delete" else ():
             name = by_lower.get(key.lower())
-            if name is None and kind == "insert":
-                continue
             if name is None:
-                raise ValueError(f"SET names unknown column {key!r}; table has {names}")
+                verb = "SET" if kind == "update" else "INSERT"
+                raise ValueError(f"{verb} names unknown column {key!r}; table has {names}")
             if name in exprs:
                 raise ValueError(f"{kind.upper()} names column {name!r} twice")
-            exprs[name] = action[1][key] if kind == "update" else f"s.{_quote(key)}"
+            exprs[name] = expr
         if kind == "insert":
             exprs = {n: exprs.get(n, "NULL") for n in names}
         out.append((cond, kind, exprs))

@@ -142,7 +142,6 @@ def test_merge_update_and_insert(spark, catalog):
         source,
         on="t.id = s.id",
         matched_update={"val": "s.val"},
-        insert_when_not_matched=True,
     )
     rows = {r.id: r.val for r in t.df().collect()}
     assert rows == {1: "merged", 2: "b", 3: "c", 4: "new"}
@@ -156,7 +155,7 @@ def test_merge_delete_clause(spark, catalog):
         _kv_df(spark, [(2, "x")]),
         on="t.id = s.id",
         matched_delete=True,
-        insert_when_not_matched=False,
+        not_matched_clauses=[],
     )
     assert sorted(r.id for r in t.df().collect()) == [1, 3]
 

@@ -428,8 +428,7 @@ def test_merge_matches_first_match_wins_model(
         on="t.k = s.k",
         matched_clauses=api(matched),
         not_matched_by_source_clauses=api(nmbs),
-        insert_when_not_matched=insert,
-        insert_condition=ins_cond and ins_cond[0],
+        not_matched_clauses=[(ins_cond and ins_cond[0], ("insert", "*"))] if insert else [],
     )
     got = [(r["k"], r["v"]) for r in t.refresh().df().collect()]
     expect = _merge_model(target, source, matched, nmbs, insert, ins_cond)

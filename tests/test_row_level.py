@@ -113,7 +113,7 @@ def test_dml_on_a_table_without_snapshots_commits_nothing(spark, catalog, mode):
     )
     t.delete("id = 1")
     t.update({"v": "1"}, "id = 1")
-    t.merge(_source(spark), on="t.id = s.id", matched_delete=True, insert_when_not_matched=False)
+    t.merge(_source(spark), on="t.id = s.id", matched_delete=True, not_matched_clauses=[])
     assert t.refresh().meta.snapshots == []
     t.merge(_source(spark), on="t.id = s.id", matched_delete=True)
     assert _rows(t) == [(2, 99), (3, 30)]

@@ -58,7 +58,7 @@ def test_merge_update_plus_delete_rejected(sql):
     sql.sql("CREATE TABLE ns.s (id BIGINT, v BIGINT) USING iceberg")
     sql.sql("INSERT INTO ns.t VALUES (1, 1)")
     sql.sql("INSERT INTO ns.s VALUES (1, 2)")
-    with pytest.raises(UnsupportedSQLError, match="may omit its AND"):
+    with pytest.raises(UnsupportedSQLError, match="NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION"):
         sql.sql(
             "MERGE INTO ns.t t USING ns.s s ON t.id = s.id "
             "WHEN MATCHED THEN UPDATE SET v = s.v "

@@ -121,3 +121,112 @@ def test_call_mixed_positional_and_named_rejected(sql):
         with pytest.raises(UnsupportedSQLError, match="all named"):
             sql.sql(f"CALL local.system.expire_snapshots({args})")
     assert [s.snapshot_id for s in sql.table("ns.t").meta.snapshots] == before
+
+
+# ------------------------------------------- shapes Spark's grammar accepts
+
+
+def test_merge_with_comments(sql, spark):
+    _table(sql, "t", TARGET)
+    _table(sql, "src", SOURCE)
+    sql.sql(
+        "MERGE INTO ns.t t USING ns.src s ON t.id = s.id\n"
+        "-- WHEN keys match, take the source's value; don't insert\n"
+        "WHEN MATCHED THEN UPDATE SET val = /* source */ s.val\n"
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    assert _rows(sql.sql("SELECT id, val FROM ns.t")) == _merge_model(
+        spark, "s.val", "s.id, s.val"
+    )
+
+
+def test_update_with_comments(sql, spark):
+    _table(sql, "t", TARGET)
+    sql.sql("UPDATE ns.t SET val = /* a note */ 'x' WHERE id = 1")
+    sql.sql("UPDATE ns.t SET val = 'y' -- don't touch id 1\nWHERE id = 2")
+    sql.sql("DELETE FROM ns.t /* the last row */ WHERE id = 3")
+    want = _rows(
+        spark.sql(
+            f"SELECT id, CASE id WHEN 1 THEN 'x' WHEN 2 THEN 'y' END "
+            f"FROM {_view(spark, TARGET)} WHERE id <> 3"
+        )
+    )
+    assert _rows(sql.sql("SELECT id, val FROM ns.t")) == want
+
+
+def test_merge_insert_values_expression(sql, spark):
+    _table(sql, "t", TARGET)
+    _table(sql, "src", SOURCE)
+    sql.sql(
+        "MERGE INTO ns.t t USING ns.src s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET val = concat(t.val, s.val) "
+        "WHEN NOT MATCHED THEN INSERT (id, val) VALUES (s.id * 10, upper(s.val))"
+    )
+    assert _rows(sql.sql("SELECT id, val FROM ns.t")) == _merge_model(
+        spark, "concat(t.val, s.val)", "s.id * 10, upper(s.val)"
+    )
+
+
+def test_merge_two_not_matched_clauses(sql, spark):
+    """Clauses of one family apply first-match-wins, in order."""
+    _table(sql, "t", TARGET)
+    _table(sql, "src", SOURCE)
+    sql.sql(
+        "MERGE INTO ns.t t USING ns.src s ON t.id = s.id "
+        "WHEN NOT MATCHED AND s.id > 5 THEN INSERT (id, val) VALUES (s.id, 'big') "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    assert _rows(sql.sql("SELECT id, val FROM ns.t")) == _merge_model(
+        spark, "t.val", "s.id, CASE WHEN s.id > 5 THEN 'big' ELSE s.val END"
+    )
+
+
+def test_parse_error_names_statement_and_error_class(sql):
+    _table(sql, "t", TARGET)
+    with pytest.raises(UnsupportedSQLError) as err:
+        sql.sql("UPDATE ns.t SETT val = 'x'")
+    assert "UPDATE ns.t SETT" in str(err.value)
+    assert "PARSE_SYNTAX_ERROR" in str(err.value)
+    assert _rows(sql.sql("SELECT id, val FROM ns.t")) == TARGET
+
+
+def test_predicate_and_boolean_literal_texts(sql, spark):
+    """A predicate's own span starts at its keyword (``IS NULL``), the
+    parser's shared TRUE/FALSE literals carry the span of whatever
+    statement built them first, and EXISTS carries its enclosing
+    expression's: the text each clause runs must still be the whole
+    expression the user wrote."""
+    rows = [(1, None), (2, False), (3, True), (4, None)]
+    sql.sql("CREATE TABLE ns.b (id BIGINT, flag BOOLEAN) USING iceberg")
+    sql.sql("INSERT INTO ns.b VALUES (1, NULL), (2, false), (3, true), (4, NULL)")
+    sql.sql("UPDATE ns.b SET flag = true WHERE flag IS NULL AND id BETWEEN 1 AND 3")
+    sql.sql("DELETE FROM ns.b WHERE id IN (2) AND NOT flag")
+    sql.sql("UPDATE ns.b SET flag = false WHERE true AND id = 3")
+    sql.sql("DELETE FROM ns.b WHERE id = 4 AND EXISTS (SELECT 1)")
+    view = f"b_{uuid.uuid4().hex[:8]}"
+    local_df(spark, rows, "id bigint, flag boolean").createOrReplaceTempView(view)
+    want = _rows(
+        spark.sql(
+            "SELECT id, CASE WHEN true AND id = 3 THEN false ELSE flag END FROM ("
+            "  SELECT id, CASE WHEN flag IS NULL AND id BETWEEN 1 AND 3 THEN true"
+            f"  ELSE flag END AS flag FROM {view}"
+            ") WHERE NOT coalesce(id IN (2) AND NOT flag, false)"
+            "  AND NOT (id = 4 AND EXISTS (SELECT 1))"
+        )
+    )
+    assert _rows(sql.sql("SELECT id, flag FROM ns.b")) == want
+
+
+def test_merge_clause_families_out_of_spark_order_rejected(sql):
+    """Spark's grammar takes MATCHED, then NOT MATCHED, then NOT MATCHED
+    BY SOURCE clauses; another order is a typed rejection with no effect."""
+    _table(sql, "t", TARGET)
+    _table(sql, "src", SOURCE)
+    with pytest.raises(UnsupportedSQLError, match="PARSE_SYNTAX_ERROR"):
+        sql.sql(
+            "MERGE INTO ns.t t USING ns.src s ON t.id = s.id "
+            "WHEN NOT MATCHED BY SOURCE THEN DELETE "
+            "WHEN NOT MATCHED THEN INSERT *"
+        )
+    assert _rows(sql.sql("SELECT id, val FROM ns.t")) == TARGET
+    assert len(sql.table("ns.t").meta.snapshots) == 1

@@ -1123,6 +1123,12 @@ def test_merge_conditional_clause_grammar_differential(fz, spark, tgt, src, data
         "up_only": [f"WHEN MATCHED AND {c_sql} THEN {upd}"],
         "del_only": [f"WHEN MATCHED AND {c_sql} THEN DELETE"],
     }[mshape]
+    # Spark's grammar orders the families: MATCHED, NOT MATCHED, NOT
+    # MATCHED BY SOURCE
+    if ishape == "star":
+        clauses.append("WHEN NOT MATCHED THEN INSERT *")
+    elif ishape == "cond_star":
+        clauses.append(f"WHEN NOT MATCHED AND {sa}.num > 2 THEN INSERT *")
     if nshape == "del":
         clauses.append("WHEN NOT MATCHED BY SOURCE THEN DELETE")
     elif nshape == "cond_del":
@@ -1131,10 +1137,6 @@ def test_merge_conditional_clause_grammar_differential(fz, spark, tgt, src, data
         clauses.append(
             f"WHEN NOT MATCHED BY SOURCE THEN UPDATE SET {ta}.num = {ta}.num + 1000"
         )
-    if ishape == "star":
-        clauses.append("WHEN NOT MATCHED THEN INSERT *")
-    elif ishape == "cond_star":
-        clauses.append(f"WHEN NOT MATCHED AND {sa}.num > 2 THEN INSERT *")
     fz.sql(
         f"MERGE INTO local.{ti} {ta} USING local.{si} {sa} "
         f"ON {ta}.id = {sa}.id " + " ".join(clauses)
