@@ -136,6 +136,7 @@ def _text(stmt: str, node, qualifiers: dict[str, str] | None = None) -> str:
     one shared FALSE literal, whose origin belongs to whatever statement
     first built them (a bare one renders as ``true``/``false``), and
     EXISTS, which carries its enclosing expression's span."""
+    qualifiers = qualifiers or {}
     start, end, renames, stack = len(stmt), 0, [], [node]
     while stack:
         n = stack.pop()
@@ -149,7 +150,7 @@ def _text(stmt: str, node, qualifiers: dict[str, str] | None = None) -> str:
             continue
         parts = _seq(n.nameParts())
         for k in range(len(parts) - 1, 0, -1):
-            alias = (qualifiers or {}).get(".".join(parts[:k]).lower())
+            alias = qualifiers.get(".".join(parts[:k]).lower())
             if alias:
                 renames.append((a, a + _part_starts(stmt[a:b])[k], alias))
                 break
@@ -1643,6 +1644,9 @@ class IceLiteSQL:
                 f"procedures live under [{self.name}.]system: {'.'.join(parts)!r}"
             )
         proc = parts[1].lower()
+        allowed = _PROC_ARGS.get(proc)
+        if allowed is None:
+            raise UnsupportedSQLError(f"unknown procedure: system.{proc}")
         # each value is the argument's text, read by _call_value
         named: dict[str, str] = {}
         positional: list[str] = []
@@ -1666,9 +1670,7 @@ class IceLiteSQL:
         if positional:
             # Iceberg's positional form, in the procedure's signature order:
             # CALL system.rollback_to_snapshot('db.t', 123)
-            order = _PROC_POSITIONAL.get(proc)
-            if order is None:
-                raise UnsupportedSQLError(f"unknown procedure: system.{proc}")
+            order = _PROC_POSITIONAL[proc]
             if len(positional) > len(order):
                 raise UnsupportedSQLError(
                     f"{proc} takes at most {len(order)} positional "
@@ -1681,9 +1683,6 @@ class IceLiteSQL:
         # Validate the argument set BEFORE executing anything: a typo'd or
         # unknown argument must fail loudly up front (Iceberg rejects unknown
         # named args at parse time), never after a destructive procedure ran.
-        allowed = _PROC_ARGS.get(proc)
-        if allowed is None:
-            raise UnsupportedSQLError(f"unknown procedure: system.{proc}")
         extra = set(args) - allowed
         if extra:
             raise UnsupportedSQLError(
