@@ -126,44 +126,69 @@ def _span(node) -> tuple[int, int]:
 def _text(stmt: str, node, qualifiers: dict[str, str] | None = None) -> str:
     """The text of expression ``node`` in ``stmt``, with each column
     qualifier that ``qualifiers`` maps (lower case) renamed: ``tgt.id``
-    becomes ``t.id`` under ``{"tgt": "t"}``. Only attribute spans change,
-    so text inside literals is never touched.
+    becomes ``t.id`` under ``{"tgt": "t"}``, in subqueries too. Only
+    attribute spans change, so text inside literals is never touched.
 
     The text runs from the first to the last offset of the node and its
     descendants: a predicate's own span starts at its keyword (``IS NULL``
-    leaves out its operand). Two kinds of node carry a span that is not
-    their text, so theirs are skipped: the parser's one shared TRUE and
-    one shared FALSE literal, whose origin belongs to whatever statement
-    first built them (a bare one renders as ``true``/``false``), and
-    EXISTS, which carries its enclosing expression's span."""
+    leaves out its operand, its first child). The parser's one shared TRUE
+    and one shared FALSE literal are skipped: their origin belongs to
+    whatever statement first built them (a bare one renders as
+    ``true``/``false``). EXISTS carries the span of the expression around
+    it, which for a bare EXISTS is the whole statement, so a bare one is
+    rebuilt around its query's span.
+
+    The parser shares nodes (a simple CASE compares its operand once per
+    WHEN), so a name may be reached twice. The walk enters only the first
+    child of an expression whose text cannot hold a renamed qualifier, so
+    a long IN list costs a few JVM calls, not a few per item."""
     qualifiers = qualifiers or {}
-    start, end, renames, stack = len(stmt), 0, [], [node]
+    # a renamed name's text holds its qualifier's last part, then a dot
+    # (a comment may sit between them)
+    tails = [re.escape(k.rsplit(".", 1)[-1].replace("`", "``")) for k in qualifiers]
+    named = re.compile("|".join([rf"{t}`?\s*\." for t in tails] + [r"/\*", "--"]), re.I)
+    exists = _kind(node) == "Exists"
+    start, end, renames = len(stmt), 0, set()
+    stack = [(node.plan(), True)] if exists else [(node, False)]
     while stack:
-        n = stack.pop()
+        n, is_plan = stack.pop()
         kind = _kind(n)
-        if kind == "Exists" or (kind == "Literal" and n.sql() in ("true", "false")):
+        if kind == "Literal" and n.sql() in ("true", "false"):
             continue
         a, b = _span(n)
         start, end = min(start, a), max(end, b)
-        if kind != "UnresolvedAttribute":
-            stack.extend(_seq(n.children()))
-            continue
-        parts = _seq(n.nameParts())
-        for k in range(len(parts) - 1, 0, -1):
-            alias = qualifiers.get(".".join(parts[:k]).lower())
-            if alias:
-                renames.append((a, a + _part_starts(stmt[a:b])[k], alias))
-                break
+        if kind == "UnresolvedAttribute":
+            parts = _seq(n.nameParts())
+            for k in range(len(parts) - 1, 0, -1):
+                alias = qualifiers.get(".".join(parts[:k]).lower())
+                if alias:
+                    renames.add((a, a + _part_starts(stmt[a:b])[k], alias))
+                    break
+        elif is_plan:
+            # a query's clauses carry their own spans (a Sort's is its
+            # ORDER BY), so every node of the plan is entered
+            stack += [(e, False) for e in _seq(n.expressions())]
+            stack += [(p, True) for p in _seq(n.children())]
+            if kind == "UnresolvedWith":
+                stack += [(cte._2(), True) for cte in _seq(n.cteRelations())]
+        elif named.search(stmt, a, b):
+            stack += [(c, False) for c in _seq(n.children())]
+            if kind in _SUBQUERIES:
+                stack.append((n.plan(), True))
+        elif n.children().nonEmpty():
+            stack.append((n.children().head(), False))
     if start >= end:
-        if _kind(node) == "Exists":
-            raise UnsupportedSQLError(f"a bare EXISTS has no text of its own: {stmt[:80]!r}")
         return node.sql()
     out, last = [], start
     for a, b, alias in sorted(renames):
         out += [stmt[last:a], alias, "."]
         last = b
     out.append(stmt[last:end])
-    return "".join(out)
+    return f"EXISTS ({''.join(out)})" if exists else "".join(out)
+
+
+# expressions that hold a query plan, which is not among their children
+_SUBQUERIES = {"Exists", "ListQuery", "ScalarSubquery", "LateralSubquery"}
 
 
 def _part_starts(name: str) -> list[int]:
@@ -1697,12 +1722,9 @@ class IceLiteSQL:
         def _req(name: str) -> str:
             # a missing required argument is a user error → typed rejection,
             # not a raw KeyError escaping the facade
-            try:
-                return args.pop(name)
-            except KeyError:
-                raise UnsupportedSQLError(
-                    f"CALL {proc} needs {name} => ..."
-                ) from None
+            if name not in args:
+                raise UnsupportedSQLError(f"CALL {proc} needs {name} => ...")
+            return args.pop(name)
 
         if proc == "rewrite_data_files":
             strategy = str(self._call_value(args.pop("strategy", "'binpack'"))).lower()
@@ -1748,20 +1770,16 @@ class IceLiteSQL:
             result = maint.compute_table_statistics(
                 t, columns=self._call_value(cols) if cols else None
             )
-        elif proc == "rollback_to_snapshot":
+        elif proc in ("rollback_to_snapshot", "set_current_snapshot"):
+            # each is the IceLiteTable method of the same name
             prev = t.meta.current_snapshot_id
             sid = self._call_int(_req("snapshot_id"), "snapshot_id")
-            t.rollback_to_snapshot(sid)
+            getattr(t, proc)(sid)
             result = {"previous_snapshot_id": prev, "current_snapshot_id": sid}
         elif proc == "rollback_to_timestamp":
             prev = t.meta.current_snapshot_id
             ts = self._call_int(_req("timestamp"), "timestamp")
             sid = t.rollback_to_timestamp(ts)
-            result = {"previous_snapshot_id": prev, "current_snapshot_id": sid}
-        elif proc == "set_current_snapshot":
-            prev = t.meta.current_snapshot_id
-            sid = self._call_int(_req("snapshot_id"), "snapshot_id")
-            t.set_current_snapshot(sid)
             result = {"previous_snapshot_id": prev, "current_snapshot_id": sid}
         elif proc == "cherrypick_snapshot":
             src = self._call_int(_req("snapshot_id"), "snapshot_id")

@@ -230,3 +230,81 @@ def test_merge_clause_families_out_of_spark_order_rejected(sql):
         )
     assert _rows(sql.sql("SELECT id, val FROM ns.t")) == TARGET
     assert len(sql.table("ns.t").meta.snapshots) == 1
+
+
+# ------------------------------------- qualified names the parser shares
+
+
+def test_merge_qualified_simple_case(sql, spark):
+    """A simple CASE compares its operand once per WHEN, and Spark's
+    parser shares that one operand node between the comparisons: a
+    qualified operand is still renamed once."""
+    _table(sql, "t", TARGET)
+    _table(sql, "src", SOURCE)
+    sql.sql(
+        "MERGE INTO ns.t tgt USING ns.src s ON tgt.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET "
+        "val = CASE s.id WHEN 2 THEN s.val WHEN 4 THEN 'q' ELSE tgt.val END "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    assert _rows(sql.sql("SELECT id, val FROM ns.t")) == _merge_model(
+        spark, "CASE s.id WHEN 2 THEN s.val WHEN 4 THEN 'q' ELSE t.val END", "s.id, s.val"
+    )
+
+
+def test_update_delete_qualified_shared_and_predicate_operands(sql, spark):
+    """Qualified names under a simple CASE, a LIKE ANY with a column
+    pattern (both share their operand) and predicates whose own span
+    leaves out their operand (NOT IN, IS NOT NULL)."""
+    _table(sql, "t", TARGET)
+    sql.sql(
+        "UPDATE ns.t AS u "
+        "SET val = CASE u.id WHEN 1 THEN 'p' WHEN 3 THEN upper(u.val) ELSE u.val END "
+        "WHERE CASE u.val WHEN 'a' THEN true WHEN 'c' THEN true END"
+    )
+    sql.sql(
+        "DELETE FROM ns.t WHERE t.val LIKE ANY ('p', t.val || 'z') "
+        "AND ns.t.id NOT IN (2, 3) AND t.val IS NOT NULL"
+    )
+    want = _rows(
+        spark.sql(
+            "SELECT * FROM (SELECT id, CASE WHEN CASE val WHEN 'a' THEN true "
+            "WHEN 'c' THEN true END THEN CASE id WHEN 1 THEN 'p' WHEN 3 THEN "
+            f"upper(val) ELSE val END ELSE val END AS val FROM {_view(spark, TARGET)}) "
+            "WHERE NOT coalesce(val LIKE ANY ('p', val || 'z') AND id NOT IN (2, 3) "
+            "AND val IS NOT NULL, false)"
+        )
+    )
+    assert _rows(sql.sql("SELECT id, val FROM ns.t")) == want
+
+
+def test_exists_and_correlated_subquery_conditions(sql, spark):
+    """A bare EXISTS carries the whole statement's span, so its text is
+    rebuilt around its query; a qualifier inside a subquery is renamed
+    like one outside it."""
+    _table(sql, "t", TARGET)
+    _table(sql, "src", SOURCE)
+    keys = _view(spark, [(2, "k"), (3, "k")])
+    sql.sql(
+        f"UPDATE ns.t AS u SET val = 'hit' "
+        f"WHERE EXISTS (SELECT 1 FROM {keys} k WHERE k.id = u.id)"
+    )
+    sql.sql(f"DELETE FROM ns.t WHERE EXISTS (SELECT 1 FROM {keys} WHERE id > 5)")
+    sql.sql(
+        f"DELETE FROM ns.t WHERE t.id IN (SELECT id FROM {keys} k WHERE k.id > t.id - 1) "
+        f"AND NOT EXISTS (SELECT 1 FROM {keys} k WHERE k.id = ns.t.id + 1)"
+    )
+    sql.sql(
+        "MERGE INTO ns.t tgt USING ns.src s ON tgt.id = s.id "
+        f"WHEN MATCHED AND EXISTS (SELECT 1 FROM {keys} k WHERE k.id = tgt.id) THEN DELETE "
+        "WHEN NOT MATCHED AND EXISTS (SELECT 1) THEN INSERT *"
+    )
+    tv, sv = _view(spark, TARGET), _view(spark, SOURCE)
+    want = _rows(
+        spark.sql(
+            f"SELECT id, CASE WHEN id IN (2, 3) THEN 'hit' ELSE val END FROM {tv} "
+            "WHERE id <> 3 AND id <> 2 "
+            f"UNION ALL SELECT id, val FROM {sv} WHERE id NOT IN (SELECT id FROM {tv})"
+        )
+    )
+    assert _rows(sql.sql("SELECT id, val FROM ns.t")) == want
